@@ -162,7 +162,7 @@ object Bench {
     * profiles and the reps burn real CPU without converging, so neither
     * median-of-3 nor the chunk protocol can save them (diagnosed r12:
     * q_curation_neardup_idx graded 6.4 s vs 2.57 s quiet with honest
-    * reps). A chunk of ONE with the TimeQuery protocol (untimed self
+    * reps). A chunk of ONE with the Profile `time` protocol (untimed self
     * warm-up, then warm reps) is the quiet-median measurement itself,
     * so these entries are comparable to QUIET_MEDIANS.json by
     * construction. Cost: ~10 extra child JVMs per full run (16 before
@@ -274,13 +274,33 @@ object Bench {
     * work" without a second measurement session. -1 when the platform
     * bean is unavailable.
     */
-  private def processCpuSec(): Double =
+  private[graft] def processCpuSec(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case os: com.sun.management.OperatingSystemMXBean =>
         val t = os.getProcessCpuTime
         if (t < 0) -1.0 else t / 1e9
       case _ => -1.0
     }
+
+  /** One timed rep's wall seconds, process-CPU seconds and row count. */
+  private[graft] final case class Rep(wallSec: Double, cpuSec: Double, rows: Long)
+
+  /** The one timed rep Bench grades and tools.Profile reports: run the
+    * query and `count()` it inside the timed window, then release its
+    * PersistScope pins OUTSIDE the window, so a persist-heavy query's
+    * reading never includes unpinning its working set.
+    */
+  private[graft] def timedRep(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+                              fn: (org.apache.spark.sql.SparkSession, String) =>
+                                org.apache.spark.sql.DataFrame): Rep = {
+    val c0 = processCpuSec()
+    val t0 = System.nanoTime()
+    val rows = fn(spark, sfDir).count()
+    val wall = (System.nanoTime() - t0) / 1e9
+    val cpu = if (c0 < 0) -1.0 else processCpuSec() - c0
+    PersistScope.releaseAll()
+    Rep(wall, cpu, rows)
+  }
 
   /** Time `names` into the result maps (the single timing protocol both
     * the forked children and the in-process fallback share).
@@ -306,18 +326,9 @@ object Bench {
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       try {
-        // One rep = run + count; the PersistScope release is OUTSIDE the
-        // timed window (the TimeQuery protocol, so medians here remain
-        // comparable to QUIET_MEDIANS entries for persist-heavy queries).
-        def rep(): (Double, Double) = {
-          val c0 = processCpuSec()
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).count()
-          val elapsed = (System.nanoTime() - t0) / 1e9
-          val cpu = if (c0 < 0) -1.0 else processCpuSec() - c0
-          PersistScope.releaseAll()
-          (elapsed, cpu)
-        }
+        // The same rep tools.Profile times, so medians here remain
+        // comparable to QUIET_MEDIANS entries.
+        def rep(): Rep = timedRep(spark, sfDir, fn)
         val r1 = rep()
         // maxReps == 1 is the budget-planner's degraded bulk mode (r15):
         // one warm rep per query — EXCEPT when that one rep already
@@ -330,14 +341,14 @@ object Bench {
         // to re-verify one JVM at a time.
         val oneRepFlagged = maxReps <= 1 && escalationsLeft > 0 &&
           quietOf(name).exists(q =>
-            r1._1 > InSituRatio * q && r1._1 - q > AuditFloor)
+            r1.wallSec > InSituRatio * q && r1.wallSec - q > AuditFloor)
         if (oneRepFlagged) escalationsLeft -= 1
         val rs =
-          if (r1._1 <= RepThreshold) Seq(r1)
+          if (r1.wallSec <= RepThreshold) Seq(r1)
           else if (maxReps > 1 || oneRepFlagged) Seq(r1, rep(), rep())
           else Seq(r1)
-        repsDetail(name) = rs.map(_._1)
-        cpuDetail(name) = rs.map(_._2)
+        repsDetail(name) = rs.map(_.wallSec)
+        cpuDetail(name) = rs.map(_.cpuSec)
         // A value is recorded only once ALL reps succeeded — a query
         // that fails on rep 2 reports an error, never a partial timing.
         // Escalated 1-rep entries DROP the flagged first rep (a COLD
@@ -351,8 +362,8 @@ object Bench {
         // 3-rep bulk modes keep the median (their reps are uniformly
         // warm; the median kills host-load phantoms better there).
         times(name) =
-          if (oneRepFlagged) { val w = rs.tail.map(_._1); w.sum / w.size }
-          else rs.map(_._1).sorted.apply(rs.size / 2)
+          if (oneRepFlagged) { val w = rs.tail.map(_.wallSec); w.sum / w.size }
+          else rs.map(_.wallSec).sorted.apply(rs.size / 2)
       } catch { case e: Throwable =>
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
       } finally {
@@ -392,7 +403,7 @@ object Bench {
     val spark = Sessions.local(cpus)
     runWarmups(spark, sfDir, names)
     // Self-warm-up (FreshJvmQueries / audit reruns): run each named query
-    // once UNTIMED first — the TimeQuery protocol QUIET_MEDIANS.json is
+    // once UNTIMED first — the Profile `time` protocol QUIET_MEDIANS.json is
     // built with, so the graded median is warm-rep-for-warm-rep
     // comparable to its quiet counterpart.
     if (selfWarm) names.foreach { q =>
@@ -525,7 +536,7 @@ object Bench {
   }
 
   /** Parse the flat name→seconds map out of QUIET_MEDIANS.json (our own
-    * tools/build_qm.py format — a full JSON parser would be a dependency
+    * tools/timelog.py format — a full JSON parser would be a dependency
     * for a file this repo generates). Left = why it's unusable.
     */
   private def loadQuietMedians(path: String, sfDir: String)
@@ -540,7 +551,7 @@ object Bench {
         Left(s"skipped: quiet medians cover ${quietSf.getOrElse("?")}, bench ran $sfDir")
       else {
         // Slice ONLY the medians_sec object (to its closing brace):
-        // build_qm.py may append sibling maps (cpu_medians_sec, r14)
+        // timelog.py may append sibling maps (cpu_medians_sec, r14)
         // whose same-named keys would otherwise overwrite wall medians.
         // A file WITHOUT medians_sec is a skip, not a zero-offset scan
         // (advisor finding r14: clamping -1 to 0 harvested unrelated
@@ -558,9 +569,18 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
+  /** (corpus dir, local-mode CPU count) from SPARK_GRAFT_SF_DIR and
+    * SPARK_GRAFT_CPUS, with the defaults every harness main shares
+    * (Bench and tools.Profile).
+    */
+  private[graft] def env(): (String, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    (sfDir, cpus)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, cpus) = env()
 
     // Child mode: time the given chunk and report on stdout. Parsed
     // BEFORE anything session-related so children stay cheap to spawn.
@@ -734,8 +754,9 @@ object Bench {
           "self-warmed fresh JVMs — the quiet-median protocol itself; "
          else "single JVM (SPARK_GRAFT_BENCH_FORK=0); ") +
         s"bulk pass: $bulkModeDesc; " +
-        s"1-rep bulk modes escalate to min-of-3 in situ on a >${InSituRatio}x " +
-        "quiet outlier (cold-first-rep corrective, capped per chunk); " +
+        s"1-rep bulk modes escalate in situ on a >${InSituRatio}x quiet " +
+        "outlier to two more warm reps and grade their mean, dropping the " +
+        "cold first rep (capped per chunk); " +
         "3-rep modes take median-of-3 for " +
         s"queries with first rep > ${RepThreshold}s, " +
         "single rep below; graded medians self-audited against " +

@@ -183,7 +183,7 @@ object Tables {
     * [[registerAll]] calls — two sessions, or one session over two dirs —
     * clobber each other here, so a harness reading this after its own
     * call may see another run's failure map. All in-repo harnesses
-    * (Verify/Bench/TimeQuery/ScaleDiag) are single-session and call
+    * (Verify/Bench/tools.Profile) are single-session and call
     * registerAll once before reading, which is the supported use; a
     * multi-session caller should treat this as best-effort diagnostics
     * only (temp views themselves are per-session and unaffected).

@@ -51,7 +51,7 @@ object LlmOps {
     * element_at(split(...), i) ran interpreted and re-tokenized the doc
     * per element (~300 splits/doc), and a window lead(1)/lead(2) form
     * paid a full exchange + per-doc sort before the leads (~2× this
-    * form, measured with tools/ShingleBench; byte-identical output).
+    * form, measured in a same-session A/B; byte-identical output).
     * Carrying the array widens the explode's rows transiently, which is
     * cheaper than shuffling them. Documents with <3 tokens produce no
     * shingles (and can never pair).
@@ -591,14 +591,11 @@ object LlmOps {
   }
 
   /** [[d6SimhashNeardup]]'s band table: the signature's two 16-bit halves
-    * keyed by half index, skew-capped. `private[graft]` stage builder
-    * shared with tools/ScaleDiag (advisor finding: the diagnostic used to
-    * hand-copy these expressions and could silently de-sync from the
-    * query it attributes). Plain-array generator, not
+    * keyed by half index, skew-capped. Plain-array generator, not
     * transform(sequence, lambda): interpreted lambda generators stall
     * whole-stage codegen (see minhashBandsOf).
     */
-  private[graft] def d6Bands(sig: DataFrame): DataFrame =
+  private def d6Bands(sig: DataFrame): DataFrame =
     capBandBuckets(sig.select(
       col("doc_id"),
       posexplode(array(
@@ -607,7 +604,8 @@ object LlmOps {
         .as(Seq("band", "bkey"))))
 
   /** [[d6SimhashNeardup]]'s banded candidate self-join (distinct unordered
-    * doc pairs agreeing on a whole 16-bit half) — shared with ScaleDiag.
+    * doc pairs agreeing on a whole 16-bit half) — shared with the
+    * multimodal near-dup family.
     */
   private[graft] def d6Candidates(bands: DataFrame): DataFrame =
     bands.toDF("doc_a", "band_a", "bkey_a")
@@ -981,15 +979,6 @@ object LlmOps {
 
   def connectedComponents(edges: DataFrame, maxRounds: Int): (DataFrame, Boolean) = {
     ccRuns += 1
-    // Round-level attribution (SPARK_GRAFT_DIAG, same knob as RepDiag):
-    // stderr only, so the sweep scripts' stdout protocol is untouched.
-    val diag = sys.env.contains("SPARK_GRAFT_DIAG")
-    def mark(label: String, t0: Long): Long = {
-      val t = System.nanoTime()
-      if (diag) System.err.println(f"CC $label ${(t - t0) / 1e9}%.3fs")
-      t
-    }
-    var tMark = System.nanoTime()
     // Materialize the incoming edge list ONCE (eager localCheckpoint):
     // `edges` usually sits on a deep candidate-generation tree (d2's
     // window + aggregates + joins), and every round's self-join would
@@ -1010,10 +999,6 @@ object LlmOps {
     // (persist), not its own checkpoint — its lineage is already flat
     // and constant-size to re-analyze.
     val flat = edges.localCheckpoint(true)
-    tMark = mark("edges_checkpoint", tMark)
-    if (diag && sys.env.contains("SPARK_GRAFT_CCPLAN"))
-      System.err.println("CCPLAN\n" + edges.queryExecution.executedPlan.toString
-        .linesIterator.map(_.take(200)).mkString("\n"))
     // Symmetrize once and add one self-loop per node; every edge node
     // then appears as doc_a, and the self-loop rows double as the
     // initial label table (filter doc_a = doc_b below).
@@ -1084,7 +1069,6 @@ object LlmOps {
       // so neither test can converge before the other — round counts,
       // label evolution, and output are unchanged.
       val changed = stepped.filter(col("nmin") =!= col("prev")).count()
-      tMark = mark(s"round_$rounds", tMark)
       converged = changed == 0
       val next =
         if (converged)
@@ -2579,12 +2563,11 @@ object LlmOps {
     */
   /** [[d9PrefixJoin]]'s prefix table: distinct (doc, shingle) rows ranked
     * rarest-first, cut to the prefix the lemma requires; rn and s ride
-    * along for the positional filter. `private[graft]` stage builder
-    * shared with tools/ScaleDiag (advisor finding: the diagnostic used to
-    * hand-copy these expressions and could silently de-sync from the
-    * query it attributes).
+    * along for the positional filter. This and the stage builders below
+    * are shared by d9, d9b and d9_degree_stats, so the three can never
+    * de-sync.
     */
-  private[graft] def d9Prefix(toks: DataFrame): DataFrame = {
+  private def d9Prefix(toks: DataFrame): DataFrame = {
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("s"))
     val dfs = toks.groupBy("shingle").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2598,31 +2581,31 @@ object LlmOps {
   }
 
   /** [[d9PrefixJoin]]'s raw prefix-sharing pairs (before grouping and the
-    * length/positional filters) — shared with ScaleDiag.
+    * length/positional filters).
     */
-  private[graft] def d9PairsRaw(prefix: DataFrame): DataFrame =
+  private def d9PairsRaw(prefix: DataFrame): DataFrame =
     prefix.toDF("doc_a", "shingle", "rn_a", "sa")
       .join(prefix.toDF("doc_b", "shingle", "rn_b", "sb"), Seq("shingle"))
       .filter(col("doc_a") < col("doc_b"))
 
   /** Candidate pairs deduped with the positional upper bound computed in
-    * the same aggregation — shared with ScaleDiag.
+    * the same aggregation.
     */
-  private[graft] def d9Grouped(raw: DataFrame): DataFrame =
+  private def d9Grouped(raw: DataFrame): DataFrame =
     raw.groupBy("doc_a", "doc_b", "sa", "sb")
       .agg(max(least(col("sa") - col("rn_a"), col("sb") - col("rn_b")) + 1).as("ub"))
 
   /** PPJoin length filter: J ≤ min/max, so min·den < max·num can never
-    * qualify — shared with ScaleDiag.
+    * qualify.
     */
-  private[graft] def d9LengthFilter(grouped: DataFrame): DataFrame =
+  private def d9LengthFilter(grouped: DataFrame): DataFrame =
     grouped.filter(least(col("sa"), col("sb")) * PrefixJaccardDen >=
       greatest(col("sa"), col("sb")) * PrefixJaccardNum)
 
   /** PPJoin positional filter: qualification needs
-    * overlap·(t_den+t_num) ≥ t_num·(|A|+|B|) — shared with ScaleDiag.
+    * overlap·(t_den+t_num) ≥ t_num·(|A|+|B|).
     */
-  private[graft] def d9PositionFilter(grouped: DataFrame): DataFrame =
+  private def d9PositionFilter(grouped: DataFrame): DataFrame =
     grouped.filter(col("ub") * (PrefixJaccardNum + PrefixJaccardDen) >=
       lit(PrefixJaccardNum) * (col("sa") + col("sb")))
 
@@ -2644,7 +2627,7 @@ object LlmOps {
     // same aggregation that dedups candidate pairs — no extra pass.
     // Measured sf0.1: 118,826 prefix candidates → 43,543 after length
     // → 12,784 after position (89% of the intersection work gone).
-    // At sf1 (ScaleUp ×10, r10 ScaleDiag): 13.4M raw prefix pairs →
+    // At sf1 (ScaleUp ×10, r10 stage counts): 13.4M raw prefix pairs →
     // 11.0M grouped → 4.3M after length → 1.24M after position — the
     // ~100× candidate growth is the corpus's replica-clique structure
     // (every doc gains ~10 near-dup replicas), not a plan regression.

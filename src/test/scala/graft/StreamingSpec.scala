@@ -90,5 +90,20 @@ class StreamingSpec extends SparkTestBase {
     assert(Streaming.derivedStreamPartitions(spark, 6 * target + 1)
       === math.min(7, cap))
     assert(Streaming.derivedStreamPartitions(spark, 100000L * target) === cap)
+    // Input bytes come from the path's Hadoop FileSystem: a file: URI
+    // reads the same recursive size as the bare local path, and a
+    // missing path reads 0.
+    val dir = tempDir("stream_bytes")
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.bin"), new Array[Byte](1000))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "sub"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "sub", "b.bin"), new Array[Byte](234))
+    assert(Streaming.pathBytes(spark, dir) === 1234L)
+    assert(Streaming.pathBytes(spark, s"file:$dir") === 1234L)
+    assert(Streaming.pathBytes(spark, new java.io.File(dir).toURI.toString) === 1234L)
+    assert(Streaming.pathBytes(spark, s"file:$dir/a.bin") === 1000L)
+    assert(Streaming.pathBytes(spark, s"file:$dir/missing") === 0L)
+    val events = s"$Sf/events.parquet"
+    assert(Streaming.pathBytes(spark, s"file:$events") > 0L)
+    assert(Streaming.pathBytes(spark, s"file:$events") === Streaming.pathBytes(spark, events))
   }
 }

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Chunked quiet sweep: TimeQuery warm medians over a query set, a FRESH
+# Chunked quiet sweep: Profile `time` warm medians over a query set, a FRESH
 # JVM per chunk (VERDICT r9 item 8 — a single-JVM 170-query sweep ages:
 # dead blocks from earlier queries surface as multi-second mixed GCs in
 # later timed windows; per-query clearCache+GC shrank but did not kill
@@ -7,9 +7,10 @@
 # CHUNK queries).
 #
 # Usage: tools/sweep_quiet.sh <sfDir> <outLog> [chunkSize] [namesCsv]
-#   namesCsv empty/absent = full catalog (TimeQuery --list).
-#   env: SPARK_GRAFT_REPS (default 3), SPARK_GRAFT_CPUS (default 32)
-# Output: TIME lines appended to <outLog>; parse with tools/merge_sweep.py.
+#   namesCsv empty/absent = full catalog (Profile time --list).
+#   env: SPARK_GRAFT_REPS (default 3), SPARK_GRAFT_CPUS (default 4, as Bench)
+# Output: TIME lines appended to <outLog>, per-rep DIAG/STAGE attribution
+# to <outLog>.diag; merge with tools/timelog.py.
 set -eu
 DIR="${1:?usage: tools/sweep_quiet.sh <sfDir> <outLog> [chunkSize] [namesCsv]}"
 OUT="${2:?usage: tools/sweep_quiet.sh <sfDir> <outLog> [chunkSize] [namesCsv]}"
@@ -17,7 +18,7 @@ CHUNK="${3:-25}"
 NAMES="${4:-}"
 cd "$(dirname "$0")/.."
 if [ -z "$NAMES" ]; then
-  LIST=$(tools/run.sh graft.tools.TimeQuery --list 2>/dev/null)
+  LIST=$(tools/run.sh graft.tools.Profile time --list 2>/dev/null)
 else
   LIST=$(echo "$NAMES" | tr ',' '\n')
 fi
@@ -30,7 +31,7 @@ fi
 echo "$LIST" | xargs -n "$CHUNK" | while read -r group; do
   csv=$(echo "$group" | tr ' ' ',')
   echo "CHUNK $csv" >> "$OUT"
-  SPARK_GRAFT_SF_DIR="$DIR" SPARK_GRAFT_DIAG=1 tools/run.sh graft.tools.TimeQuery "$csv" \
+  SPARK_GRAFT_SF_DIR="$DIR" tools/run.sh graft.tools.Profile time "$csv" \
     >> "$OUT" 2>> "$OUT.diag" || echo "CHUNKFAIL $csv" >> "$OUT"
 done
 echo "SWEEPDONE $DIR" >> "$OUT"
