@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference re-scans the whole expected dict per key — O(keys²); here
   * it is a single equi-join. Both inputs are post-aggregation (one row per
-  * key), so at any scale this join broadcasts.
+  * key), so at any scale this join broadcasts: the `actual` side carries a
+  * broadcast hint. Without it the join is planned sort-merge, and AQE
+  * switches it to a broadcast only after it has shuffled `expected`, one
+  * wasted job per validation.
   */
 object Validation {
 
@@ -25,7 +28,7 @@ object Validation {
     *         when the key never showed up (missing → invalid, like `:96`).
     */
   def validateCounts(expected: DataFrame, actual: DataFrame, key: String): DataFrame =
-    expected.join(actual, Seq(key), "left")
+    expected.join(broadcast(actual), Seq(key), "left")
       .select(
         col(key),
         col("expected_count"),

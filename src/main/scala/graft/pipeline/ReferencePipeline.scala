@@ -3,8 +3,10 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.PlanBridge
 
 import graft.functions.Scalars._
+import graft.sinks.Sinks
 
 /** The reference pipeline (dags/tasks/planning_center.py:17-58 →
   * csv_operations.py:9-28), re-expressed as ONE declarative Spark plan
@@ -20,9 +22,16 @@ import graft.functions.Scalars._
   * }}}
   *
   * The reference executes this as 1 + 3 HTTP round-trips per person; here
-  * it is scans + hash joins (the dimension side broadcasts), and at any
-  * scale the only exchanges are the two window shuffles on person_id and
-  * the join shuffles Catalyst picks.
+  * it is scans + hash joins (the dimension side broadcasts). The plan's
+  * exchanges are the two window shuffles on person_id, the join shuffles
+  * Catalyst picks (none when every join broadcasts), and one final hash
+  * repartition on person_id.
+  *
+  * Like the reference, which builds `people_list` once and then counts,
+  * validates and writes it (planning_center.py:17-58, csv_operations.py,
+  * s3_operations.py), [[buildPeople]] runs the plan once and hands every
+  * consumer the same result; see its doc for what that holds and for how
+  * long.
   *
   * Determinism strengthening (documented, SURVEY.md §2.6): the reference's
   * "first" email/phone is API return order; we pin pick-first order by
@@ -47,6 +56,20 @@ object ReferencePipeline {
     * (reference uses date.today(), planning_center.py:76 — pinned for
     * reproducibility, SURVEY.md §7.4.1).
     *
+    * Eager: the call runs jobs. It executes the plan once — the scans,
+    * broadcasts, window shuffles and joins, ending in a hash repartition
+    * on person_id into [[graft.sinks.Sinks.explicitPartitions]]
+    * partitions — and returns a Dataset over that shuffle's output
+    * ([[org.apache.spark.sql.graftshim.PlanBridge.executeOnce]]). Every
+    * action on it (validation, both sinks) reads the shuffle blocks in one
+    * task per partition and re-runs nothing of the plan.
+    *
+    * Nothing is persisted: the shuffle files and broadcasts live while the
+    * returned Dataset (or a plan over it) is reachable, ContextCleaner
+    * frees them after, and a lost shuffle block is recomputed from the
+    * inputs. The inputs are therefore assumed not to change during a run;
+    * in exchange, validation and the sinks see the same rows.
+    *
     * @param lists       (list_id, list_name)
     * @param listResults (list_id, person_id)
     * @param people      (person_id, name, birthdate 'yyyy-MM-dd' nullable, grade int nullable)
@@ -64,7 +87,7 @@ object ReferencePipeline {
       listFilter: String = "Youth"): Dataset[Person] = {
     import spark.implicits._
     val asOfDate = to_date(lit(asOf))
-    lists
+    val plan = lists
       .filter(col("list_name").contains(listFilter))                   // P1
       .join(listResults, "list_id")                                    // J1
       .join(people, "person_id")                                       // J2
@@ -82,7 +105,8 @@ object ReferencePipeline {
         // try_to_date, not to_date: ANSI mode (Spark 4 default) throws on
         // malformed input; the reference maps empty/invalid to '' (:74,78).
         ageLabel(try_to_date(col("birthdate"), "yyyy-MM-dd"), asOfDate).as("age")) // F1 (:73-78)
-      .as[Person]
+      .repartition(Sinks.explicitPartitions(spark), col("person_id"))
+    PlanBridge.executeOnce(plan, "buildPeople").as[Person]
   }
 
   /** Per-list actual counts (A1 — len(people_list[name]),

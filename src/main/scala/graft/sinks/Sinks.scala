@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Output half of the reference pipeline (K1-K3):
@@ -18,13 +18,21 @@ import org.apache.spark.sql.functions._
   *  - K4 (google_sheets.py:47-60) is a documented no-op: Spark's lazy
   *    evaluation recomputes derived values by construction.
   *
-  * Scale notes: one file per list via repartition on the partition
-  * column (each key hashes to exactly one task); rows inside a file are
-  * sorted (person_list, name) — the reference's CSV row order was API
-  * return order (csv_operations.py:23), pinned here for reproducibility.
-  * At 100 TB you would drop the per-key single-file constraint (let each
-  * list produce many files) by removing the repartition — the layout
-  * contract (`person_list=<name>/` directories) is unchanged.
+  * Scale notes: one file per list via a hash repartition on the
+  * partition column (each key hashes to exactly one task); rows inside a
+  * file are sorted by the key and then every written column, a total
+  * order — the reference's CSV row order was API return order
+  * (csv_operations.py:23), pinned here for reproducibility, and a sort on
+  * (key, name) alone left equal names in shuffle-arrival order. The
+  * repartition's count is [[explicitPartitions]], so the lists are
+  * written by that many tasks. At 100 TB you would drop the per-key
+  * single-file constraint (let each list produce many files) by removing
+  * the repartition — the layout contract (`person_list=<name>/`
+  * directories) is unchanged.
+  *
+  * The parquet sink writes one part file per non-empty input partition:
+  * over [[graft.pipeline.ReferencePipeline.buildPeople]]'s result that is
+  * up to [[explicitPartitions]] files, not one.
   */
 object Sinks {
 
@@ -34,16 +42,26 @@ object Sinks {
   val PersonCsvColumns: Seq[String] =
     Seq("name", "primary_email", "primary_phone_number", "grade", "age")
 
+  /** The partition count of every by-key repartition on the reference
+    * pipeline's path (buildPeople's final shuffle and the CSV sinks'):
+    * `spark.sql.shuffle.partitions`, given explicitly. A repartition by
+    * column alone leaves the count to AQE, whose size-based coalescing
+    * folds a result this small (a few MB) back into one task.
+    */
+  def explicitPartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
   /** The shared CSV write contract (header, '' unquoted — matching
     * Python csv.writer's QUOTE_MINIMAL output for '',
     * csv_operations.py:21-23 — one file per key via the repartition,
-    * in-file (key, name) sort), encoded ONCE for both CSV sinks.
+    * in-file sort on the key then every written column), encoded ONCE for
+    * both CSV sinks.
     */
   private def writePartitionedCsv(df: DataFrame, keyCol: String, uri: String): Unit =
     df
       .select(col(keyCol) +: PersonCsvColumns.map(col): _*)
-      .repartition(col(keyCol))
-      .sortWithinPartitions(keyCol, "name")
+      .repartition(explicitPartitions(df.sparkSession), col(keyCol))
+      .sortWithinPartitions((keyCol +: PersonCsvColumns).map(col): _*)
       .write
       .partitionBy(keyCol)
       .option("header", true)

@@ -1,7 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.operators.Validation
 import graft.pipeline.ReferencePipeline
@@ -63,6 +70,67 @@ class ReferencePipelineSpec extends SparkTestBase {
     val (lists, listResults, people, emails, phones) = fixtures
     ReferencePipeline.buildPeople(spark, lists, listResults, people, emails, phones, asOf)
   }
+
+  /** The five fixture tables as parquet files, read back: the shape the
+    * pipeline runs on in production, where a re-run plan re-reads files.
+    */
+  private lazy val parquetFixtures: Seq[DataFrame] = {
+    val dir = tempDir("ref_inputs")
+    val (lists, listResults, people, emails, phones) = fixtures
+    Seq(lists, listResults, people, emails, phones).zipWithIndex.map { case (df, i) =>
+      df.write.parquet(s"$dir/t$i")
+      spark.read.parquet(s"$dir/t$i")
+    }
+  }
+
+  private def buildPeopleFromParquet() = {
+    val Seq(lists, listResults, people, emails, phones) = parquetFixtures
+    ReferencePipeline.buildPeople(spark, lists, listResults, people, emails, phones, asOf)
+  }
+
+  private def expectedCounts =
+    Seq(("Youth Group", 3L), ("Choir Youth Mid", 2L), ("Ghost List", 1L))
+      .toDF("list_name", "expected_count")
+
+  private def csvFmt =
+    Seq(("Youth Group", "youth_roster"), ("Choir Youth Mid", "choir_youth"))
+      .toDF("list_name", "csv_name")
+
+  /** Completed stages, collected by a listener. `drain` runs a marker job
+    * and waits for its end: the bus delivers events in order, so every
+    * stage that completed before the marker has been seen by then.
+    */
+  private final class StageLog extends SparkListener {
+    private val done = new ConcurrentLinkedQueue[StageInfo]()
+    @volatile private var markerJob = -1
+    @volatile private var markerStages = Set.empty[Int]
+    @volatile private var markerEnded = false
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "stage-log-marker")) {
+        markerStages = e.stageIds.toSet
+        markerJob = e.jobId
+      }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (e.jobId == markerJob) markerEnded = true
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = done.add(e.stageInfo)
+
+    def drain(): Seq[StageInfo] = {
+      markerEnded = false
+      val sc = spark.sparkContext
+      sc.setJobGroup("stage-log-marker", "stage-log-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerEnded, "listener bus did not deliver the marker job's end")
+      val out = Iterator.continually(done.poll()).takeWhile(_ != null).toList
+      out.filterNot(st => markerStages(st.stageId))
+    }
+  }
+
+  /** A stage reads an input file: it has a file-scan RDD or read input bytes. */
+  private def scans(st: StageInfo): Boolean =
+    st.rddInfos.exists(_.name.contains("FileScanRDD")) ||
+      st.taskMetrics.inputMetrics.bytesRead > 0
 
   test("pipeline produces the hand-computed Person rows") {
     val got = buildPeople().collect()
@@ -211,5 +279,78 @@ class ReferencePipelineSpec extends SparkTestBase {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(rows.keySet === Set("p1", "p2", "p6"))
     assert(rows.values.toSet === Set("youth"))
+  }
+
+  test("buildPeople runs its plan once: no stage after it returns scans an input") {
+    parquetFixtures // written and read back before the log starts
+    val log = new StageLog
+    spark.sparkContext.addSparkListener(log)
+    try {
+      log.drain()
+      val people = buildPeopleFromParquet()
+      val build = log.drain()
+      assert(build.exists(scans), "the build itself must scan the inputs (detector check)")
+
+      val verdicts = Validation.validateCounts(
+        expectedCounts, ReferencePipeline.actualCounts(people), "list_name").collect()
+      assert(verdicts.length === 3)
+      Sinks.writeCsvRenamed(ReferencePipeline.applyCsvFormat(people, csvFmt),
+        tempDir("once_csv"))
+      val parquetOut = tempDir("once_parquet")
+      Sinks.writeParquet(people.toDF(), parquetOut)
+      val consumers = log.drain()
+      assert(consumers.nonEmpty)
+      assert(consumers.filter(scans).map(_.name).isEmpty,
+        "validate and both sinks must read the built result, not the inputs")
+      assert(spark.read.parquet(parquetOut).count() === 6)
+    } finally spark.sparkContext.removeSparkListener(log)
+  }
+
+  test("every consumer's plan reads people through the one executed-RDD leaf") {
+    val people = buildPeopleFromParquet()
+    val consumers = Seq(
+      "validate" -> Validation.validateCounts(
+        expectedCounts, ReferencePipeline.actualCounts(people), "list_name"),
+      "sink_csv" -> ReferencePipeline.applyCsvFormat(people, csvFmt),
+      "sink_parquet" -> people.toDF())
+    consumers.foreach { case (name, df) =>
+      val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.count(_.isInstanceOf[LogicalRDD]) === 1, s"$name: $leaves")
+      assert(!leaves.exists(_.isInstanceOf[LogicalRelation]),
+        s"$name re-plans a file scan: $leaves")
+    }
+  }
+
+  test("CSV rows are in a total order: duplicate names write the same bytes") {
+    // Three people named alike on one list, differing only in later
+    // columns. Sorted by (list, name) alone their order was whatever
+    // the shuffle delivered; sorted by every written column it is fixed.
+    val rows = Seq(
+      ("Youth Group", "Ann Lee", "b@x", "", "", ""),
+      ("Youth Group", "Ann Lee", "a@x", "555", "", ""),
+      ("Youth Group", "Ann Lee", "a@x", "", "Grade 2", "7 years"),
+      ("Youth Group", "Bo Ng", "", "", "", ""),
+      ("Choir Youth Mid", "Ann Lee", "c@x", "", "", ""))
+    val cols = Seq("person_list", "name", "primary_email", "primary_phone_number", "grade", "age")
+    val ascending = rows.toDF(cols: _*).repartition(3)
+    val descending = rows.reverse.toDF(cols: _*).coalesce(1)
+    def written(df: DataFrame): Map[String, Seq[String]] = {
+      val out = tempDir("csv_order")
+      Sinks.writeCsvPerList(df, out)
+      Files.list(Paths.get(out)).iterator().asScala.filter(Files.isDirectory(_)).map { d =>
+        val csv = Files.list(d).iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".csv")).toSeq
+        assert(csv.size === 1)
+        d.getFileName.toString -> Files.readAllLines(csv.head).asScala.toSeq
+      }.toMap
+    }
+    val a = written(ascending)
+    assert(a === written(descending))
+    assert(a("person_list=Youth Group") === Seq(
+      "name,primary_email,primary_phone_number,grade,age",
+      "Ann Lee,a@x,,Grade 2,7 years",
+      "Ann Lee,a@x,555,,",
+      "Ann Lee,b@x,,,",
+      "Bo Ng,,,,"))
   }
 }

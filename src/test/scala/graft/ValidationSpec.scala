@@ -1,5 +1,11 @@
 package graft
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.count
+
 import graft.operators.Validation
 
 /** J5 reconciliation semantics (webscraper.py:88-96, consumed at
@@ -21,6 +27,28 @@ class ValidationSpec extends SparkTestBase {
     assert(got("youth") === ((10L, 1)))  // counts agree
     assert(got("choir") === ((4L, 0)))   // counts disagree
     assert(got("ghost") === ((0L, 0)))   // never observed → invalid, count 0
+  }
+
+  test("validateCounts broadcasts the actual side: no exchange over expected") {
+    val expected = Seq(("youth", 2L), ("choir", 5L)).toDF("list_name", "expected_count")
+    val actual = Seq(("youth", 1), ("youth", 2), ("choir", 3)).toDF("list_name", "person")
+      .groupBy("list_name").agg(count("*").as("actual_count"))
+    // The actual side of a real run is an aggregate over a join whose
+    // size estimate is far above the broadcast threshold; turning the
+    // threshold off stands in for that estimate.
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    val initial = try Validation.validateCounts(expected, actual, "list_name")
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      } finally spark.conf.set(threshold, saved)
+    val joins = initial.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size === 1, initial.treeString)
+    assert(joins.head.buildSide === BuildRight)
+    assert(joins.head.left.collect { case e: Exchange => e }.isEmpty, initial.treeString)
+    assert(initial.collect { case j: SortMergeJoinExec => j }.isEmpty)
   }
 
   test("checkConstraints counts planted violations per rule in one pass") {
