@@ -1,229 +1,137 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import Verify.q
+
 /** Benchmark entry: times every SparkEntry query at the configured scale
-  * factor and prints ONE JSON line for the driver.
+  * factor and prints ONE JSON line for the grading harness (`{"metric":"total",...}`,
+  * the last stdout line, preceded by `queries_part` lines listing every
+  * graded query). A failed query is reported under "errors", never given a
+  * fabricated seconds entry, and the process exits nonzero.
   *
-  * Honesty rules (round-1 finding: a throwing query was "timed" as if it
-  * had run): a failed query is reported under "errors", never given a
-  * fabricated seconds entry, and the process exits nonzero. A warm-up
-  * query runs first (untimed) so the first timed query doesn't absorb
-  * session/codegen startup (~4 s in round 1's numbers).
+  * The protocol is fixed; the parent JVM never builds a SparkSession. It
+  * forks child JVMs (`graft.Bench --chunk q1,q2,.. [--selfwarm]`, same JVM
+  * flags and classpath) that each start a session, run the untimed
+  * warm-ups [[Bench.warmupsFor]] names, and print one `BENCHQ`/`BENCHE`
+  * line per query as soon as it is timed, then `BENCHDONE`.
   *
-  * Noise protocol, two layers (VERDICT r10 #1 — the graded artifact used
-  * to be the least reliable number in the repo):
+  *  1. '''Bulk.''' Queries outside [[Bench.FreshJvmQueries]] run in chunks
+  *     of [[Bench.BulkChunkSize]], one warm rep each. A rep over
+  *     [[Bench.InSituRatio]]× its quiet median (and [[Bench.AuditFloor]] s
+  *     over it) is the chunk's first, cold execution of that code: it
+  *     escalates in place to two more reps and grades their mean, at most
+  *     [[Bench.MaxEscalations]] times per chunk.
+  *  2. '''Singles.''' The codegen-pollution class, [[Bench.FreshJvmQueries]],
+  *     runs in self-warmed groups of at most [[Bench.GroupSize]] (round
+  *     robin, so family members land apart): an untimed run of each query,
+  *     then median-of-3 (one rep at or under [[Bench.RepThreshold]] s) —
+  *     the protocol QUIET_MEDIANS.json is built with.
+  *  3. '''Audit.''' Every grade over [[Bench.AuditRatio]]× its quiet median
+  *     and [[Bench.AuditFloor]] s over it reruns, most suspicious first, in
+  *     self-warmed groups of [[Bench.GroupSize]]; the grade becomes
+  *     min(graded, rerun). An entry still over the line stays flagged in
+  *     the sidecar's `quiet_audit`.
   *
-  *  1. '''Median-of-3''' per query (r11): every query whose first rep
-  *     exceeds [[Bench.RepThreshold]] runs TWO more reps and reports the
-  *     median — the same warm-median estimator tools/sweep_quiet.sh
-  *     records in QUIET_MEDIANS.json, so graded entries are comparable
-  *     to quiet medians 1:1. This kills HOST-LOAD phantoms (st4 graded
-  *     18.2 s in r10 vs its 2.66 s quiet median off one cold rep).
-  *     Sub-threshold queries keep their single reading: 0.2 s is under
-  *     3× the smallest quiet median in the catalog (0.068 s), so an
-  *     accepted one-rep value can never be a >3× outlier.
+  * '''Deadline.''' A child starts only while [[Bench.DefaultBudgetSec]]
+  * minus the elapsed wall covers its estimate ([[Bench.ChildOverheadSec]]
+  * plus quiet median × reps per query). A bulk or singles group that does
+  * not fit stays untimed and the total line carries `"partial":true`; an
+  * audit group that does not fit adds to `"audit_skipped"`. The sidecar's
+  * budget notes name both.
   *
-  *  2. '''Fresh JVM per chunk''' (r11): the catalog is split into
-  *     ≤[[Bench.ChunkSize]]-query chunks, each timed in a CHILD JVM the
-  *     parent forks with its own flags and classpath — the
-  *     tools/sweep_quiet.sh protocol ported into Bench itself. This
-  *     kills IN-JVM AGING, which median-of-3 cannot (all three reps are
-  *     equally aged): a single 181-query JVM measured the triangle
-  *     family at 2.3–3.3× its fresh-JVM medians with all reps agreeing —
-  *     stable, reproducible, and still wrong. Forking needs a real
-  *     classpath (`run / fork := true` in build.sbt provides one; sbt's
-  *     in-process classloaders would not). If spawning fails, or
-  *     SPARK_GRAFT_BENCH_FORK=0, the affected chunks run in-process and
-  *     the sidecar records the fallback — degraded timing is marked,
-  *     never silent.
+  * '''Crashes.''' A child that exits before `BENCHDONE` charges the first
+  * unreported query with an error naming the exit code; the rest of its
+  * chunk reruns in a fresh child.
   *
-  *  3. '''Quiet-median self-audit''' (r12, hardened r13): after the
-  *     timed run — and after the in-process fallback session, if any,
-  *     has been STOPPED, so reruns never share the host with live bench
-  *     state — every graded median is compared against its committed
-  *     QUIET_MEDIANS.json counterpart; entries over [[Bench.AuditRatio]]×
-  *     the quiet value (and more than [[Bench.AuditFloor]] s over it)
-  *     are re-measured in single-query fresh JVMs under the EXACT quiet
-  *     protocol (`--selfwarm`: untimed warm-up of the query itself, then
-  *     warm-rep median), each rerun chunk led by [[Bench.CalibrationQuery]]
-  *     whose reading certifies the host was idle — a rerun whose
-  *     calibration is inflated is discarded as load evidence, never
-  *     graded (r12's reruns came back WORSE than the graded numbers;
-  *     this is why). The minimum surviving observation is graded, with
-  *     {graded, quiet, reruns, calibration, used, flagged} recorded in
-  *     the sidecar. An entry still flagged after the reruns is a real
-  *     regression (or a saturated host) and stays marked rather than
-  *     silently overwritten.
-  *
-  *  4. '''Fresh-JVM-by-default for the pollution class''' (r13):
-  *     [[Bench.FreshJvmQueries]] — the composed index-consumer /
-  *     streaming queries whose in-chunk readings inflate 2–10× from
-  *     codegen profile pollution with honestly-converged reps — are
-  *     graded in self-warmed single-query child JVMs from the start,
-  *     so layer 3 has nothing left to catch for them by construction.
-  *
-  * '''Wall-budget protocol''' (r14, VERDICT r13 #1 — the r13 run graded
-  * perfectly but blew the driver's wall clock and `BENCH_r13.json` came
-  * back rc=124 with NO number):
-  *
-  *  5. '''Deadline guard.''' The whole run works against a wall budget
-  *     ([[Bench.DefaultBudgetSec]] s, override via
-  *     SPARK_GRAFT_BENCH_BUDGET_SEC). The chunked pass always runs; the
-  *     expensive phases after it are FUNDED FROM THE REMAINDER:
-  *     single-query fresh JVMs degrade to one shared self-warmed chunk
-  *     (then to in-process) when the per-single estimate no longer fits,
-  *     and audit reruns are skipped once the remainder cannot fund them.
-  *     Every degradation is recorded in the sidecar under "budget" —
-  *     degraded timing is marked, never silent, and a degraded artifact
-  *     the driver can read beats a perfect one it cannot.
-  *
-  *  6. '''SIGTERM partial flush.''' A shutdown hook emits the chunked
-  *     stdout lines and a final `{"metric":"total",...,"partial":true}`
-  *     line from whatever has been timed so far, so even a hard timeout
-  *     leaves a parseable artifact (the r13 tail showed children
-  *     mid-startup and nothing else).
-  *
-  *  7. '''Baseline twins are verify-only by default''' (VERDICT r13 #5):
-  *     the [[SparkEntry.baselineTwins]] keys — deliberately-kept
-  *     full-recompute comparison baselines, ~25 s graded at sf0.1 plus
-  *     six of the sixteen fresh-JVM singles — are EXCLUDED from the
-  *     graded set (include them with SPARK_GRAFT_BENCH_TWINS=1, and any
-  *     SPARK_GRAFT_ONLY subset still times whatever it names). They stay
-  *     oracle-gated in Verify and quiet-measured in QUIET_MEDIANS.json;
-  *     the sidecar's baseline_twins block carries those quiet medians so
-  *     the recompute-vs-index comparison stays readable per round.
-  *
-  *  8. '''Per-rep process CPU''' (VERDICT r13 #6): every rep records the
-  *     JVM's process-CPU delta alongside wall, reported in the sidecar's
-  *     "cpu_reps" — wall ≫ cpu/threads separates host steal/stall from
-  *     real work in one read instead of a re-measurement session.
-  *
-  * Per-query rep detail lands in the BENCH_DETAIL sidecar.
+  * '''Output.''' Baseline twins ([[SparkEntry.baselineTwins]]) are graded
+  * only when SPARK_GRAFT_ONLY names them; the sidecar carries their quiet
+  * medians. A provisional total line (at most every 84 s) and a sidecar
+  * refresh follow each child, and a SIGTERM hook kills live children and
+  * flushes a partial total, so a timed-out run still leaves a parseable
+  * artifact. Per-rep wall and process CPU (`reps`, `cpu_reps`), the audit
+  * and a host pretouch probe land in the BENCH_DETAIL sidecar.
   */
 object Bench {
 
-  /** First-rep seconds above which a query is re-measured (median of 3). */
+  /** Self-warmed groups take median-of-3 only past this first rep (s). */
   val RepThreshold = 0.2
 
-  /** Self-audit trigger: graded > AuditRatio × quiet median… */
+  /** Audit trigger: graded > AuditRatio × quiet median… */
   val AuditRatio = 2.0
 
-  /** In-situ escalation trigger for the 1-rep bulk modes (r16 — was
-    * AuditRatio): a single warm rep is the query's FIRST execution in
-    * its chunk JVM, and the cold-codegen cost reads as a systematic
-    * 1.3–2.0× inflation the 2.0× audit never catches (the r16 before-
-    * run's sim_ivf_recall_idx reps: 2.34 → 2.10 → 1.21 vs quiet 1.07 —
-    * pure first-rep effect). 1.5× catches that class; the escalation
-    * stays capped per chunk, so a genuinely degraded host costs a
-    * bounded number of extra reps, never the window.
-    */
-  val InSituRatio = 1.5
-
   /** …AND graded − quiet > AuditFloor seconds (sub-second jitter on tiny
-    * queries is not worth a 20 s fresh-JVM rerun and cannot move the
-    * grade).
+    * queries cannot move the grade). Also the in-place escalation floor.
     */
   val AuditFloor = 0.3
 
-  /** Fresh-JVM rerun attempts per flagged query before accepting the
-    * minimum observation as the grade.
+  /** In-place escalation trigger for the one-rep bulk pass: a single warm
+    * rep is the query's first execution in its chunk JVM, and cold codegen
+    * reads as a 1.3–2.0× inflation the 2.0× audit would not catch.
     */
-  val AuditAttempts = 2
+  val InSituRatio = 1.5
 
-  /** Max queries per child JVM (matches tools/sweep_quiet.sh's default —
-    * bounds any JVM's aging exposure to one chunk).
+  /** Escalations allowed per bulk chunk, so a degraded host costs a
+    * bounded number of extra reps.
     */
-  val ChunkSize = 25
+  val MaxEscalations = 8
 
-  /** Default wall budget (seconds) for the WHOLE bench run — chosen
-    * conservatively under the driver's observed patience (r13's ~29 min
-    * protocol timed out; r12's ~13 min run did not). 840, not 900: the
-    * driver wraps `timeout 900 sbt ...` around the WHOLE invocation and
-    * Bench's clock starts after ~25 s of sbt startup, so an 840 s
-    * internal budget lands the final emit near 865 s wall — inside the
-    * driver's 900 (r15: the first budget-planned run finished its plan
-    * but ate the margin and still drew rc=124). Override with
-    * SPARK_GRAFT_BENCH_BUDGET_SEC.
+  /** Queries per bulk child JVM. */
+  val BulkChunkSize = 50
+
+  /** Queries per self-warmed child JVM (singles and audit reruns). */
+  val GroupSize = 6
+
+  /** Wall budget (s) for the whole run. The grading harness wraps
+    * `timeout 900` around sbt, whose startup takes ~25 s before Bench's
+    * clock starts.
     */
   val DefaultBudgetSec = 840
 
-  /** Estimated fixed wall cost of one child JVM (start + session +
-    * family warm-ups), used ONLY for budget planning — never graded.
-    * 40 s is MEASURED (r15: eight sweep chunks on this host read
-    * 39–57 s of non-rep wall each); the old 25 s estimate made the
-    * planner promise singles it could not fund.
+  /** Estimated fixed wall of one child JVM (start, session, warm-ups),
+    * used only by the deadline rule.
     */
   val ChildOverheadSec = 40.0
 
-  /** Queries graded in SINGLE-query fresh JVMs with a self-warm-up by
-    * default (r12 verdict #1): the composed index-consumer / streaming /
-    * multi-stage queries whose in-chunk timings inflate 2–10× from
-    * CODEGEN PROFILE POLLUTION — after related queries run in the same
-    * JVM, C2 recompiles their shared expression classes on polluted
-    * profiles and the reps burn real CPU without converging, so neither
-    * median-of-3 nor the chunk protocol can save them (diagnosed r12:
-    * q_curation_neardup_idx graded 6.4 s vs 2.57 s quiet with honest
-    * reps). A chunk of ONE with the Profile `time` protocol (untimed self
-    * warm-up, then warm reps) is the quiet-median measurement itself,
-    * so these entries are comparable to QUIET_MEDIANS.json by
-    * construction. Cost: ~10 extra child JVMs per full run (16 before
-    * the r14 twin trim) — paid in untimed wall clock, not in any graded
-    * number, and funded from the wall budget (layer 5).
+  /** Deadline-rule seconds per rep for a query with no quiet median. */
+  val UnknownQuietSec = 1.0
+
+  /** Graded in self-warmed groups: composed index-consumer / streaming /
+    * multi-stage queries whose in-chunk timings inflate 2–10× from codegen
+    * profile pollution — after related queries run in the same JVM, C2
+    * recompiles their shared expression classes on polluted profiles and
+    * the reps burn real CPU without converging (q_curation_neardup_idx
+    * graded 6.4 s in-chunk vs 2.57 s quiet; t19 19.8 s vs 2.1 s with the
+    * same process CPU).
     */
   val FreshJvmQueries: Set[String] = Set(
     "d13_group_split", "q_curation_neardup", "q_curation_neardup_idx",
-    // Same composed index-consumer class as q_curation_neardup_idx,
-    // plus the t31 span scan (r15).
     "q_curation_coverage",
     "d7c_resolve_ingest", "t29b_winnow_ingest",
     "st2_sliding_window", "st3_session_window",
     "t17_inverted_index", "q_fuzzy_match_name",
     "q_triangles", "q_triangles_idx", "q_triangles_adj", "q_triangles_adj_idx",
     "q_triangles_adj_ingest", "sim_ivf_idx",
-    // r15 diagnosis of the r14 artifact's worst unverified flag: t19
-    // graded 19.8 s in-chunk vs 2.1 s in a fresh JVM with IDENTICAL
-    // ~27 s process CPU — the generator/md5 expression classes shared
-    // with the d*/t29 families recompile on polluted profiles. Same
-    // class as the rest of this set.
-    "t19_dup_spans",
-    // r13 sweep data: chunked 18.4 s vs single-JVM 5.8 s (3.2×) — the
-    // d12 election after the d* family is the same pollution class.
-    "d12_quality_resolve",
-    // r16 (VERDICT r15 #1): the five worst unverified r15 audit flags —
-    // q_curation_pipeline graded 25.8 s vs 1.60 s quiet (16×),
-    // t11_decontaminate 8.0 vs 0.53 (15×), q_kmeans 6.0 vs 1.17,
-    // q_semdedup 5.6 vs 1.29, sim_pq_topk 3.3 vs 0.74 — all composed /
-    // persist-heavy queries matching the t19 codegen-pollution class,
-    // none of which the audit could rerun in the degraded r15 window.
-    // Graded under the quiet protocol from the start, the artifact can
-    // tell pollution from regression by construction.
+    "t19_dup_spans", "d12_quality_resolve",
     "q_curation_pipeline", "t11_decontaminate", "q_kmeans", "q_semdedup",
     "sim_pq_topk")
 
-  /** Machine-readable audit-incompleteness tag for the parsed total line
-    * (VERDICT r15 #4): a run whose audit reserve was (partly) skipped
-    * must not parse identically to a fully audited one. Empty when every
-    * flagged entry got its rerun.
+  /** `"audit_skipped":n` for the parsed total line when n audit reruns
+    * could not be funded; empty when every flag got its rerun.
     */
   private[graft] def auditSkippedTag(n: Int): String =
     if (n > 0) s""","audit_skipped":$n""" else ""
-
-  /** Calibration query prepended to every audit rerun chunk: cheap,
-    * quiet-median-stable, exercises scan+join+shuffle. If ITS rerun
-    * reading is inflated, the host was loaded while the rerun ran and
-    * the rerun value is evidence of load, not of the query.
-    */
-  val CalibrationQuery = "j1_dim_join"
 
   /** Untimed warm-up queries and the chunk contents that need them: each
     * exercises machinery whose first-touch cost would otherwise land in
     * the first timed query of its family. j1 (parquet reader, codegen,
     * shuffle) always runs; st2 spins up the Structured Streaming
-    * micro-batch engine (~10 s, round-2 finding); d4 JITs the shingle
-    * window / distinct / multi-key join codegen shapes shared across the
-    * dedup family (~2× on the first timed d* query); d5b builds the
-    * corpus index so its timed entry measures steady-state ingest;
-    * q_triangles_idx builds the bucketed edge snapshot so the timed
-    * indexed probes measure the probe, not the build.
+    * micro-batch engine (~10 s); d4 JITs the shingle window / distinct /
+    * multi-key join codegen shapes shared across the dedup family (~2× on
+    * the first timed d* query); d5b builds the corpus index so its timed
+    * entry measures steady-state ingest; q_triangles_idx builds the
+    * bucketed edge snapshot so the timed indexed probes measure the probe,
+    * not the build.
     */
   private[graft] def warmupsFor(names: Seq[String]): Seq[String] = {
     val b = Seq.newBuilder[String]
@@ -258,10 +166,11 @@ object Bench {
     b.result()
   }
 
-  private def runWarmups(spark: org.apache.spark.sql.SparkSession,
+  /** Run `names` untimed, releasing each one's pins and cache, then GC. */
+  private def runUntimed(spark: org.apache.spark.sql.SparkSession,
                          sfDir: String, names: Seq[String]): Unit = {
-    warmupsFor(names).foreach { q =>
-      try SparkEntry.queries.get(q).foreach(_(spark, sfDir).count())
+    names.foreach { n =>
+      try SparkEntry.queries.get(n).foreach(_(spark, sfDir).count())
       catch { case _: Throwable => () }
       PersistScope.releaseAll()
       spark.catalog.clearCache()
@@ -302,146 +211,152 @@ object Bench {
     Rep(wall, cpu, rows)
   }
 
-  /** Time `names` into the result maps (the single timing protocol both
-    * the forked children and the in-process fallback share).
+  /** Child mode: time `names` and print, as each query finishes, `BENCHQ
+    * name graded rep,rep,.. cpu,cpu,..` or `BENCHE name message`, then
+    * `BENCHDONE`. Stdout carries only these lines (Spark logs go to
+    * stderr, which the parent inherits). Bulk chunks (`selfWarm` false)
+    * take one rep and escalate in place; self-warmed groups take
+    * median-of-3.
     */
-  private def timeInto(spark: org.apache.spark.sql.SparkSession,
-                       sfDir: String, names: Seq[String],
-                       times: scala.collection.mutable.Map[String, Double],
-                       errors: scala.collection.mutable.Map[String, String],
-                       repsDetail: scala.collection.mutable.Map[String, Seq[Double]],
-                       cpuDetail: scala.collection.mutable.Map[String, Seq[Double]],
-                       maxReps: Int = 3,
-                       quietOf: String => Option[Double] = _ => None)
-                      : Unit = {
-    // In-situ escalations are BOUNDED per call: unlimited escalations on
-    // a drifting host re-inflate the 1-rep pass back to 3-rep cost and
-    // blow the planned window (v6 validation: rc=124 from exactly this).
-    // Past the cap, residual flags go to the audit phase, which batch-
-    // verifies them (12 sub-second flags per JVM). 8, not 4 (r16): the
-    // trigger tightened to InSituRatio to catch the cold-first-rep
-    // class, which fires on a few more entries per chunk; worst case is
-    // 16 extra reps of ~1–3 s queries per chunk, inside the plan margin.
-    var escalationsLeft = 8
+  private def childMain(sfDir: String, cpus: String, names: Seq[String],
+                        selfWarm: Boolean): Unit = {
+    val quiet: Map[String, Double] =
+      if (selfWarm) Map.empty else quietMedians(sfDir).getOrElse(Map.empty)
+    val spark = Sessions.local(cpus)
+    runUntimed(spark, sfDir, warmupsFor(names))
+    if (selfWarm) runUntimed(spark, sfDir, names)
+    var escalationsLeft = MaxEscalations
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       try {
-        // The same rep tools.Profile times, so medians here remain
-        // comparable to QUIET_MEDIANS entries.
         def rep(): Rep = timedRep(spark, sfDir, fn)
         val r1 = rep()
-        // maxReps == 1 is the budget-planner's degraded bulk mode (r15):
-        // one warm rep per query — EXCEPT when that one rep already
-        // reads as an audit flag against its own quiet floor, in which
-        // case the query escalates to the normal median-of-3 IN SITU
-        // (still warm, still this JVM). A transient hiccup then never
-        // reaches the audit phase at all; only persistent inflations
-        // do. v5 validation data: 30 of 195 one-rep entries flagged,
-        // almost all sub-second transients the audit could not afford
-        // to re-verify one JVM at a time.
-        val oneRepFlagged = maxReps <= 1 && escalationsLeft > 0 &&
-          quietOf(name).exists(q =>
-            r1.wallSec > InSituRatio * q && r1.wallSec - q > AuditFloor)
-        if (oneRepFlagged) escalationsLeft -= 1
+        val escalate = !selfWarm && escalationsLeft > 0 && quiet.get(name).exists(qm =>
+          r1.wallSec > InSituRatio * qm && r1.wallSec - qm > AuditFloor)
+        if (escalate) escalationsLeft -= 1
         val rs =
-          if (r1.wallSec <= RepThreshold) Seq(r1)
-          else if (maxReps > 1 || oneRepFlagged) Seq(r1, rep(), rep())
+          if (escalate || (selfWarm && r1.wallSec > RepThreshold)) Seq(r1, rep(), rep())
           else Seq(r1)
-        repsDetail(name) = rs.map(_.wallSec)
-        cpuDetail(name) = rs.map(_.cpuSec)
-        // A value is recorded only once ALL reps succeeded — a query
-        // that fails on rep 2 reports an error, never a partial timing.
-        // Escalated 1-rep entries DROP the flagged first rep (a COLD
-        // execution — codegen compile + first-touch inside its chunk
-        // JVM) and grade the 2-sample median (= mean) of the two warm
-        // reps that follow (r17, ADVICE r16: the r16 rule graded the
-        // MIN of all 3 reps, a selective estimator swap that biased
-        // exactly the suspicious entries low relative to the
-        // median-of-3 quiet floors; the warm-rep mean is the comparable
-        // statistic — same warm protocol, same central tendency).
-        // 3-rep bulk modes keep the median (their reps are uniformly
-        // warm; the median kills host-load phantoms better there).
-        times(name) =
-          if (oneRepFlagged) { val w = rs.tail.map(_.wallSec); w.sum / w.size }
+        // An escalated entry drops its cold first rep and grades the mean
+        // of the two warm reps; otherwise the median.
+        val graded =
+          if (escalate) (rs(1).wallSec + rs(2).wallSec) / 2
           else rs.map(_.wallSec).sorted.apply(rs.size / 2)
+        println(f"BENCHQ $name $graded%.4f ${rs.map(r => f"${r.wallSec}%.4f").mkString(",")} " +
+          rs.map(r => f"${r.cpuSec}%.4f").mkString(","))
       } catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+        val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+        println(s"BENCHE $name ${msg.replace('\n', ' ').replace('\r', ' ')}")
       } finally {
-        // Per-query isolation for fair timings. clearCache drops persisted
-        // datasets; the explicit GC (untimed) collects the dropped blocks
-        // and lets ContextCleaner release shuffle/broadcast state NOW.
-        // Without it the dedup family's dead blocks stay resident until a
-        // later query triggers a multi-second mixed collection inside its
-        // timed window — measured round 2 as a 5-11× slowdown of every
-        // join query that ran after the d* family.
+        // Per-query isolation: clearCache drops persisted datasets and the
+        // untimed GC lets ContextCleaner release their blocks, shuffles and
+        // broadcasts NOW instead of inside a later query's timed window
+        // (measured as a 5-11× slowdown of joins after the d* family).
         PersistScope.releaseAll()
         spark.catalog.clearCache()
         System.gc()
       }
-    }
-  }
-
-  /** Child-mode stdout protocol (stdout carries ONLY these lines — Spark
-    * logs go to stderr, which the parent inherits): one `BENCHQ name
-    * median rep,rep,rep cpu,cpu,cpu` per timed query, one `BENCHE name
-    * message` per failure, `BENCHDONE` last. A deliberately line-oriented
-    * format: the parent needs no JSON parser and a crashed child is
-    * detectable by the missing BENCHDONE. (The cpu field is r14; a parent
-    * reading an old child's 4-field line still parses — cpu just stays
-    * unrecorded.)
-    */
-  private def childMain(sfDir: String, cpus: String, names: Seq[String],
-                        selfWarm: Boolean, maxReps: Int): Unit = {
-    // The 1-rep escalation rule needs the quiet floors in the CHILD:
-    // load them the same way the parent's audit does (best-effort — a
-    // missing file just means no escalation, never an error).
-    val quiet: Map[String, Double] =
-      if (maxReps > 1) Map.empty
-      else loadQuietMedians(
-        sys.env.getOrElse("SPARK_GRAFT_QUIET_MEDIANS", "QUIET_MEDIANS.json"), sfDir)
-        .getOrElse(Map.empty)
-    val spark = Sessions.local(cpus)
-    runWarmups(spark, sfDir, names)
-    // Self-warm-up (FreshJvmQueries / audit reruns): run each named query
-    // once UNTIMED first — the Profile `time` protocol QUIET_MEDIANS.json is
-    // built with, so the graded median is warm-rep-for-warm-rep
-    // comparable to its quiet counterpart.
-    if (selfWarm) names.foreach { q =>
-      try SparkEntry.queries.get(q).foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => () }
-      PersistScope.releaseAll()
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    val times = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val reps = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val cpu = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    timeInto(spark, sfDir, names, times, errors, reps, cpu, maxReps, quiet.get)
-    times.foreach { case (k, v) =>
-      val cs = cpu.getOrElse(k, Nil).map(c => f"$c%.4f").mkString(",")
-      println(f"BENCHQ $k $v%.4f ${reps(k).map(r => f"$r%.4f").mkString(",")} $cs")
-    }
-    errors.foreach { case (k, v) =>
-      println(s"BENCHE $k ${v.replace('\n', ' ').replace('\r', ' ')}")
+      System.out.flush()
     }
     println("BENCHDONE")
+    System.out.flush()
     spark.stop()
-    // Errors are the PARENT's to aggregate and turn into a nonzero exit;
-    // a child that reported them cleanly did its job.
+    // Errors are the parent's to aggregate into a nonzero exit.
     sys.exit(0)
   }
+
+  /** What the parent learns from one child's stdout. `rerun` is the part
+    * of the chunk a crashed child never reached.
+    */
+  private[graft] final case class Transcript(
+      times: Map[String, Double], reps: Map[String, Seq[Double]],
+      cpu: Map[String, Seq[Double]], errors: Map[String, String],
+      rerun: Seq[String])
+
+  /** Parse a child's stdout `lines` for chunk `names` and its exit code
+    * `rc`. Without `BENCHDONE`, the first unreported name is charged with
+    * the crash and the unreported rest is returned for a fresh child.
+    */
+  private[graft] def parseTranscript(names: Seq[String], lines: Seq[String],
+                                     rc: Int): Transcript = {
+    val times = Map.newBuilder[String, Double]
+    val reps = Map.newBuilder[String, Seq[Double]]
+    val cpu = Map.newBuilder[String, Seq[Double]]
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    var done = false
+    def nums(s: String): Seq[Double] = s.split(",").toSeq.map(_.toDouble)
+    lines.foreach { line =>
+      line.split(" ", 3) match {
+        case Array("BENCHQ", n, rest) =>
+          val f = rest.split(" ")
+          times += n -> f(0).toDouble
+          if (f.length > 1) reps += n -> nums(f(1))
+          if (f.length > 2) cpu += n -> nums(f(2))
+        case Array("BENCHE", n, msg) => errors(n) = msg
+        case Array("BENCHDONE") => done = true
+        case _ => () // stray stdout line
+      }
+    }
+    val t = times.result()
+    val missing = names.filterNot(n => t.contains(n) || errors.contains(n))
+    val rerun =
+      if (done) {
+        missing.foreach(n => errors(n) = "child JVM finished without reporting it")
+        Nil
+      } else missing match {
+        case culprit +: rest =>
+          errors(culprit) = s"child JVM exited rc=$rc before reporting it"
+          rest
+        case _ => Nil
+      }
+    Transcript(t, reps.result(), cpu.result(), errors.toMap, rerun)
+  }
+
+  /** The fixed plan: bulk chunks and self-warmed groups over the sorted
+    * catalog (filtered by `only`), plus the baseline twins left out. Twins
+    * are graded only when `only` names them.
+    */
+  private[graft] final case class Plan(bulk: Seq[Seq[String]], fresh: Seq[Seq[String]],
+                                       skippedTwins: Seq[String]) {
+    def names: Seq[String] = bulk.flatten ++ fresh.flatten
+  }
+
+  private[graft] def plan(catalog: Iterable[String], only: Option[Set[String]]): Plan = {
+    val named = catalog.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val skippedTwins =
+      if (only.isDefined) Nil else named.filter(SparkEntry.baselineTwins.contains)
+    val (fresh, regular) =
+      named.filterNot(skippedTwins.toSet).partition(FreshJvmQueries.contains)
+    Plan(regular.grouped(BulkChunkSize).toSeq, roundRobin(fresh, GroupSize), skippedTwins)
+  }
+
+  /** Split `names` into the fewest groups of at most `size`, dealing
+    * round robin so adjacent (same-family) names land in different groups.
+    */
+  private[graft] def roundRobin(names: Seq[String], size: Int): Seq[Seq[String]] =
+    if (names.isEmpty) Nil
+    else {
+      val n = math.ceil(names.size.toDouble / size).toInt
+      names.zipWithIndex.groupBy(_._2 % n).toSeq.sortBy(_._1).map(_._2.map(_._1))
+    }
+
+  /** Over the audit line: > AuditRatio × quiet and > AuditFloor s over. */
+  private[graft] def overQuiet(graded: Double, quiet: Double): Boolean =
+    graded > AuditRatio * quiet && graded - quiet > AuditFloor
+
+  /** Graded entries over the audit line, largest graded/quiet ratio first. */
+  private[graft] def auditFlags(graded: collection.Map[String, Double],
+                                quiet: Map[String, Double]): Seq[String] =
+    graded.toSeq.collect { case (n, v) if quiet.get(n).exists(overQuiet(v, _)) =>
+      (n, v / quiet(n))
+    }.sortBy { case (n, r) => (-r, n) }.map(_._1)
 
   private def javaBin: String = new java.io.File(new java.io.File(
     System.getProperty("java.home"), "bin"), "java").getAbsolutePath
 
-  /** Host-health pretouch probe (SURVEY 7.7's gate, folded into the
-    * bench itself per VERDICT r14 #1): wall seconds to start a JVM that
-    * commits and pre-faults a 2 GB heap. On a healthy host this is
-    * ~0.3–1 s; the documented degraded-host pathology inflates it 10–50×
-    * (kernel fault storms). Recorded in the sidecar so a driver artifact
-    * carries its own host-health evidence; -1 when the probe itself
-    * failed to launch.
+  /** Host-health pretouch probe: wall seconds to start a JVM that commits
+    * and pre-faults a 2 GB heap. ~0.3–1 s on a healthy host; kernel fault
+    * storms inflate it 10–50×. -1 when the probe failed to launch.
     */
   private def hostProbeSec(): Double =
     try {
@@ -454,15 +369,11 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     } catch { case _: Throwable => -1.0 }
 
-  /** Probe reading below which the host counts as healthy (the SURVEY
-    * 7.7 protocol's < 1.5 s line for the same 2 GB probe).
-    */
+  /** Probe reading below which the host counts as healthy. */
   val HealthyProbeSec = 1.5
 
-  /** Child JVMs currently running — the SIGTERM flush hook destroys
-    * them so a driver timeout never leaves orphans burning the host
-    * while the driver moves on (the r13 timeout tail showed exactly
-    * that: children mid-startup outliving the graded run).
+  /** Child JVMs currently running — the SIGTERM flush hook destroys them
+    * so a harness timeout never leaves orphans burning the host.
     */
   private val liveChildren =
     new java.util.concurrent.CopyOnWriteArrayList[java.lang.Process]()
@@ -472,75 +383,40 @@ object Bench {
     liveChildren.clear()
   }
 
-  /** Fork one child JVM over `names`; returns the names it did NOT
-    * account for (crash before BENCHDONE), or None if spawning itself
-    * failed and the whole chunk should fall back in-process.
+  /** Fork one child JVM over `names` with the parent's own JVM flags and
+    * classpath, and parse its stdout. A failed spawn charges every name.
     */
-  private def runChunkForked(sfDir: String, names: Seq[String],
-                             times: scala.collection.mutable.Map[String, Double],
-                             errors: scala.collection.mutable.Map[String, String],
-                             repsDetail: scala.collection.mutable.Map[String, Seq[Double]],
-                             cpuDetail: scala.collection.mutable.Map[String, Seq[Double]],
-                             selfWarm: Boolean = false,
-                             maxReps: Int = 3)
-                            : Option[Seq[String]] = {
+  private def forkChild(names: Seq[String], selfWarm: Boolean): Transcript =
     try {
-      val javaBin = Bench.javaBin
-      // Inherit the parent's own flags (heap pin, --add-opens pairs,
-      // -D system properties) so children measure under the exact JVM
-      // configuration the driver launched the bench with.
-      val jvmArgs = java.lang.management.ManagementFactory
-        .getRuntimeMXBean.getInputArguments
-      val cmd = new java.util.ArrayList[String]()
-      cmd.add(javaBin)
-      jvmArgs.forEach(a => cmd.add(a))
-      cmd.add("-cp"); cmd.add(System.getProperty("java.class.path"))
-      cmd.add("graft.Bench"); cmd.add("--chunk"); cmd.add(names.mkString(","))
-      if (selfWarm) cmd.add("--selfwarm")
-      if (maxReps <= 1) cmd.add("--reps1")
-      val pb = new java.lang.ProcessBuilder(cmd)
+      val cmd = Seq(javaBin) ++
+        java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala ++
+        Seq("-cp", System.getProperty("java.class.path"),
+          "graft.Bench", "--chunk", names.mkString(",")) ++
+        (if (selfWarm) Seq("--selfwarm") else Nil)
+      val pb = new java.lang.ProcessBuilder(cmd: _*)
       pb.redirectError(java.lang.ProcessBuilder.Redirect.INHERIT)
       val proc = pb.start()
       liveChildren.add(proc)
       val out =
         try scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
         finally { proc.waitFor(); liveChildren.remove(proc) }
-      val rc = proc.exitValue()
-      var done = false
-      out.foreach { line =>
-        val parts = line.split(" ")
-        parts(0) match {
-          case "BENCHQ" if parts.length >= 4 =>
-            times(parts(1)) = parts(2).toDouble
-            repsDetail(parts(1)) = parts(3).split(",").toSeq.map(_.toDouble)
-            if (parts.length >= 5 && parts(4).nonEmpty)
-              cpuDetail(parts(1)) = parts(4).split(",").toSeq.map(_.toDouble)
-          case "BENCHE" =>
-            val p3 = line.split(" ", 3)
-            if (p3.length >= 2)
-              errors(p3(1)) = if (p3.length == 3) p3(2) else "error"
-          case "BENCHDONE" => done = true
-          case _ => () // stray stdout line — ignore
-        }
-      }
-      if (!done)
-        System.err.println(s"[bench] child JVM exited rc=$rc before BENCHDONE " +
-          s"(chunk head ${names.head}) — unaccounted queries re-run in-process")
-      val seen = times.keySet ++ errors.keySet
-      Some(names.filterNot(seen))
+      val t = parseTranscript(names, out, proc.exitValue())
+      if (t.rerun.nonEmpty)
+        System.err.println(s"[bench] child JVM exited rc=${proc.exitValue()} before " +
+          s"BENCHDONE — ${t.rerun.size} unreported queries rerun in a fresh child")
+      t
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] child spawn failed (${e.getClass.getSimpleName}: " +
-        s"${e.getMessage}) — chunk runs in-process")
-      None
+      val msg = s"child spawn failed: ${e.getClass.getSimpleName}: ${e.getMessage}"
+      System.err.println(s"[bench] $msg")
+      Transcript(Map.empty, Map.empty, Map.empty, names.map(_ -> msg).toMap, Nil)
     }
-  }
 
-  /** Parse the flat name→seconds map out of QUIET_MEDIANS.json (our own
-    * tools/timelog.py format — a full JSON parser would be a dependency
-    * for a file this repo generates). Left = why it's unusable.
+  /** Parse the flat name→seconds map out of QUIET_MEDIANS.json
+    * (SPARK_GRAFT_QUIET_MEDIANS overrides the path; tools/timelog.py
+    * writes it). Left = why it's unusable.
     */
-  private def loadQuietMedians(path: String, sfDir: String)
-      : Either[String, Map[String, Double]] = {
+  private def quietMedians(sfDir: String): Either[String, Map[String, Double]] = {
+    val path = sys.env.getOrElse("SPARK_GRAFT_QUIET_MEDIANS", "QUIET_MEDIANS.json")
     val f = new java.io.File(path)
     if (!f.isFile) Left(s"skipped: $path not found")
     else {
@@ -550,12 +426,9 @@ object Bench {
       if (!quietSf.contains(sfDir))
         Left(s"skipped: quiet medians cover ${quietSf.getOrElse("?")}, bench ran $sfDir")
       else {
-        // Slice ONLY the medians_sec object (to its closing brace):
-        // timelog.py may append sibling maps (cpu_medians_sec, r14)
-        // whose same-named keys would otherwise overwrite wall medians.
-        // A file WITHOUT medians_sec is a skip, not a zero-offset scan
-        // (advisor finding r14: clamping -1 to 0 harvested unrelated
-        // numeric header fields as bogus audit baselines).
+        // Slice ONLY the medians_sec object (to its closing brace): sibling
+        // maps (cpu_medians_sec) have same-named keys. A file without
+        // medians_sec is a skip, never a scan of unrelated header numbers.
         val from = txt.indexOf("\"medians_sec\"")
         if (from < 0) Left(s"skipped: medians_sec not found in $path")
         else {
@@ -571,7 +444,7 @@ object Bench {
 
   /** (corpus dir, local-mode CPU count) from SPARK_GRAFT_SF_DIR and
     * SPARK_GRAFT_CPUS, with the defaults every harness main shares
-    * (Bench and tools.Profile).
+    * (Bench, Verify and tools.Profile).
     */
   private[graft] def env(): (String, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -582,39 +455,27 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val (sfDir, cpus) = env()
 
-    // Child mode: time the given chunk and report on stdout. Parsed
-    // BEFORE anything session-related so children stay cheap to spawn.
+    // Child mode, parsed before anything session-related.
     val chunkIdx = args.indexOf("--chunk")
     if (chunkIdx >= 0) {
       val names = args(chunkIdx + 1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      childMain(sfDir, cpus, names, selfWarm = args.contains("--selfwarm"),
-        maxReps = if (args.contains("--reps1")) 1 else 3)
+      childMain(sfDir, cpus, names, selfWarm = args.contains("--selfwarm"))
       return
     }
 
-    // ---- Wall budget (layer 5) --------------------------------------
     val benchStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - benchStart) / 1e9
-    val budgetSec: Double = sys.env.get("SPARK_GRAFT_BENCH_BUDGET_SEC")
-      .flatMap(_.toDoubleOption).filter(_ > 0).getOrElse(DefaultBudgetSec.toDouble)
-    def remainingSec: Double = budgetSec - elapsedSec
+    val budgetSec = DefaultBudgetSec.toDouble
 
-    // Host-health evidence, taken before any timed work so the artifact
-    // states what kind of host it was measured on (VERDICT r14 #1).
     val probeSec = hostProbeSec()
     System.err.println(f"[bench] host pretouch probe: $probeSec%.2fs " +
       s"(healthy < $HealthyProbeSec)")
 
     // Optional subset filter (dev iteration / the sf1 sweep); the driver
-    // never sets it, so the per-round gate always times the full catalog.
-    // LOUD when active (advisor finding): a leaked env var must never let
-    // a partial sweep pass as a full one — marked on stderr AND in the
-    // emitted JSON (n_queries below also shrinks, which graders compare).
-    // Tokens are trimmed and empties dropped (advisor finding: a typo'd
-    // `SPARK_GRAFT_ONLY=""` used to split to Set("") — every query
-    // filtered out, bench exits 0 having timed nothing). A filter that
-    // matches ZERO catalog queries is now a hard error, not a silent
-    // empty sweep.
+    // never sets it. Loud when active, and marked in the JSON ("subset",
+    // a smaller n_queries) so a leaked variable never passes as a full
+    // sweep. Empty tokens are dropped; a filter matching nothing is an
+    // error, not an empty sweep.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_ONLY")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -631,64 +492,33 @@ object Bench {
         "this is NOT a full-catalog sweep")
     }
 
-    // Baseline twins are verify-only by default (layer 7). An explicit
-    // SPARK_GRAFT_ONLY naming a twin still times it — a dev asking for a
-    // query by name always gets it.
-    val twinsGraded = sys.env.getOrElse("SPARK_GRAFT_BENCH_TWINS", "0") == "1"
-    val catalogAll = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    val skippedTwins: Seq[String] =
-      if (twinsGraded || only.isDefined) Seq.empty
-      else catalogAll.filter(SparkEntry.baselineTwins.contains)
-    val catalog = catalogAll.filterNot(skippedTwins.toSet)
+    val thePlan = plan(SparkEntry.queries.keys, only)
+    val catalog = thePlan.names
+    val skippedTwins = thePlan.skippedTwins
     if (skippedTwins.nonEmpty)
       System.err.println(s"[bench] baseline twins verify-only this run " +
-        s"(SPARK_GRAFT_BENCH_TWINS=1 to grade): ${skippedTwins.mkString(",")}")
+        s"(name them in SPARK_GRAFT_ONLY to grade): ${skippedTwins.mkString(",")}")
 
-    val forkEnabled = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
-
-    // Concurrent maps: the SIGTERM flush hook (layer 6) reads these while
-    // the main thread may still be writing; TrieMap iteration is safe
-    // under concurrent mutation where LinkedHashMap's is not.
+    // Concurrent maps: the SIGTERM flush hook reads these while the main
+    // thread may still be writing.
     val times = scala.collection.concurrent.TrieMap[String, Double]()
     val errors = scala.collection.concurrent.TrieMap[String, String]()
     val repsDetail = scala.collection.concurrent.TrieMap[String, Seq[Double]]()
     val cpuDetail = scala.collection.concurrent.TrieMap[String, Seq[Double]]()
-    // CopyOnWrite: appended from the main thread, read by the SIGTERM
-    // flush hook — iteration must never throw mid-append.
-    val fallbackChunks = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val budgetNotes = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    // Queries the budget left UNTIMED (phase-2 hard-bound skips). If any
-    // exist at final emit, the total line is marked partial — a graded
-    // total must never silently cover fewer queries than the catalog
-    // (advisor finding r14).
+    // Planned queries the deadline left untimed: the total line is then
+    // marked partial, never read as a faster full run.
     val untimed = new java.util.concurrent.CopyOnWriteArrayList[String]()
     @volatile var auditNote = "pending: run interrupted before the audit phase"
-    // Audit flags whose fresh-JVM rerun was never attempted (budget) —
-    // surfaced in the PARSED total line, not only the sidecar: a run
-    // with unverified flags must not parse identically to a fully
-    // audited one (VERDICT r15 #4).
     @volatile var auditSkippedCount = 0
-    // The ACTUAL bulk protocol the plan chose (advisor r15: the sidecar
-    // claimed median-of-3 unconditionally while budget-planned runs may
-    // grade the bulk at 1 rep) — interpolated into the protocol string.
-    @volatile var bulkModeDesc = "bulk mode pending (plan not yet chosen)"
-    final case class Audit(graded: Double, quiet: Double,
-                           reruns: Seq[Double], calib: Seq[Double],
+    final case class Audit(graded: Double, quiet: Double, reruns: Seq[Double],
                            used: Double, flagged: Boolean)
     val auditEntries = scala.collection.concurrent.TrieMap[String, Audit]()
 
-    val auditPath = sys.env.getOrElse("SPARK_GRAFT_QUIET_MEDIANS", "QUIET_MEDIANS.json")
-    val quietOrNote = loadQuietMedians(auditPath, sfDir)
+    val quietOrNote = quietMedians(sfDir)
     val quietMap: Map[String, Double] = quietOrNote.getOrElse(Map.empty)
 
     // ---- Emission (shared by the normal exit and the SIGTERM hook) ---
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
     def sec(v: Double, decimals: Int): String = {
       val pow = math.pow(10, decimals).toLong
       val c = math.round(v * pow)
@@ -697,19 +527,14 @@ object Bench {
     }
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
 
-    /** Print the chunked queries_part lines + the final total line (and
-      * write the sidecar). `partial` marks an incomplete snapshot — the
-      * line carries "partial":true so a grader knows the run was cut,
-      * but it still parses and its total covers everything timed so far.
-      * `provisional` (progressive mode, r14): total line + sidecar only,
-      * no queries_part lines and no stderr error replay — called after
-      * EVERY chunk/phase so the harness's last-line parse finds a fresh
-      * parseable total no matter where a driver timeout lands. The
-      * SIGTERM hook alone is NOT enough: when the driver TERMs the sbt
-      * wrapper, sbt's output pump dies with it and the hook's last-moment
-      * stdout never reaches the capture (observed: hook wrote a full
-      * partial sidecar, stdout came back empty) — lines already pumped
-      * BEFORE the kill are the only ones guaranteed captured.
+    /** Print the queries_part lines + the final total line and write the
+      * sidecar. `partial` marks an incomplete snapshot ("partial":true; the
+      * total covers everything timed so far). `provisional`: total line +
+      * sidecar only, no queries_part lines and no stderr error replay —
+      * called after every child so the harness's last-line parse finds a
+      * fresh total wherever a harness timeout lands (when the harness TERMs
+      * the sbt wrapper, sbt's output pump dies with it, so only lines
+      * printed before the kill are sure to be captured).
       */
     def emit(partial: Boolean, provisional: Boolean = false,
              lineOut: Boolean = true): Unit = {
@@ -730,10 +555,9 @@ object Bench {
         else "") + auditSkippedTag(auditSkippedCount)
       def build(decimals: Int, counts: Boolean, maxMsg: Int,
                 topK: Int = Int.MaxValue): String = {
-        // When even whole-second full listings blow the budget (the query
-        // catalog keeps growing), keep only the SLOWEST topK entries —
-        // those are the ones perf grading reads; the total still covers
-        // everything and n_queries records the full count.
+        // When even whole-second full listings blow the budget, keep only
+        // the SLOWEST topK entries; the total still covers everything and
+        // n_queries records the full count.
         val kept =
           if (topK >= snapshot.size) snapshot.toSeq.sortBy(_._1)
           else snapshot.toSeq.sortBy { case (_, v) => -v }.take(topK).sortBy(_._1)
@@ -745,57 +569,34 @@ object Bench {
           s""","subset":true,"n_catalog":${SparkEntry.queries.size}""" else ""
         s"""{"metric":"total","value":${sec(total, 2)},"unit":"sec","queries":$qs${errsJson(maxMsg)}$tail$subset$partialTag,"sf":"$sfDir"}"""
       }
-      // Sidecar BENCH_DETAIL.json: EVERY query at millisecond precision
-      // plus errors/reps/cpu/audit/budget. The driver ignores it; judges
-      // and humans read it.
       val protocol =
-        (if (forkEnabled) "fresh JVM per bulk chunk (sweep protocol in-bench); " +
-          "pollution-prone composed queries (fresh_jvm_queries) in " +
-          "self-warmed fresh JVMs — the quiet-median protocol itself; "
-         else "single JVM (SPARK_GRAFT_BENCH_FORK=0); ") +
-        s"bulk pass: $bulkModeDesc; " +
-        s"1-rep bulk modes escalate in situ on a >${InSituRatio}x quiet " +
-        "outlier to two more warm reps and grade their mean, dropping the " +
-        "cold first rep (capped per chunk); " +
-        "3-rep modes take median-of-3 for " +
-        s"queries with first rep > ${RepThreshold}s, " +
-        "single rep below; graded medians self-audited against " +
-        "QUIET_MEDIANS.json with calibration-gated single-query fresh-JVM " +
-        s"reruns for >${AuditRatio}x outliers; all phases after the chunked " +
-        s"pass funded from a ${budgetSec.toLong}s wall budget " +
-        "(see Bench.scala scaladoc)"
+        s"bulk: forked chunks of <=$BulkChunkSize queries, 1 warm rep, escalating in " +
+        s"place on a >${InSituRatio}x quiet outlier to two more warm reps graded by " +
+        s"their mean (<=$MaxEscalations per chunk); fresh_jvm_queries: self-warmed " +
+        s"forked groups of <=$GroupSize, median-of-3 past ${RepThreshold}s; audit: " +
+        s"one pass rerunning >${AuditRatio}x quiet outliers in self-warmed groups of " +
+        s"<=$GroupSize, graded min(graded, rerun); a child starts only while the " +
+        s"${budgetSec.toLong}s wall budget covers its estimate (see Bench.scala scaladoc)"
       val detailJson = {
         val sortedTimes = snapshot.toSeq.sortBy(_._1)
-        val qs = sortedTimes.map { case (k, v) => s"  ${q(k)}: ${sec(v, 3)}" }.mkString("{\n", ",\n", "\n}")
-        val es = errSnap.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"  ${q(k)}: ${q(v)}" }.mkString("{\n", ",\n", "\n}")
-        val rd = sortedTimes.map { case (k, _) =>
-          s"  ${q(k)}: ${repsDetail.getOrElse(k, Nil).map(sec(_, 3)).mkString("[", ",", "]")}" }
-          .mkString("{\n", ",\n", "\n}")
-        val cd = sortedTimes.map { case (k, _) =>
-          s"  ${q(k)}: ${cpuDetail.getOrElse(k, Nil).map(sec(_, 3)).mkString("[", ",", "]")}" }
-          .mkString("{\n", ",\n", "\n}")
-        val au = auditEntries.readOnlySnapshot().toSeq.sortBy(_._1).map { case (k, a) =>
+        def obj(rows: Seq[String]): String = rows.mkString("{\n", ",\n", "\n}")
+        def arr(vs: Seq[Double]): String = vs.map(sec(_, 3)).mkString("[", ",", "]")
+        val qs = obj(sortedTimes.map { case (k, v) => s"  ${q(k)}: ${sec(v, 3)}" })
+        val es = obj(errSnap.toSeq.sortBy(_._1).map { case (k, v) => s"  ${q(k)}: ${q(v)}" })
+        val rd = obj(sortedTimes.map { case (k, _) => s"  ${q(k)}: ${arr(repsDetail.getOrElse(k, Nil))}" })
+        val cd = obj(sortedTimes.map { case (k, _) => s"  ${q(k)}: ${arr(cpuDetail.getOrElse(k, Nil))}" })
+        val au = obj(auditEntries.readOnlySnapshot().toSeq.sortBy(_._1).map { case (k, a) =>
           s"  ${q(k)}: {\"graded\": ${sec(a.graded, 3)}, \"quiet\": ${sec(a.quiet, 3)}, " +
-            s"\"reruns\": ${a.reruns.map(sec(_, 3)).mkString("[", ",", "]")}, " +
-            s"\"calibration\": ${a.calib.map(sec(_, 3)).mkString("[", ",", "]")}, " +
-            s"\"used\": ${sec(a.used, 3)}, \"flagged\": ${a.flagged}" +
-            (if (a.flagged && a.reruns.isEmpty && a.calib.nonEmpty)
-              ", \"host_loaded_during_reruns\": true" else "") + "}" }
-          .mkString("{\n", ",\n", "\n}")
+            s"\"reruns\": ${arr(a.reruns)}, \"used\": ${sec(a.used, 3)}, \"flagged\": ${a.flagged}}" })
         val freshGraded = snapshot.keys.toSeq.sorted.filter(FreshJvmQueries.contains)
-        // Comparison twins kept for oracle-equality / scale evidence.
-        // When verify-only (the r14 default) they carry their committed
-        // QUIET medians so the recompute-vs-index comparison stays
-        // readable; when graded (SPARK_GRAFT_BENCH_TWINS=1) the graded
-        // seconds appear under "queries" like everything else.
+        // Twins left out carry their committed quiet medians so the
+        // recompute-vs-index comparison stays readable; graded twins
+        // appear under "queries" like everything else.
         val twinNames = SparkEntry.baselineTwins.keys.toSeq.sorted
-        val twins = SparkEntry.baselineTwins.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"  ${q(k)}: ${q(v)}" }
-          .mkString("{\n", ",\n", "\n}")
-        val twinQuiet = twinNames
-          .flatMap(n => quietMap.get(n).map(v => s"  ${q(n)}: ${sec(v, 3)}"))
-          .mkString("{\n", ",\n", "\n}")
+        val twins = obj(SparkEntry.baselineTwins.toSeq.sortBy(_._1)
+          .map { case (k, v) => s"  ${q(k)}: ${q(v)}" })
+        val twinQuiet = obj(twinNames
+          .flatMap(n => quietMap.get(n).map(v => s"  ${q(n)}: ${sec(v, 3)}")))
         val twinSecs =
           if (skippedTwins.nonEmpty) skippedTwins.flatMap(quietMap.get).sum
           else twinNames.flatMap(snapshot.get).sum
@@ -814,15 +615,14 @@ object Bench {
 "partial": true,
 "n_catalog_planned": ${catalog.size},""" else ""}${if (only.isDefined) s"""
 "subset": true,
-"n_catalog": ${SparkEntry.queries.size},""" else ""}${if (!fallbackChunks.isEmpty) s"""
-"fork_fallback_chunks": ${fallbackChunks.toArray.toSeq.map(v => q(v.toString)).mkString("[", ",", "]")},""" else ""}
+"n_catalog": ${SparkEntry.queries.size},""" else ""}
 "sf": ${q(sfDir)},
 "budget": $budget,
 "fresh_jvm_queries": ${freshGraded.map(q).mkString("[", ",", "]")},
-"baseline_twins": {"graded": $twinsGraded, "excluded_from_grading": ${skippedTwins.nonEmpty},
+"baseline_twins": {"graded": ${catalog.exists(SparkEntry.baselineTwins.contains)}, "excluded_from_grading": ${skippedTwins.nonEmpty},
   "quiet_total_sec": ${sec(twinSecs, 3)}, "quiet_sec": $twinQuiet,
   "recommended_form": $twins,
-  "note": "full-recompute comparison baselines — oracle-gated in Verify every round; quiet_sec from QUIET_MEDIANS.json (r14: verify-only by default, VERDICT r13 #5)"},
+  "note": "full-recompute comparison baselines — oracle-gated in Verify; graded only when SPARK_GRAFT_ONLY names them; quiet_sec from QUIET_MEDIANS.json"},
 "quiet_audit": {"note": ${q(auditNote)}, "entries": $au},
 "queries": $qs,
 "reps": $rd,
@@ -864,15 +664,10 @@ object Bench {
       if (!provisional) chunkLines(1800).foreach(println)
       if (lineOut) { println(line); System.out.flush() }
     }
-    /** Progressive safety net: a fresh sidecar after each completed
-      * chunk/phase, plus a parseable (partial) total line on stdout AT
-      * MOST every budget/10 seconds (min 45 s) — VERDICT r14 #7: ~25
-      * partial lines per run was line-budget noise; ≤10 keeps the
-      * last-line contract with a provisional never older than ~90 s.
-      * The sidecar refresh is unconditional (file overwrite, no stdout
-      * cost), so a post-kill reader always sees current state there.
-      */
-    val provisionalIntervalSec = math.max(45.0, budgetSec / 10)
+    // A fresh sidecar after every child; a provisional total line on
+    // stdout at most every budget/10 s, so the last line is never older
+    // than ~90 s without flooding the captured tail.
+    val provisionalIntervalSec = budgetSec / 10
     val lastProvisionalNs = new java.util.concurrent.atomic.AtomicLong(benchStart)
     def emitProgress(): Unit = {
       val now = System.nanoTime()
@@ -881,10 +676,9 @@ object Bench {
       emit(partial = true, provisional = true, lineOut = due)
     }
 
-    // SIGTERM flush (layer 6): when the driver's wall clock expires it
-    // TERMs the process tree; this hook turns whatever was timed into a
-    // parseable partial artifact instead of the r13 nothing. The hook is
-    // a no-op once the normal path has emitted.
+    // SIGTERM flush: when the harness's wall clock expires it TERMs the
+    // process tree; this hook turns whatever was timed into a parseable
+    // partial artifact. A no-op once the normal path has emitted.
     val emitted = new java.util.concurrent.atomic.AtomicBoolean(false)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       if (emitted.compareAndSet(false, true)) {
@@ -894,435 +688,79 @@ object Bench {
       }
     }, "bench-partial-flush"))
 
-    // In-process session, created lazily: the all-forked happy path never
-    // builds a SparkSession in the parent at all.
-    lazy val localSpark = {
-      val s = Sessions.local(cpus)
-      runWarmups(s, sfDir, catalog)
-      s
-    }
-    var usedLocal = false
-
-    // ---- Phase 1: bulk chunks, BUDGET-PLANNED (VERDICT r14 #1: the
-    // chunked pass used to be unbounded by design, so a degraded host
-    // ate the whole allowance before the funded phases ran — 10 queries
-    // untimed, 23 audit flags unverified). The plan: estimate the
-    // singles + audit phases from the committed quiet medians, reserve
-    // that up front, and fit the bulk pass into the remainder by
-    // degrading ITS OWN protocol first — 3 reps → 1 rep (the audit
-    // layer re-measures any resulting outlier under the full quiet
-    // protocol) → per-chunk in-process (saves the ~25 s/chunk JVM
-    // start) — before ever cannibalizing the reserve. Every query is
-    // always timed in this phase; only rep count and JVM freshness
-    // degrade, and every transition lands in the sidecar notes.
-    val (freshNames, regularNames) = catalog.partition(FreshJvmQueries.contains)
-    def singleEstimate(n: String): Double =
-      ChildOverheadSec + quietMap.get(n).map(_ * 4).getOrElse(35.0)
-    val emitReserve = 15.0
-    // Round-robin grouping of the fresh-JVM singles (adjacent family
-    // members land in different groups); defined up here because the
-    // RESERVE must price the grouping the phase can actually afford.
-    def groupsOf(gs: Int): Seq[Seq[String]] =
-      if (freshNames.isEmpty) Seq.empty
-      else {
-        val n = math.ceil(freshNames.size.toDouble / gs).toInt
-        freshNames.zipWithIndex.groupBy(_._2 % n).toSeq.sortBy(_._1)
-          .map(_._2.map(_._1))
+    // ---- The deadline rule and the forked runner -----------------------
+    def estimate(names: Seq[String], selfWarm: Boolean): Double =
+      ChildOverheadSec +
+        names.map(quietMap.getOrElse(_, UnknownQuietSec)).sum * (if (selfWarm) 4 else 1)
+    /** Run `group` in fresh children until every name is reported; each
+      * child starts only if the budget left covers its estimate. Returns
+      * the names no child was started for.
+      */
+    def runGroup(group: Seq[String], selfWarm: Boolean)(take: Transcript => Unit): Seq[String] = {
+      var left = group
+      while (left.nonEmpty && estimate(left, selfWarm) <= budgetSec - elapsedSec) {
+        val t = forkChild(left, selfWarm)
+        take(t)
+        left = t.rerun
+        emitProgress()
       }
-    def groupEst(g: Seq[String]): Double =
-      ChildOverheadSec + 0.35 * g.size +
-        g.map(n => quietMap.get(n).map(_ * 4).getOrElse(35.0)).sum
-    // Reserve: the CHEAPEST acceptable singles protocol (6-per-JVM —
-    // the phase itself upgrades to singles/pairs/triples when the bulk
-    // pass leaves more than the reserve) plus an audit allowance (a few
-    // calibrated grouped reruns' worth, scaled with the budget), both
-    // funded BEFORE the bulk pass may spend. Reserving the one-per-JVM
-    // cost here (r15 first attempt) starved the bulk window into the
-    // in-process mode whose pollution the audit then could not afford
-    // to clean up — reserve minimal, spend opportunistically. r16: the
-    // basis widened 3→6 when FreshJvmQueries grew to 17 non-twin
-    // entries (VERDICT r15 #1) — a 3-per-JVM reserve (~370 s) would
-    // have pushed the bulk plan itself into in-process mode, recreating
-    // the exact pollution the singles exist to avoid.
-    val singlesReserve = groupsOf(6).map(groupEst).sum
-    val auditReserve = math.min(220.0, math.max(90.0, budgetSec * 0.18))
-    // Never squeeze the bulk below 35% of the budget: with a tiny
-    // budget the reserves would otherwise starve the one phase that
-    // times the bulk of the catalog.
-    val bulkDeadline = math.max(
-      budgetSec - singlesReserve - auditReserve - emitReserve,
-      budgetSec * 0.35)
-    def perQueryEst(n: String, reps: Int): Double =
-      quietMap.get(n).map(v => if (v <= RepThreshold) v else v * reps)
-        .getOrElse(0.8 * reps)
-    // Per-query overhead term (0.35 s): clearCache + GC + scheduling
-    // between queries — measured as the gap between sweep-chunk wall and
-    // rep sums (39–57 s for 25-query chunks vs the 40 s JVM constant).
-    // Without it, wide chunks look cheaper than they run.
-    def chunkEst(chunk: Seq[String], reps: Int, forked: Boolean): Double =
-      (if (forked) ChildOverheadSec else 3.0) + 0.35 * chunk.size +
-        chunk.map(perQueryEst(_, reps)).sum
-    // Plans are accepted only at ≤ 85% of their window: the estimates
-    // are floors (quiet medians on an oscillating host), and the r15
-    // validation run showed a plan accepted at 99% of its window dies
-    // on the first few-second overrun.
-    val planMargin = 0.85
-    // Bulk protocol ladder, strongest first. The wider-chunk rungs exist
-    // because JVM start is the dominant fixed cost (measured ~40 s): at
-    // 8×25-query chunks the 1-rep forked pass costs ~490 s, but 3 chunks
-    // of 75 cost ~290 s — still fresh-JVM-bounded aging (1 rep each,
-    // audit-checked) and far better measurement than one aged in-process
-    // session timing the whole catalog (the r15 first validation run's
-    // failure mode: in-process bulk → pollution flags → unfunded audit).
-    val bulkPlans: Seq[(String, Int, Int)] = Seq(
-      ("3rep", ChunkSize, 3), ("1rep", ChunkSize, 1),
-      ("1rep-c50", 50, 1), ("1rep-c75", 75, 1))
-    def bulkEstOf(cs: Int, reps: Int): Double =
-      regularNames.grouped(cs).map(c => chunkEst(c, reps, forkEnabled)).sum
-    val chosenBulk: Option[(String, Int, Int)] =
-      if (!forkEnabled) None
-      else bulkPlans.find { case (_, cs, reps) =>
-        bulkEstOf(cs, reps) <= (bulkDeadline - elapsedSec) * planMargin }
-    budgetNotes.add(f"plan: bulk_deadline=${bulkDeadline}%.0fs " +
-      f"singles_reserve=${singlesReserve}%.0fs audit_reserve=${auditReserve}%.0fs " +
-      f"bulk_est_3rep=${bulkEstOf(ChunkSize, 3)}%.0fs " +
-      f"bulk_est_1rep=${bulkEstOf(ChunkSize, 1)}%.0fs " +
-      f"bulk_est_1rep_c75=${bulkEstOf(75, 1)}%.0fs " +
-      s"bulk_mode=${chosenBulk.map(_._1).getOrElse("inproc")}")
-    if (chosenBulk.map(_._1) != Some("3rep"))
-      System.err.println(s"[bench] BULK protocol: " +
-        s"${chosenBulk.map(_._1).getOrElse("inproc")} (budget plan)")
-    val (bulkChunkSize, bulkReps) = chosenBulk match {
-      case Some((_, cs, reps)) => (cs, reps)
-      case None                => (ChunkSize, 1)
+      left
     }
-    bulkModeDesc = chosenBulk match {
-      case Some((mode, cs, reps)) =>
-        s"$mode (forked, <=$cs queries/JVM, $reps rep(s))"
-      case None =>
-        if (forkEnabled) "inproc (1 rep, budget-degraded)" else "inproc (1 rep)"
-    }
-    val allChunks = regularNames.grouped(bulkChunkSize).toSeq
-    var bulkInproc = chosenBulk.isEmpty
-    allChunks.zipWithIndex.foreach { case (chunk, i) =>
-      // Mid-run re-check: if the host slowed and the remaining chunks no
-      // longer fit the window even at 1 rep, the REST degrade in-process.
-      if (!bulkInproc && forkEnabled) {
-        val left = bulkDeadline - elapsedSec
-        if (allChunks.drop(i).map(chunkEst(_, 1, forked = true)).sum > left &&
-            allChunks.drop(i).map(chunkEst(_, 1, forked = false)).sum <= left) {
-          bulkInproc = true
-          budgetNotes.add(f"bulk degraded to inproc at chunk ${i + 1}/${allChunks.size} " +
-            f"(${left}%.0fs left of the ${bulkDeadline}%.0fs bulk window)")
-          System.err.println(s"[bench] BULK degraded to inproc from chunk " +
-            s"${i + 1}/${allChunks.size}")
-        }
-      }
-      val leftover: Seq[String] =
-        if (bulkInproc || !forkEnabled) chunk
-        else runChunkForked(sfDir, chunk, times, errors, repsDetail, cpuDetail,
-          maxReps = bulkReps) match {
-          case Some(missing) => missing
-          case None          => chunk
-        }
-      if (leftover.nonEmpty) {
-        fallbackChunks.add(leftover.head)
-        usedLocal = true
-        timeInto(localSpark, sfDir, leftover, times, errors, repsDetail, cpuDetail,
-          maxReps = if (bulkInproc) 1 else bulkReps, quietOf = quietMap.get)
-      }
-      emitProgress()
+    def grade(t: Transcript): Unit = {
+      times ++= t.times; errors ++= t.errors; repsDetail ++= t.reps; cpuDetail ++= t.cpu
     }
 
-    // Host-inflation factor, MEASURED from the bulk pass (VERDICT r15
-    // #2: the r15 plan was accepted at 85% of its window against
-    // quiet-floor estimates, then a ~2× host turned 840 s of plan into
-    // 1247 s of wall — the estimates must track the host the run is
-    // actually on). Median graded/quiet over bulk entries with a
-    // non-trivial quiet floor; every later phase's funding check prices
-    // its work at estimate × inflation, so a degraded host shrinks the
-    // singles grouping and audit scope INSIDE the budget instead of
-    // silently overrunning it.
-    val inflation: Double = {
-      val ratios = times.readOnlySnapshot().toSeq.collect {
-        case (n, v) if quietMap.get(n).exists(_ >= 0.3) => v / quietMap(n)
-      }.sorted
-      if (ratios.isEmpty) 1.0 else math.max(1.0, ratios(ratios.size / 2))
-    }
-    budgetNotes.add(f"host inflation after bulk: ${inflation}%.2fx " +
-      "(median graded/quiet, floors >= 0.3s)")
-    if (inflation > 1.3)
-      System.err.println(f"[bench] HOST inflation ${inflation}%.2fx — later " +
-        "phases priced accordingly")
-
-    // ---- Phase 2: fresh-JVM singles, funded from the remaining budget.
-    // Estimated wall for one single: child overhead + self-warm + up to
-    // 3 reps ≈ overhead + 4×quiet (60 s when the quiet median is
-    // unknown). When the remainder can no longer fund a single, the REST
-    // run together in one shared self-warmed chunk (one JVM start, still
-    // fresh vs the bulk pass); if even that estimate doesn't fit, they
-    // run in-process — timed either way, the driver always gets a full
-    // catalog, and the sidecar names the degraded entries.
-    val freshOrdered = freshNames // already sorted (catalog order)
-    // r15 grouped mode: the pure one-query-per-JVM protocol costs
-    // ~ChildOverheadSec × |singles| of pure JVM start — at the measured
-    // 40 s and 12+ singles that alone is half the budget. Pick the
-    // smallest group size in {1, 2, 3} whose TOTAL estimate fits what
-    // remains after the audit + emit reserves (groupsOf/groupEst are
-    // defined with the plan, above); each member still self-warms —
-    // a bounded adjacency trade for ~40 s/query saved. The audit layer
-    // re-measures any residual pollution in calibrated fresh JVMs, so
-    // a grouping artifact can never silently grade.
-    val groupSize: Option[Int] =
-      if (!forkEnabled) None
-      else Seq(1, 2, 3, 4, 6).find { gs =>
-        groupsOf(gs).map(groupEst).sum * inflation <=
-          (remainingSec - auditReserve - emitReserve) * planMargin
+    // ---- Phases 1 and 2: bulk chunks, then self-warmed groups ----------
+    val timedGroups = thePlan.bulk.map(_ -> false) ++ thePlan.fresh.map(_ -> true)
+    timedGroups.foreach { case (group, selfWarm) =>
+      val skipped = runGroup(group, selfWarm)(grade)
+      if (skipped.nonEmpty) {
+        skipped.foreach(untimed.add)
+        budgetNotes.add(s"untimed (deadline, ${sec(elapsedSec, 0)}s elapsed): " +
+          skipped.mkString(","))
+        System.err.println(s"[bench] DEADLINE: ${skipped.size} queries left untimed")
       }
-    val ranNames = scala.collection.mutable.HashSet[String]()
-    groupSize match {
-      case Some(gs) =>
-        if (gs > 1) {
-          budgetNotes.add(s"singles grouped $gs-per-JVM (round-robin across " +
-            s"families) to fit the reserve plan")
-          System.err.println(s"[bench] SINGLES grouped $gs-per-JVM to fit the budget")
-        }
-        val groups = groupsOf(gs)
-        var gi = 0
-        // The audit reserve rides in the funding check (advisor r15:
-        // gating on groupEst + emitReserve alone let a slow host's
-        // singles phase eat the audit fund the plan claimed was
-        // ring-fenced, leaving every flag rerun-SKIPPED).
-        while (gi < groups.size &&
-               remainingSec > groupEst(groups(gi)) * inflation +
-                 auditReserve + emitReserve) {
-          val g = groups(gi)
-          val leftover: Seq[String] =
-            runChunkForked(sfDir, g, times, errors, repsDetail, cpuDetail,
-              selfWarm = true) match {
-              case Some(missing) => missing
-              case None          => g
-            }
-          if (leftover.nonEmpty) {
-            fallbackChunks.add(leftover.head)
-            usedLocal = true
-            timeInto(localSpark, sfDir, leftover, times, errors, repsDetail, cpuDetail)
-          }
-          ranNames ++= g
-          emitProgress()
-          gi += 1
-        }
-      case None => ()
     }
-    val degraded = freshOrdered.filterNot(ranNames)
-    if (degraded.nonEmpty) {
-      val sharedEstimate = (ChildOverheadSec +
-        degraded.map(n => quietMap.get(n).map(_ * 4).getOrElse(35.0)).sum) * inflation
-      // Deliberately NOT gated on auditReserve: these are the
-      // pollution-class queries themselves — timing them in-process to
-      // protect the audit fund would manufacture the very flags the
-      // audit exists to clean. One shared fresh JVM is the better spend.
-      if (forkEnabled && remainingSec > sharedEstimate + emitReserve) {
-        budgetNotes.add(s"budget_degraded: shared self-warmed chunk for ${degraded.mkString(",")}")
-        System.err.println(s"[bench] BUDGET degrading ${degraded.size} fresh-JVM " +
-          s"singles to one shared chunk (${sec(remainingSec, 0)}s left of ${budgetSec.toLong}s)")
-        degraded.grouped(ChunkSize).foreach { chunk =>
-          runChunkForked(sfDir, chunk, times, errors, repsDetail, cpuDetail,
-            selfWarm = true) match {
-            case Some(missing) if missing.nonEmpty =>
-              fallbackChunks.add(missing.head); usedLocal = true
-              timeInto(localSpark, sfDir, missing, times, errors, repsDetail, cpuDetail)
-            case None =>
-              fallbackChunks.add(chunk.head); usedLocal = true
-              timeInto(localSpark, sfDir, chunk, times, errors, repsDetail, cpuDetail)
-            case _ => ()
-          }
-          emitProgress()
-        }
-      } else {
-        budgetNotes.add(s"budget_degraded: in-process timing for ${degraded.mkString(",")}")
-        System.err.println(s"[bench] BUDGET degrading ${degraded.size} fresh-JVM " +
-          s"singles to in-process (${sec(remainingSec, 0)}s left of ${budgetSec.toLong}s)")
-        usedLocal = true
-        // One query per call with a provisional line between: the driver
-        // may kill at any moment past the budget, and only ALREADY-pumped
-        // stdout survives the sbt wrapper's death. The phase itself is
-        // bounded by a grace window past the budget (r14: the first rc=0
-        // run overran by ~200 s here) — a query skipped for wall reads as
-        // a named note, never a silent absence.
-        val grace = 120.0
-        val (timed, skipped) = {
-          var cut = degraded.size
-          degraded.zipWithIndex.foreach { case (n, i) =>
-            if (i < cut) {
-              if (elapsedSec > budgetSec + grace) cut = i
-              else {
-                timeInto(localSpark, sfDir, Seq(n), times, errors, repsDetail, cpuDetail)
-                emitProgress()
+
+    // ---- Phase 3: quiet-median audit, one pass -------------------------
+    auditNote = quietOrNote match {
+      case Left(note) => note
+      case Right(quiet) =>
+        val flags = auditFlags(times, quiet)
+        val reruns = scala.collection.mutable.Map[String, Seq[Double]]()
+        val unaudited = scala.collection.mutable.ArrayBuffer[String]()
+        flags.grouped(GroupSize).foreach { g =>
+          System.err.println(s"[bench] AUDIT: re-running ${g.mkString(",")} self-warmed")
+          unaudited ++= runGroup(g, selfWarm = true) { t =>
+            t.times.foreach { case (n, v) =>
+              reruns(n) = reruns.getOrElse(n, Nil) :+ v
+              // The rerun's reps and CPU replace the graded ones when the
+              // rerun becomes the grade.
+              if (v < times(n)) {
+                t.reps.get(n).foreach(repsDetail(n) = _)
+                t.cpu.get(n).foreach(cpuDetail(n) = _)
               }
             }
+            t.errors.foreach { case (n, msg) =>
+              System.err.println(s"[bench] AUDIT rerun of $n failed ($msg) — keeping graded value")
+            }
           }
-          (degraded.take(cut), degraded.drop(cut))
         }
-        if (skipped.nonEmpty) {
-          skipped.foreach(untimed.add)
-          budgetNotes.add(s"budget_skipped (untimed, wall ${grace.toLong}s past " +
-            s"budget): ${skipped.mkString(",")}")
-          System.err.println(s"[bench] BUDGET skipping ${skipped.size} remaining " +
-            s"in-process queries at ${sec(elapsedSec, 0)}s: ${skipped.mkString(",")}")
+        flags.foreach { n =>
+          val used = (times(n) +: reruns.getOrElse(n, Nil)).min
+          auditEntries(n) = Audit(times(n), quiet(n), reruns.getOrElse(n, Nil), used,
+            overQuiet(used, quiet(n)))
+          times(n) = used
         }
-        val _ = timed
-      }
+        auditSkippedCount = unaudited.size
+        if (unaudited.nonEmpty)
+          budgetNotes.add(s"unaudited (deadline): ${unaudited.mkString(",")}")
+        s"${flags.size} flagged of ${times.size} graded " +
+          s"(>${AuditRatio}x quiet and >${AuditFloor}s over); " +
+          s"${auditEntries.count(_._2.flagged)} still flagged after reruns" +
+          (if (unaudited.nonEmpty) s"; ${unaudited.size} rerun(s) skipped for the deadline" else "")
     }
 
-    // Serialize everything BEFORE the audit (r12 verdict: an audit rerun
-    // that shares the host with the parent's in-process session measures
-    // load, not the query): the fallback session is stopped here, so
-    // rerun children run against an idle parent.
-    if (usedLocal) localSpark.stop()
-
-    // ---- Phase 3: quiet-median self-audit (layer 3), budget-funded ---
-    auditNote =
-      if (!forkEnabled) "skipped: forking disabled, fresh-JVM reruns unavailable"
-      else quietOrNote match {
-        case Left(note) => note
-        case Right(quiet) =>
-          // Most-suspicious first (largest graded/quiet ratio): when the
-          // reserve can't fund every rerun, the entries most likely to
-          // read as regressions get verified before the marginal ones.
-          val flaggedNames = times.keys.toSeq.filter { n =>
-            quiet.get(n).exists(qm =>
-              times(n) > AuditRatio * qm && times(n) - qm > AuditFloor)
-          }.sortBy(n => -(times(n) / quiet(n)))
-          // Rerun protocol (r12 verdict: r12's reruns came back WORSE
-          // than the graded numbers): every rerun chunk leads with the
-          // calibration query and runs --selfwarm, so each target gets
-          // the exact QUIET protocol and the calibration reading
-          // certifies the host was idle — an inflated calibration marks
-          // the whole chunk load-contaminated and it is retried, never
-          // graded. r15: flags are verified in GROUPS of up to
-          // AuditGroupSize per child JVM — the r15 validation run
-          // flagged 26 entries out of an in-process bulk, and at ~50 s
-          // per single-flag JVM no reserve could fund that; grouped,
-          // the amortized cost per flag is ~15 s.
-          val AuditGroupSize = 3
-          // r17 (VERDICT r16 #2): the r16 driver run left 10 flags
-          // unverified (audit_skipped:10) INCLUDING an 18.0 s grade over
-          // a 3.08 s floor — the one class of flag that cannot be left
-          // standing, because it reads as a 6x regression when a fresh
-          // 32-core JVM reproduces the floor (measured this round:
-          // d7c 3.2 s, q_incremental_rollup 0.9 s, t19 1.05 s). A flag
-          // whose graded-quiet gap exceeds MandatoryGapSec or whose
-          // ratio exceeds MandatoryRatio is MANDATORY: its rerun group
-          // runs first and bypasses the ordinary funding gate, stopping
-          // only at the emit-reserve hard floor so the final JSON line
-          // always lands. Ordinary (sub-second-gap) flags keep the old
-          // gate and are the only ones audit_skipped can count.
-          val MandatoryGapSec = 3.0
-          val MandatoryRatio = 3.0
-          def mustRerun(n: String): Boolean =
-            times(n) - quiet(n) > MandatoryGapSec ||
-              times(n) > MandatoryRatio * quiet(n)
-          val calibQuiet = quiet.get(CalibrationQuery)
-          val rerunsBy = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Double]]()
-          val calibsBy = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Double]]()
-          val attempted = scala.collection.mutable.HashSet[String]()
-          def bestOf(n: String): Double =
-            (times(n) +: rerunsBy.get(n).map(_.toSeq).getOrElse(Nil)).min
-          def flaggedAt(n: String, v: Double): Boolean =
-            v > AuditRatio * quiet(n) && v - quiet(n) > AuditFloor
-          var pass = 0
-          var pending = flaggedNames
-          var funded = true
-          while (pass < AuditAttempts && pending.nonEmpty &&
-                 (funded || pending.exists(mustRerun))) {
-            // Mandatory flags (large graded-quiet gap) rerun FIRST —
-            // the r16 failure mode was exactly the reverse order: the
-            // dozen-per-JVM sub-second batches drained the reserve
-            // before the 18 s flag's group was priced. Sub-second flags
-            // batch cheaply (a whole dozen re-measure for one JVM
-            // start); heavyweights stay in groups of 3.
-            val (must, rest) = pending.partition(mustRerun)
-            val (small, large) = rest.partition(n => quiet(n) < 1.0)
-            val passGroups = must.grouped(AuditGroupSize).toSeq ++
-              small.grouped(12).toSeq ++ large.grouped(AuditGroupSize).toSeq
-            passGroups.foreach { g =>
-              val est = (ChildOverheadSec +
-                (CalibrationQuery +: g).map(n => quiet.getOrElse(n, 5.0) * 4).sum) * inflation
-              val mandatory = g.exists(mustRerun)
-              if ((!funded || remainingSec < est + emitReserve) &&
-                  !(mandatory && remainingSec > emitReserve)) {
-                funded = false
-              } else {
-                System.err.println(s"[bench] AUDIT pass ${pass + 1}: re-running " +
-                  s"${g.mkString(",")} in a fresh JVM (calibration-led)")
-                val t2 = scala.collection.mutable.LinkedHashMap[String, Double]()
-                val e2 = scala.collection.mutable.LinkedHashMap[String, String]()
-                val r2 = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-                val c2 = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-                val chunk = CalibrationQuery +: g.filterNot(_ == CalibrationQuery)
-                runChunkForked(sfDir, chunk, t2, e2, r2, c2, selfWarm = true)
-                g.foreach(attempted += _)
-                val calib = t2.get(CalibrationQuery)
-                val hostLoaded = (for (c <- calib; cq <- calibQuiet)
-                  yield c > AuditRatio * cq && c - cq > AuditFloor).getOrElse(false)
-                g.foreach { n =>
-                  calib.foreach(c =>
-                    calibsBy.getOrElseUpdate(n, scala.collection.mutable.ArrayBuffer()) += c)
-                  if (hostLoaded) ()
-                  else t2.get(n).foreach { v =>
-                    rerunsBy.getOrElseUpdate(n, scala.collection.mutable.ArrayBuffer()) += v
-                    repsDetail(n) = r2.getOrElse(n, Seq(v))
-                    c2.get(n).foreach(cpuDetail(n) = _)
-                  }
-                  e2.get(n).foreach(msg => System.err.println(
-                    s"[bench] AUDIT rerun of $n failed ($msg) — keeping graded value"))
-                }
-                if (hostLoaded)
-                  System.err.println(f"[bench] AUDIT chunk discarded — calibration " +
-                    f"$CalibrationQuery read ${calib.get}%.2fs vs quiet " +
-                    f"${calibQuiet.get}%.2fs (host loaded during rerun)")
-                emitProgress()
-              }
-            }
-            pending = pending.filter(n => flaggedAt(n, bestOf(n)))
-            pass += 1
-          }
-          var budgetSkipped = 0
-          flaggedNames.foreach { n =>
-            val qm = quiet(n)
-            val used = bestOf(n)
-            val still = flaggedAt(n, used)
-            val rs = rerunsBy.get(n).map(_.toSeq).getOrElse(Nil)
-            val cs = calibsBy.get(n).map(_.toSeq).getOrElse(Nil)
-            auditEntries(n) = Audit(times(n), qm, rs, cs, used, still)
-            times(n) = used
-            if (!attempted.contains(n)) {
-              budgetSkipped += 1
-              System.err.println(f"[bench] AUDIT $n graded ${used}%.2fs vs quiet " +
-                f"$qm%.2fs — rerun SKIPPED (wall budget)")
-            } else if (still) {
-              // A flag whose reruns were ALL calibration-discarded is
-              // host-load evidence, not a regression.
-              val loadNote = if (rs.isEmpty && cs.nonEmpty)
-                " (every rerun calibration-discarded: host loaded, not a regression)"
-              else ""
-              System.err.println(f"[bench] AUDIT $n STILL ${used}%.2fs after " +
-                s"${rs.size} accepted fresh-JVM rerun(s)$loadNote")
-            }
-          }
-          auditSkippedCount = budgetSkipped
-          if (budgetSkipped > 0)
-            budgetNotes.add(s"audit: $budgetSkipped rerun(s) skipped for wall budget")
-          s"${flaggedNames.size} flagged of ${times.size} graded " +
-            s"(>${AuditRatio}x quiet and >${AuditFloor}s over); " +
-            s"${auditEntries.count(_._2.flagged)} still flagged after reruns" +
-            (if (budgetSkipped > 0) s"; $budgetSkipped rerun(s) budget-skipped" else "")
-      }
-
-    // partial = anything planned went untimed: the driver-visible total
-    // then carries "partial":true + n_timed/n_planned instead of silently
-    // reading as a faster full run (advisor finding r14).
     if (emitted.compareAndSet(false, true)) emit(partial = !untimed.isEmpty)
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -13,7 +13,7 @@ import graft.operators.LlmOps
   * through its bucket layout (no re-shuffle of the corpus side), and the
   * consumers must run ZERO CC loops once the snapshot exists.
   */
-class Round12Spec extends SparkTestBase {
+class LabelIndexSpec extends SparkTestBase {
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq === b.columns.toSeq)

@@ -214,32 +214,4 @@ class Round11Spec extends SparkTestBase {
     assert(out.groupBy(_._2).forall { case (_, rows) =>
       rows.map(_._4).toSet.size == 1 })
   }
-
-  // -------------------------------------------------------------------
-  // Bench chunk warm-ups: each family's first-touch machinery must be
-  // exercised by the child JVM that times it (a missing streaming
-  // warm-up puts ~10 s of micro-batch engine startup into the first
-  // timed st* query; a missing index build puts the snapshot build into
-  // the first timed indexed probe).
-  // -------------------------------------------------------------------
-
-  test("bench chunk warm-ups cover the families present in the chunk") {
-    // Generic chunk: only the universal warm-up.
-    assert(Bench.warmupsFor(Seq("q_tpch_q1", "w2_running_total")) ===
-      Seq("j1_dim_join"))
-    // Streaming chunk gets the micro-batch engine spin-up.
-    assert(Bench.warmupsFor(Seq("st4_stream_join"))
-      .contains("st2_sliding_window"))
-    // Dedup chunk gets the shingle/join codegen warm-up; the incremental
-    // ingest entries additionally get their corpus-index build.
-    val dChunk = Bench.warmupsFor(Seq("d2_dedup_minhash", "d5b_index_ingest"))
-    assert(dChunk.contains("d4_ngram_jaccard") && dChunk.contains("d5b_index_ingest"))
-    // The composed curation query runs the dedup pipeline too.
-    assert(Bench.warmupsFor(Seq("q_curation_neardup")).contains("d4_ngram_jaccard"))
-    // Indexed triangle probes get the bucketed edge snapshot built.
-    assert(Bench.warmupsFor(Seq("q_triangles_adj_idx")).contains("q_triangles_idx"))
-    // Unindexed triangle forms don't pay for an index they never read.
-    assert(!Bench.warmupsFor(Seq("q_triangles", "q_triangles_adj"))
-      .contains("q_triangles_idx"))
-  }
 }

@@ -12,7 +12,7 @@ import graft.operators.LlmOps
   * EXACTLY its recompute twin's rows, and its stored-side aggregates
   * must read the bucket layout without re-shuffling it.
   */
-class Round14Spec extends SparkTestBase {
+class SpanIndexSpec extends SparkTestBase {
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq === b.columns.toSeq)
