@@ -15,6 +15,23 @@ import org.apache.spark.sql.SparkSession
   *    micros in [[Tables.events]]) keeps the scan vectorized. Set here at
   *    session build — NOT inside a table loader — so no query mutates
   *    session state mid-plan (round-1 finding).
+  *  - `file:` filesystem: [[graft.fs.NioLocalFileSystem]] (the
+  *    `FileSystem` API: sinks, parquet/CSV writes) and
+  *    [[graft.fs.NioLocalFs]] (the `FileContext` API: streaming offsets,
+  *    commits, metadata and state-store files). Without a native Hadoop
+  *    library the stock classes fork `chmod` for every created file,
+  *    directory and `.crc` side file, and `readlink` twice per
+  *    `FileContext` rename. One perfbench `stream` run (5 passes) forked
+  *    1,013 `chmod` and 2,080 `readlink`, one `etl_ref` run 617 `chmod`;
+  *    with the binding both are done in-process and those runs fork
+  *    neither (Spark's own `rm -rf` spawns remain). On Spark's classpath
+  *    the unbound `FileSystem` is Hive's `ProxyLocalFileSystem` over
+  *    Hadoop's `LocalFileSystem`. Its scope is the `file:` scheme only;
+  *    checksums, rename semantics and the checkpoint manager are the stock
+  *    ones, and a sticky-bit permission or a real symlink falls back to
+  *    the stock code. A `file:` FileSystem that some code caches before
+  *    this session is built (`FileSystem.get` keys its cache on scheme and
+  *    user, not on the configuration) keeps the stock class.
   */
 object Sessions {
   // getOrCreate returns any existing session and silently IGNORES the
@@ -68,6 +85,8 @@ object Sessions {
       // default, because there maintenance has real work to do.
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.fs.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
