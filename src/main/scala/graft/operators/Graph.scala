@@ -209,49 +209,47 @@ object Graph {
     * layout; the pair-build + degree + orientation work never re-runs
     * per query. At 100 TB the edge index is the graph — every triangle /
     * wedge / motif query starts from it.
-    */
-  /** Default bucket count = the session's parallelism (r10 finding): a
-    * bucketed table's scan parallelism IS its bucket count, and the wedge
+    *
+    * Bucket count = the session's parallelism (r10 finding): a bucketed
+    * table's scan parallelism IS its bucket count, and the wedge
     * self-join — the query's dominant O(m^1.5) work — runs on exactly
     * that many tasks. The original 8 choked the sf1 wedge join to 8 of
     * 32 cores and the "index" LOST to the unindexed 32-way shuffle plan
     * (20.6 s probe vs 14.1 s; with cores-matched buckets the probe wins).
-    * A cluster build sizes this to the fleet's target parallelism, in
-    * the hundreds — the same rule, bigger number.
+    * A cluster session's parallelism is the fleet's, in the hundreds —
+    * the same rule, bigger number. Every stored index follows it.
     */
-  def defaultEdgeBuckets(spark: SparkSession): Int =
-    spark.sparkContext.defaultParallelism
-
-  def buildEdgeIndex(spark: SparkSession, dir: String, prefix: String,
-                     numBuckets: Int = -1): Unit = {
-    val buckets = if (numBuckets > 0) numBuckets else defaultEdgeBuckets(spark)
+  def buildEdgeIndex(spark: SparkSession, dir: String, prefix: String): Unit = {
     val (_, _, o) = orientedEdges(spark, dir)
-    Scale.writeBucketed(o, s"${prefix}_edges", "src", buckets)
+    Scale.writeBucketed(o, s"${prefix}_edges", "src", spark.sparkContext.defaultParallelism)
     PersistScope.releaseAll()
   }
+
+  /** Stored FORMAT version of both triangle indexes ([[ensureEdgeIndex]],
+    * [[ensureTriIngestIndex]]), part of their keys: bump when the
+    * orientation or a stored column changes, so a stale on-disk snapshot
+    * is never silently reused.
+    */
+  private[graft] val TriFormatVersion = "v1"
+
+  /** The edge index's prefix, built on first use ([[Scale.storedIndex]]):
+    * one bucketed-edge snapshot per corpus dir, shared by every indexed
+    * triangle form — the index IS the graph; each physical query shape
+    * reads the same stored layout.
+    */
+  private def ensureEdgeIndex(spark: SparkSession, dir: String): String =
+    Scale.storedIndex(spark, "tri_idx", s"$TriFormatVersion|$dir", Seq("edges"))(
+      buildEdgeIndex(spark, dir, _))
 
   /** [[qTriangles]] over a [[buildEdgeIndex]] snapshot: ONLY the wedge
     * join runs per query — the oriented table is read from its bucketed
     * layout (o1⋈o2 on src needs no exchange), so per-query work drops to
     * the wedge stream itself. Same output contract and the SAME oracle
     * as q_triangles: the index changes where the work happens, never the
-    * answer. Build is idempotent and self-healing (writeBucketed
-    * overwrites), gated on table existence like d5b.
+    * answer.
     */
-  /** One bucketed-edge snapshot per fixture dir, shared by every indexed
-    * triangle form — the index IS the graph; each physical query shape
-    * reads the same stored layout.
-    */
-  private def edgeIndexTable(spark: SparkSession, dir: String): String = {
-    val prefix = "tri_idx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (!spark.catalog.tableExists(s"${prefix}_edges"))
-      buildEdgeIndex(spark, dir, prefix)
-    s"${prefix}_edges"
-  }
-
   def qTrianglesIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val o = spark.table(edgeIndexTable(spark, dir))
+    val o = spark.table(s"${ensureEdgeIndex(spark, dir)}_edges")
     val wedgeClosed = o.as("o1")
       .join(o.as("o2"), col("o1.src") === col("o2.src") &&
         (col("o1.d_dst") < col("o2.d_dst") ||
@@ -266,33 +264,6 @@ object Graph {
       .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
   }
 
-  /** [[qTriangles]] by EDGE ITERATOR over sorted adjacency lists — same
-    * graph, same orientation, same answer (IDENTICAL oracle), different
-    * physical shape: instead of materializing the O(m^1.5) wedge stream
-    * as ROWS and closing it with a third join (41M shuffled wedge rows at
-    * sf0.1), build each vertex's sorted out-neighbor array once
-    * (`sort_array(collect_list)` — out-degree is O(√m) after
-    * orientation), attach the two endpoint arrays to every oriented edge
-    * (two equi-joins, O(m) rows), and count
-    * `|N⁺(u) ∩ N⁺(v)|` per edge with the native codegen'd two-pointer
-    * merge [[graft.functions.SortedIntersectCount]]. Each triangle
-    * {a,b,c} (oriented a→b, a→c, b→c) is counted exactly once, at edge
-    * (a,b) — the only edge whose BOTH endpoints point at the third
-    * vertex.
-    *
-    * Scale shape: the intersection work is the same O(Σ_edges
-    * (d⁺(u)+d⁺(v))) = O(m^1.5) bound as the wedge join, but it runs as
-    * arithmetic inside one whole-stage-codegen'd map + partial-agg stage
-    * — the shuffle volume drops from O(m^1.5) wedge ROWS (hashed,
-    * buffered, probed by the closing join) to O(m) edge rows carrying
-    * packed long arrays, and the third join disappears entirely. The
-    * per-edge result folds into a map-side-combined SUM, so the final
-    * exchange is one row per partition. Measured at sf0.1: 6.8 s (wedge
-    * join) → ~2 s. The adjacency build is one groupBy on the oriented
-    * edges; at 100 TB it is a bucketed table by `src` (the
-    * [[buildEdgeIndex]] pattern) and both attach joins co-locate on the
-    * stored layout.
-    */
   /** [[qTrianglesAdj]] over the [[buildEdgeIndex]] bucketed snapshot —
     * the stated 100 TB form, now coded and plan-locked rather than only
     * documented: the oriented edges come from the src-bucketed stored
@@ -307,7 +278,7 @@ object Graph {
     * form.
     */
   def qTrianglesAdjIdx(spark: SparkSession, dir: String): DataFrame = {
-    val o = spark.table(edgeIndexTable(spark, dir))
+    val o = spark.table(s"${ensureEdgeIndex(spark, dir)}_edges")
     // Out-neighbor arrays straight off the bucketed layout: the groupBy
     // key IS the bucket column, so no exchange precedes the aggregate,
     // and its output keeps that partitioning for the src attach join.
@@ -358,9 +329,8 @@ object Graph {
     *  - `<prefix>_stats` — one row (n_nodes, n_edges, n_triangles), the
     *    running totals ingest extends.
     */
-  def buildTriIngestIndex(spark: SparkSession, dir: String, prefix: String,
-                          numBuckets: Int = -1): Unit = {
-    val buckets = if (numBuckets > 0) numBuckets else defaultEdgeBuckets(spark)
+  def buildTriIngestIndex(spark: SparkSession, dir: String, prefix: String): Unit = {
+    val buckets = spark.sparkContext.defaultParallelism
     val corpusLi = Tables.lineitem(spark, dir)
       .filter(col("l_orderkey") % TriBatchMod =!= 0)
       .select(col("l_orderkey"), col("l_partkey"))
@@ -389,17 +359,10 @@ object Graph {
     PersistScope.releaseAll()
   }
 
-  /** Build-if-absent gate (all four tables — the half-built-index lesson
-    * from ensureCorpusIndex); keyed on the corpus dir.
-    */
-  private[graft] def ensureTriIngestIndex(spark: SparkSession, dir: String): String = {
-    val prefix = "tri_ing_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (Seq("edges", "adj", "deg", "stats")
-        .exists(t => !spark.catalog.tableExists(s"${prefix}_$t")))
-      buildTriIngestIndex(spark, dir, prefix)
-    prefix
-  }
+  /** The ingest snapshot's prefix, built on first use ([[Scale.storedIndex]]). */
+  private[graft] def ensureTriIngestIndex(spark: SparkSession, dir: String): String =
+    Scale.storedIndex(spark, "tri_ing", s"$TriFormatVersion|$dir",
+      Seq("edges", "adj", "deg", "stats"))(buildTriIngestIndex(spark, dir, _))
 
   /** Q_TRIANGLES_ADJ_INGEST: fold the batch orders' co-purchase edges
     * into the stored snapshot and emit the maintained totals — SAME
@@ -504,6 +467,33 @@ object Graph {
         (col("n_triangles") + col("ta") + col("tb")).as("n_triangles"))
   }
 
+  /** [[qTriangles]] by EDGE ITERATOR over sorted adjacency lists — same
+    * graph, same orientation, same answer (IDENTICAL oracle), different
+    * physical shape: instead of materializing the O(m^1.5) wedge stream
+    * as ROWS and closing it with a third join (41M shuffled wedge rows at
+    * sf0.1), build each vertex's sorted out-neighbor array once
+    * (`sort_array(collect_list)` — out-degree is O(√m) after
+    * orientation), attach the two endpoint arrays to every oriented edge
+    * (two equi-joins, O(m) rows), and count
+    * `|N⁺(u) ∩ N⁺(v)|` per edge with the native codegen'd two-pointer
+    * merge [[graft.functions.SortedIntersectCount]]. Each triangle
+    * {a,b,c} (oriented a→b, a→c, b→c) is counted exactly once, at edge
+    * (a,b) — the only edge whose BOTH endpoints point at the third
+    * vertex.
+    *
+    * Scale shape: the intersection work is the same O(Σ_edges
+    * (d⁺(u)+d⁺(v))) = O(m^1.5) bound as the wedge join, but it runs as
+    * arithmetic inside one whole-stage-codegen'd map + partial-agg stage
+    * — the shuffle volume drops from O(m^1.5) wedge ROWS (hashed,
+    * buffered, probed by the closing join) to O(m) edge rows carrying
+    * packed long arrays, and the third join disappears entirely. The
+    * per-edge result folds into a map-side-combined SUM, so the final
+    * exchange is one row per partition. Measured at sf0.1: 6.8 s (wedge
+    * join) → ~2 s. The adjacency build is one groupBy on the oriented
+    * edges; at 100 TB it is a bucketed table by `src` (the
+    * [[buildEdgeIndex]] pattern) and both attach joins co-locate on the
+    * stored layout.
+    */
   def qTrianglesAdj(spark: SparkSession, dir: String): DataFrame = {
     val (e0, deg, o) = orientedEdges(spark, dir)
     // Oriented out-neighbor lists, sorted for the merge-count contract

@@ -270,9 +270,6 @@ object LlmOps {
       posexplode(array(bandKeyExprs.map(expr): _*)).as(Seq("band", "bkey")))
   }
 
-  private def minhashBands(spark: SparkSession, dir: String): DataFrame =
-    minhashBandsOf(shingleRows(spark, dir))
-
   /** Per-ROW formulation of [[minhashBandsOf]]'s signature: SQL select
     * expressions computing m0..m{NumHashes-1} from a carried shingle
     * ARRAY column `sh` (array HOFs, no aggregation) — the shape a
@@ -280,9 +277,9 @@ object LlmOps {
     * stateful aggregation. Lives HERE, next to the aggregating twin,
     * because the two formulations must stay byte-identical or the
     * stream side silently stops colliding with the stored corpus bands
-    * (st14); Round13Spec locks the parity.
-    */
-  /** @param hashedCol a column holding the [[shingleHash60]]'d shingle
+    * (st14); LlmOpsSpec locks the parity.
+    *
+    * @param hashedCol a column holding the [[shingleHash60]]'d shingle
     *   array (distinctness optional — min over a multiset equals min
     *   over its set). Taking the PRE-HASHED array keeps the md5 at one
     *   per shingle here too; the eight seeded passes are multiply-shift
@@ -689,8 +686,14 @@ object LlmOps {
       .filter(col("jaccard_milli") > 0)
   }
 
+  /** The source that carries the incoming batch in every ingest form
+    * (d5/d5b, d7c, t29b, st14); the stored indexes those forms probe are
+    * built over every other source.
+    */
+  val BatchSource = "src0"
+
   /** D5: incremental ingestion dedup — the production shape: a NEW batch
-    * of documents (here: source = 'src0') checked against the EXISTING
+    * of documents (here: [[BatchSource]]) checked against the EXISTING
     * corpus (every other source) via the same MinHash bands. Unlike the
     * self-join in [[d2DedupMinhash]], this is an asymmetric join of a
     * small batch against the corpus band table — at scale the corpus
@@ -702,14 +705,14 @@ object LlmOps {
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
     val shingles = PersistScope.persisted(shingleRows(spark, dir))
     val bands = PersistScope.persisted(minhashBandsOf(shingles).join(src, "doc_id"))
-    val newBands = bands.filter(col("source") === "src0")
+    val newBands = bands.filter(col("source") === BatchSource)
       .select(col("doc_id").as("new_doc"), col("band").as("band_n"), col("bkey").as("bkey_n"))
     // Corpus-side band-skew cap (same contract as d2/d6): a hot CORPUS
     // bucket multiplies against every batch row that lands in it, so the
     // guard lives on the corpus side — the batch side is small by
     // definition and is never capped.
     val corpusBands = capBandBuckets(
-      bands.filter(col("source") =!= "src0").select(col("doc_id"), col("band"), col("bkey")))
+      bands.filter(col("source") =!= BatchSource).select(col("doc_id"), col("band"), col("bkey")))
       .select(col("doc_id").as("existing_doc"), col("band"), col("bkey"))
     val candidates = newBands
       .join(corpusBands, col("band_n") === col("band") && col("bkey_n") === col("bkey"))
@@ -740,20 +743,13 @@ object LlmOps {
     *  - `<prefix>_shingles(doc_id, sset)` bucketed on `doc_id`: the
     *    exact-Jaccard verify join reads co-located buckets.
     *
-    * `excludeSource` keeps the incoming batch's own source out of the
-    * index (the fixture's batch is `src0`). At 100 TB this runs once per
-    * corpus snapshot and every ingest amortizes it; bucket count would be
-    * sized to executors × cores.
+    * The incoming batch ([[BatchSource]]) stays out of the index. At
+    * 100 TB this runs once per corpus snapshot and every ingest
+    * amortizes it.
     */
-  def buildCorpusIndex(spark: SparkSession, dir: String, prefix: String,
-                       excludeSource: String = "src0", numBuckets: Int = -1): Unit = {
-    // Bucket count = scan AND probe-join parallelism for every future
-    // ingest (the Graph.defaultEdgeBuckets rule — 8 choked the triangle
-    // index's wedge join to a quarter of the machine); default to the
-    // session's parallelism, sized to executors × cores on a cluster.
-    val buckets =
-      if (numBuckets > 0) numBuckets else spark.sparkContext.defaultParallelism
-    val corpusDocs = Tables.documentsSpread(spark, dir).filter(col("source") =!= excludeSource)
+  def buildCorpusIndex(spark: SparkSession, dir: String, prefix: String): Unit = {
+    val buckets = spark.sparkContext.defaultParallelism
+    val corpusDocs = Tables.documentsSpread(spark, dir).filter(col("source") =!= BatchSource)
     val shingles = shingleRowsOf(corpusDocs).persist()
     // Cap applied at INDEX BUILD time: over-cap corpus buckets never
     // enter the stored band table, so every future ingest inherits the
@@ -770,16 +766,15 @@ object LlmOps {
   }
 
   /** Incremental ingest against a [[buildCorpusIndex]] snapshot: shingle
-    * and band ONLY the new batch (source = `newSource`), band-join it
+    * and band ONLY the new batch ([[BatchSource]]), band-join it
     * against the stored corpus bands, verify candidates against the
     * stored shingle sets. Per-ingest work is proportional to the BATCH,
     * not the corpus — the order-of-magnitude difference vs
     * [[d5DedupIncremental]]'s full recompute. Same output contract:
     * (new_doc, existing_doc, jaccard_milli).
     */
-  def d5IncrementalAgainstIndex(spark: SparkSession, dir: String, prefix: String,
-                                newSource: String = "src0"): DataFrame = {
-    val batchDocs = Tables.documentsSpread(spark, dir).filter(col("source") === newSource)
+  def d5IncrementalAgainstIndex(spark: SparkSession, dir: String, prefix: String): DataFrame = {
+    val batchDocs = Tables.documentsSpread(spark, dir).filter(col("source") === BatchSource)
     // PersistScope-pinned (r16 — was deliberately unpersisted after an
     // advisor finding about a bare .persist() outliving the query; the
     // PersistScope registry is exactly the lifecycle answer, and every
@@ -824,49 +819,27 @@ object LlmOps {
     * iteration after Bench's warm-up, or each batch of a real ingest
     * loop — pays only batch-proportional work. Output contract and
     * oracle are exactly d5's: the index path must be a pure
-    * optimization, never a semantics change. The index key hashes the
-    * corpus dir, so fixtures at different sf never collide (corpora are
-    * immutable snapshots; a mutated-in-place dir would need an index
-    * rebuild, which at scale is the snapshot-refresh job).
+    * optimization, never a semantics change.
     */
   def d5bIndexIngest(spark: SparkSession, dir: String): DataFrame =
     d5IncrementalAgainstIndex(spark, dir, ensureCorpusIndex(spark, dir))
 
-  /** Build-if-absent gate for the bucketed corpus index; returns the
-    * index prefix. Shared by [[d5bIndexIngest]] and the streaming ingest
-    * probe ([[graft.streaming.Streaming.st14StreamNeardup]]).
-    * Both tables gate the build: a crash between the two writeBucketed
-    * calls would otherwise wedge the query permanently — bands present,
-    * shingles missing, and nothing ever repairs it (reviewer finding).
-    * writeBucketed overwrites, so the re-build is self-healing.
+  /** The bucketed corpus index's prefix, built on first use
+    * ([[Scale.storedIndex]]). Shared by [[d5bIndexIngest]], d7c's batch
+    * probe and the streaming ingest probe
+    * ([[graft.streaming.Streaming.st14StreamNeardup]]).
     */
-  private[graft] def ensureCorpusIndex(spark: SparkSession, dir: String,
-                                       excludeSource: String = "src0"): String = {
-    // Key stays the bare dir for the default batch source (pre-r12
-    // compatibility with every existing caller) and widens only for a
-    // caller that excludes a different source. BandFormatVersion is
-    // folded in (advisor finding r13): the r13 int64-signature change
-    // altered the stored bkey format, and a persistent warehouse
-    // surviving such an upgrade would otherwise silently reuse a
-    // stale-format index — probes stop colliding, st14/d5b return empty
-    // with no error. Versioning the key makes any future format change
-    // auto-invalidate (the build-if-absent gate sees a new name and
-    // rebuilds; writeBucketed overwrite keeps it self-healing).
-    val key = BandFormatVersion + "|" + dir +
-      (if (excludeSource == "src0") "" else "!" + excludeSource)
-    val prefix = "d5b_idx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (!spark.catalog.tableExists(s"${prefix}_bands") ||
-        !spark.catalog.tableExists(s"${prefix}_shingles"))
-      buildCorpusIndex(spark, dir, prefix, excludeSource)
-    prefix
-  }
+  private[graft] def ensureCorpusIndex(spark: SparkSession, dir: String): String =
+    Scale.storedIndex(spark, "d5b_idx", s"$BandFormatVersion|$dir!$BatchSource",
+      Seq("bands", "shingles"))(buildCorpusIndex(spark, dir, _))
 
-  /** Stored band/signature FORMAT version, part of every corpus-index
-    * key ([[ensureCorpusIndex]]). Bump when the minhash signature or
-    * band-key encoding changes shape (r13: md5-hex → 60-bit int64;
-    * r15: per-seed md5 bank → mix64 multiply-shift family), so on-disk
-    * indexes from the old format can never be silently reused.
+  /** Stored band/signature FORMAT version, part of the corpus and label
+    * index keys ([[ensureCorpusIndex]], [[ensureLabelIndex]]; the labels
+    * derive from the bands, so a hash-bank change invalidates both).
+    * Bump when the minhash signature or band-key encoding changes shape
+    * (r13: md5-hex → 60-bit int64; r15: per-seed md5 bank → mix64
+    * multiply-shift family), so on-disk indexes from the old format can
+    * never be silently reused.
     */
   private[graft] val BandFormatVersion = "v3-mix64"
 
@@ -1233,32 +1206,19 @@ object LlmOps {
     * batch in at batch-proportional cost.
     */
   def buildLabelIndex(spark: SparkSession, dir: String, prefix: String,
-                      excludeSource: Option[String] = None,
-                      numBuckets: Int = -1): Unit = {
-    val buckets =
-      if (numBuckets > 0) numBuckets else spark.sparkContext.defaultParallelism
+                      excludeSource: Option[String]): Unit = {
     val docs = excludeSource.foldLeft(Tables.documentsSpread(spark, dir))(
       (d, s) => d.filter(col("source") =!= s))
-    Scale.writeBucketed(d7ResolveOf(spark, docs), s"${prefix}_labels", "doc_id", buckets)
+    Scale.writeBucketed(d7ResolveOf(spark, docs), s"${prefix}_labels", "doc_id",
+      spark.sparkContext.defaultParallelism)
   }
 
-  /** Build-if-absent gate for the label index; returns the prefix. The
-    * key hashes (BandFormatVersion, dir, excludeSource) — corpora are
-    * immutable snapshots, the d5b contract; a mutated dir needs the
-    * snapshot-refresh rebuild. BandFormatVersion is folded in (r15):
-    * the labels are a DERIVATIVE of the minhash band family, so a
-    * hash-bank change invalidates stored labels exactly as it
-    * invalidates stored bands.
-    */
+  /** The label index's prefix, built on first use ([[Scale.storedIndex]]). */
   private[graft] def ensureLabelIndex(spark: SparkSession, dir: String,
-                                      excludeSource: Option[String] = None): String = {
-    val key = BandFormatVersion + "|" + dir + excludeSource.fold("")("!" + _)
-    val prefix = "d7b_idx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (!spark.catalog.tableExists(s"${prefix}_labels"))
-      buildLabelIndex(spark, dir, prefix, excludeSource)
-    prefix
-  }
+                                      excludeSource: Option[String] = None): String =
+    Scale.storedIndex(spark, "d7b_idx",
+      s"$BandFormatVersion|$dir" + excludeSource.fold("")("!" + _),
+      Seq("labels"))(buildLabelIndex(spark, dir, _, excludeSource))
 
   /** D7b: [[d7DedupResolve]] read from the materialized label index —
     * the index path is a PURE optimization (same oracle as d7): first
@@ -1283,10 +1243,10 @@ object LlmOps {
   def d13bSplitIdx(spark: SparkSession, dir: String): DataFrame =
     groupSplitOf(d7bResolveIdx(spark, dir))
 
-  /** D7c: INCREMENTAL label maintenance — fold a new batch (source =
-    * `src0`, d5's ingest convention) into a label snapshot built WITHOUT
-    * it, producing labels for the whole corpus that equal the full
-    * recompute (same oracle as d7). The standard contracted-graph
+  /** D7c: INCREMENTAL label maintenance — fold a new batch
+    * ([[BatchSource]], d5's ingest convention) into a label snapshot
+    * built WITHOUT it, producing labels for the whole corpus that equal
+    * the full recompute (same oracle as d7). The standard contracted-graph
     * update:
     *
     *  1. batch↔corpus near-dup edges come from the stored BAND index
@@ -1317,13 +1277,12 @@ object LlmOps {
   def d7cResolveIngest(spark: SparkSession, dir: String): DataFrame =
     labelIngestAgainstIndex(spark, dir)
 
-  def labelIngestAgainstIndex(spark: SparkSession, dir: String,
-                              newSource: String = "src0"): DataFrame = {
+  def labelIngestAgainstIndex(spark: SparkSession, dir: String): DataFrame = {
     val stored = spark.table(
-      s"${ensureLabelIndex(spark, dir, Some(newSource))}_labels")
-    val bandPrefix = ensureCorpusIndex(spark, dir, excludeSource = newSource)
+      s"${ensureLabelIndex(spark, dir, Some(BatchSource))}_labels")
+    val bandPrefix = ensureCorpusIndex(spark, dir)
     val batchDocs = Tables.documentsSpread(spark, dir)
-      .filter(col("source") === newSource)
+      .filter(col("source") === BatchSource)
     // ONE pinned batch shingle table feeds the batch→corpus band probe,
     // its verify sets, AND the batch-internal d2 pipeline (r16 — the
     // composed ingest used to re-tokenize and re-md5 the batch ~3×:
@@ -1355,7 +1314,7 @@ object LlmOps {
       .select(col("doc_id"),
         coalesce(col("merged"), col("canonical_id")).as("canonical_id"))
     val batchNew = Tables.documents(spark, dir)
-      .filter(col("source") === newSource)
+      .filter(col("source") === BatchSource)
       .select(col("doc_id"), col("doc_id").as("self"))
       .join(resolved.toDF("doc_id", "merged"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("merged"), col("self")).as("canonical_id"))
@@ -1994,26 +1953,21 @@ object LlmOps {
     * family's heavy map work — never re-runs for stored documents.
     */
   def buildSpanIndex(spark: SparkSession, dir: String, prefix: String,
-                     excludeSource: String = "src0", numBuckets: Int = -1): Unit = {
-    val buckets =
-      if (numBuckets > 0) numBuckets else spark.sparkContext.defaultParallelism
-    // No filter at all under the FullCorpusSource 'exclude nothing'
-    // contract (advisor finding r14): `source =!= x` also drops
-    // NULL-source rows under SQL null semantics, which would silently
-    // shrink the whole-corpus index vs the t29 recompute on any corpus
-    // with null sources. The ingest path keeps the plain `=!=` — its
-    // DuckDB twin's `source != 'src0'` has the identical null
-    // semantics, so that filter is oracle-checked as-is.
-    val allDocs = Tables.documentsSpread(spark, dir)
-    val corpusDocs = winnowEligible(
-      if (excludeSource == FullCorpusSource) allDocs
-      else allDocs.filter(col("source") =!= excludeSource))
+                     excludeSource: Option[String]): Unit = {
+    // No filter at all for the whole corpus (advisor finding r14):
+    // `source =!= x` also drops NULL-source rows under SQL null
+    // semantics, which would silently shrink the whole-corpus index vs
+    // the t29 recompute on any corpus with null sources. The ingest path
+    // keeps the plain `=!=` — its DuckDB twin's `source != 'src0'` has
+    // the identical null semantics, so that filter is oracle-checked.
+    val corpusDocs = winnowEligible(excludeSource.foldLeft(Tables.documentsSpread(spark, dir))(
+      (d, s) => d.filter(col("source") =!= s)))
       .select(col("doc_id"), col("text"))
     Scale.writeBucketed(
       winnowSelectChunked(corpusDocs, SpanWindow, WinnowWindow)
         .groupBy("doc_id", "hash").agg(min("pos").as("pos"))
         .select("hash", "doc_id", "pos"),
-      s"${prefix}_spans", "hash", buckets)
+      s"${prefix}_spans", "hash", spark.sparkContext.defaultParallelism)
   }
 
   /** Stored span-fingerprint FORMAT version, part of every span-index
@@ -2024,26 +1978,21 @@ object LlmOps {
     */
   private[graft] val SpanFormatVersion = "v2-chunked"
 
-  /** Build-if-absent gate for the span index; returns the prefix (the
-    * d5b immutable-snapshot contract).
+  /** The span index's prefix, built on first use ([[Scale.storedIndex]]):
+    * the whole corpus for t19b, the corpus minus the batch for t29b.
     */
   private[graft] def ensureSpanIndex(spark: SparkSession, dir: String,
-                                     excludeSource: String = "src0"): String = {
-    val key = SpanFormatVersion + "|" + dir +
-      (if (excludeSource == "src0") "" else "!" + excludeSource)
-    val prefix = "t29b_idx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (!spark.catalog.tableExists(s"${prefix}_spans"))
-      buildSpanIndex(spark, dir, prefix, excludeSource)
-    prefix
-  }
+                                     excludeSource: Option[String]): String =
+    Scale.storedIndex(spark, "t29b_idx",
+      s"$SpanFormatVersion|$dir" + excludeSource.fold("")("!" + _),
+      Seq("spans"))(buildSpanIndex(spark, dir, _, excludeSource))
 
   /** T29b: [[t29WinnowDups]] as an INGEST against the stored span index
     * (same oracle — the union of stored + batch fingerprints is exactly
     * the full recompute's fingerprint set, because winnowing is
     * per-document). Per-ingest work:
     *
-    *  - winnow selection runs on the BATCH only (source = 'src0');
+    *  - winnow selection runs on the BATCH only ([[BatchSource]]);
     *  - the stored side's per-hash counts aggregate through the bucket
     *    layout (no exchange — asserted in WinnowPhashSpec);
     *  - the cross-doc gate is stored-counts ⊕ batch-counts (full outer
@@ -2064,7 +2013,7 @@ object LlmOps {
     * instead.
     */
   def t29bWinnowIngest(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = ensureSpanIndex(spark, dir)
+    val prefix = ensureSpanIndex(spark, dir, Some(BatchSource))
     val stored = spark.table(s"${prefix}_spans")
     // Verify text for BOTH sides comes from the full eligible corpus;
     // persisted because the batch selection and the verify join read it.
@@ -2074,7 +2023,7 @@ object LlmOps {
     // Pinned (r16, the t19 fix): `batch` feeds both the gate's count and
     // the union — unpinned, the batch winnow selection ran twice.
     val batch = PersistScope.persisted(winnowSelectChunked(
-      docs.filter(col("source") === "src0").select("doc_id", "text"),
+      docs.filter(col("source") === BatchSource).select("doc_id", "text"),
       SpanWindow, WinnowWindow)
       .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
     val storedCnt = stored.groupBy("hash").agg(count(lit(1)).as("nc"))
@@ -2097,15 +2046,15 @@ object LlmOps {
     * the WRITE half of the build-once story — batch-proportional ingest
     * — but every full-corpus answer still re-winnowed; this is the
     * consumer that never runs the selection at all). The index here
-    * covers the WHOLE corpus (excludeSource = none), built once per
+    * covers the WHOLE corpus (no excluded source), built once per
     * snapshot; the query is the cross-doc gate (aggregating the stored
     * side through its `hash` bucket layout, no exchange — locked in
-    * Round14Spec) plus the md5 byte-verify join, both
+    * SpanIndexSpec) plus the md5 byte-verify join, both
     * output-proportional. Same oracle as t29/t29b: reading stored
     * fingerprints is pure optimization, never a semantics change.
     */
   def t19bDupSpansIdx(spark: SparkSession, dir: String): DataFrame = {
-    val prefix = ensureSpanIndex(spark, dir, excludeSource = FullCorpusSource)
+    val prefix = ensureSpanIndex(spark, dir, None)
     val stored = spark.table(s"${prefix}_spans")
     // Byte-verify text still reads the corpus (the index stores only
     // (hash, doc_id, pos) — fingerprints, not text), joined on doc_id
@@ -2120,12 +2069,6 @@ object LlmOps {
       .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2)
   }
-
-  /** Sentinel "exclude nothing" source for whole-corpus index builds
-    * (no real source carries this name; the exclusion filter keeps
-    * every row).
-    */
-  private[graft] val FullCorpusSource = "__none__"
 
   /** T12: stopword selection from the corpus vocabulary — tokens whose
     * document frequency exceeds half the corpus ([[t7TokenFreq]]'s

@@ -52,16 +52,6 @@ object Multimodal {
         col("content").as("media"),
         lit("application/octet-stream").as("media_type"))
 
-  /** Documents with the media binary column attached (opaque-bytes
-    * form; [[ppmTable]] is the decodable form).
-    */
-  def mediaTable(spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(
-        col("doc_id"),
-        encode(col("text"), "UTF-8").as("media"),
-        lit("text/plain").as("media_type"))
-
   /** Documents rendered as REAL binary-PPM (P6) images: geometry derives
     * deterministically from the document (w = 1 + n_chars mod 16,
     * h = 1 + n_chars mod 12), pixel bytes are the text's leading

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-out join utilities — the two techniques the 100 TB posture
@@ -31,6 +31,51 @@ object Scale {
       .mode(SaveMode.Overwrite)
       .saveAsTable(table)
 
+  /** Build-if-absent gate shared by every stored index (the corpus band
+    * index, the label, span, IVF and both triangle indexes): returns the
+    * index's table prefix `family + "_" + md5(key).take(8)` and runs
+    * `build(prefix)` first when any `<prefix>_<table>` is missing.
+    *
+    * Contract:
+    *  - Corpora are immutable snapshots: an index is built once per
+    *    snapshot and probed many times. A corpus mutated in place needs
+    *    the snapshot-refresh rebuild; nothing here detects it.
+    *  - `key` holds the family's stored FORMAT version, the corpus dir
+    *    and the excluded batch source if there is one. A format change
+    *    bumps the version, so the gate sees a new name and rebuilds
+    *    instead of silently probing a stale-format index (probes would
+    *    stop colliding and return empty with no error).
+    *  - Every table gates the build: a crash between two writes would
+    *    otherwise leave one table present and the other missing for good.
+    *  - Builds write with `SaveMode.Overwrite` ([[writeBucketed]]), so
+    *    re-running one over a half-built index heals it.
+    *  - Bucketed builders size their bucket count to the session's
+    *    default parallelism: a bucketed table's scan and probe-join
+    *    parallelism IS its bucket count (see [[Graph.buildEdgeIndex]]).
+    */
+  def storedIndex(spark: SparkSession, family: String, key: String, tables: Seq[String])(
+      build: String => Unit): String = {
+    val prefix = family + "_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    if (tables.exists(t => !spark.catalog.tableExists(s"${prefix}_$t"))) build(prefix)
+    prefix
+  }
+
+  /** Sign-correct floor division SQL (Spark's `div` truncates toward
+    * zero, which disagrees with interval coverage on negative values —
+    * e.g. epoch offsets before 1970). Shared by [[rangeJoin]] and
+    * [[intervalJoin]] so the bucket arithmetic can never diverge.
+    */
+  private def floorDivExpr(c: String, width: Long): String =
+    s"(($c div ${width}L) - (CASE WHEN $c % ${width}L < 0 THEN 1 ELSE 0 END))"
+
+  /** Explode a half-open interval [lo, hi) to every width-`w` bucket it
+    * covers (last covered bucket is floor((hi-1)/w): hi is exclusive).
+    */
+  private def bucketExplode(df: DataFrame, lo: String, hi: String, w: Long): DataFrame =
+    df.withColumn("__bucket",
+      explode(expr(s"sequence(${floorDivExpr(lo, w)}, ${floorDivExpr(s"($hi - 1)", w)})")))
+
   /** Point-in-interval range join as a bucketed equi-join — the scale
     * path for joins whose ONLY predicate is a range containment
     * (`lo <= point < hi`). Naively planned, such a join is a
@@ -52,21 +97,6 @@ object Scale {
     * bound never match (the containment predicate is null-rejecting),
     * matching SQL inequality-join semantics.
     */
-  /** Sign-correct floor division SQL (Spark's `div` truncates toward
-    * zero, which disagrees with interval coverage on negative values —
-    * e.g. epoch offsets before 1970). Shared by [[rangeJoin]] and
-    * [[intervalJoin]] so the bucket arithmetic can never diverge.
-    */
-  private def floorDivExpr(c: String, width: Long): String =
-    s"(($c div ${width}L) - (CASE WHEN $c % ${width}L < 0 THEN 1 ELSE 0 END))"
-
-  /** Explode a half-open interval [lo, hi) to every width-`w` bucket it
-    * covers (last covered bucket is floor((hi-1)/w): hi is exclusive).
-    */
-  private def bucketExplode(df: DataFrame, lo: String, hi: String, w: Long): DataFrame =
-    df.withColumn("__bucket",
-      explode(expr(s"sequence(${floorDivExpr(lo, w)}, ${floorDivExpr(s"($hi - 1)", w)})")))
-
   def rangeJoin(points: DataFrame, pointCol: String,
                 ranges: DataFrame, loCol: String, hiCol: String,
                 bucketWidth: Long): DataFrame = {

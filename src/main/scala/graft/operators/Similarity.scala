@@ -204,16 +204,16 @@ object Similarity {
       .saveAsTable(s"${prefix}_lists")
   }
 
-  /** Build-if-absent gate, keyed on the corpus dir like d5b/d7b — the
-    * corpus is an immutable snapshot; a new snapshot is a new index.
+  /** Stored FORMAT version of the inverted lists, part of their key:
+    * bump when the embedding encoding, the pivots or the assignment
+    * rule change, so a stale on-disk index is never silently reused.
     */
-  private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String = {
-    val prefix = "ivf_idx_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    if (!spark.catalog.tableExists(s"${prefix}_lists"))
-      buildIvfIndex(spark, dir, prefix)
-    prefix
-  }
+  private[graft] val IvfFormatVersion = "v1"
+
+  /** The inverted lists' prefix, built on first use ([[Scale.storedIndex]]). */
+  private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String =
+    Scale.storedIndex(spark, "ivf_idx", s"$IvfFormatVersion|$dir", Seq("lists"))(
+      buildIvfIndex(spark, dir, _))
 
   /** [[simIvfTopk]] over the stored inverted lists: per-query work is the
     * probe ranking (queries × pivots, broadcast) plus an exact scan of

@@ -134,21 +134,21 @@ object Streaming {
     * (min over the same 60-bit seeded hashes — the r13 int64 signature).
     * The expressions are LlmOps.perRowMinExprs/bandKeyExprs, shared with
     * minhashBandsOf itself, so the stream side cannot silently drift
-    * from the stored corpus bands (Round13Spec locks the parity).
+    * from the stored corpus bands (LlmOpsSpec locks the parity).
     */
   def st14StreamNeardup(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.LlmOps
     val prefix = LlmOps.ensureCorpusIndex(spark, dir)
     // Shared with minhashBandsOf (single source of truth — the two
     // formulations drifting apart would silently stop stream/corpus
-    // band collisions; Round13Spec locks the parity).
+    // band collisions; LlmOpsSpec locks the parity).
     // The seeded mins run over the PRE-HASHED array `sa` (min over the
     // distinct set equals min over the shingle multiset), so the stream
     // side pays one md5 per shingle and eight multiply-shift HOFs —
     // the same r15 hash-bank shape as the batch side.
     val bandKeys = LlmOps.bandKeyExprs
     val incoming = docsStream(spark, dir)
-      .filter(col("source") === "src0")
+      .filter(col("source") === LlmOps.BatchSource)
       .select(col("doc_id").as("new_doc"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
       .select(col("new_doc"), expr(LlmOps.shingleArrayExpr("toks")).as("sh"))

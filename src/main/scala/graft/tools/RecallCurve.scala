@@ -29,7 +29,7 @@ object RecallCurve {
     val perDir = args.drop(1).map { dir =>
       // The STORED-index form (r13): the curve a production corpus
       // actually measures — against the partitioned inverted-list
-      // layout it serves queries from. Round13Spec proves it row-equal
+      // layout it serves queries from. StoredIndexSpec proves it row-equal
       // to the recompute form, so the published values are unchanged;
       // what changes is what the tool exercises (build + probe path).
       val ivf = rows(Similarity.simIvfRecallIdx(spark, dir))
@@ -42,7 +42,7 @@ object RecallCurve {
 
     val doc =
       s"""{
-         |  "what": "ANN tuning evidence: sim_ivf_recall_idx (recall@${Similarity.IvfTopK} vs probe count over the STORED partitioned inverted lists — the layout a production corpus serves queries from; values row-equal to the recompute form per Round13Spec; ${Similarity.IvfQueries} queries, ${Similarity.NumIvfPivots} lists; full-depth row = exhaustive scan, recall 1000 by construction) and sim_lsh_sweep (hyperplane signature width vs candidate volume and threshold-pair retention, anchored at the coarsest width; n_dropped_vecs counts vectors in over-cap coarse buckets — 0 on these corpora). Both are oracle-gated catalog queries; regenerate with: tools/run.sh graft.tools.RecallCurve ANN_RECALL.json <sfDir>...",
+         |  "what": "ANN tuning evidence: sim_ivf_recall_idx (recall@${Similarity.IvfTopK} vs probe count over the STORED partitioned inverted lists — the layout a production corpus serves queries from; values row-equal to the recompute form per StoredIndexSpec; ${Similarity.IvfQueries} queries, ${Similarity.NumIvfPivots} lists; full-depth row = exhaustive scan, recall 1000 by construction) and sim_lsh_sweep (hyperplane signature width vs candidate volume and threshold-pair retention, anchored at the coarsest width; n_dropped_vecs counts vectors in over-cap coarse buckets — 0 on these corpora). Both are oracle-gated catalog queries; regenerate with: tools/run.sh graft.tools.RecallCurve ANN_RECALL.json <sfDir>...",
          |  "defaults": {"ivf_probes": ${Similarity.IvfProbes}, "lsh_planes": ${Similarity.NumLshPlanes}, "lsh_threshold": ${Similarity.LshThreshold}},
          |  ${perDir.mkString(",\n  ")}
          |}

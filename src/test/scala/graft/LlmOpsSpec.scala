@@ -200,4 +200,53 @@ class LlmOpsSpec extends SparkTestBase {
     assert(b.exceptAll(a).count() === 0)
     PersistScope.releaseAll()
   }
+
+  test("per-row and aggregating minhash formulations produce identical bands") {
+    // st14's stream side computes the signature per row (array HOFs over
+    // the carried shingle array); minhashBandsOf computes it through a
+    // groupBy. The expressions are shared (LlmOps.perRowMinExprs /
+    // bandKeyExprs), but the parity of the two PLANS is the contract the
+    // stream gate rests on — a drift means stream docs silently stop
+    // colliding with stored corpus bands. Lock it on the real corpus.
+    import graft.operators.LlmOps
+    val docs = Tables.documents(spark, Sf)
+    // Both sides shingle through the SHARED LlmOps.shingleArrayExpr
+    // (advisor finding r13: an inline copy here let the shingle layer
+    // drift while this test still passed).
+    val aggregated = LlmOps.minhashBandsOf(
+      docs.selectExpr("doc_id", "split(text, ' ') AS toks")
+        .where("size(toks) >= 3")
+        .selectExpr("doc_id",
+          s"explode(${LlmOps.shingleArrayExpr("toks")}) AS shingle"))
+    val perRow = docs
+      .selectExpr("doc_id", "split(text, ' ') AS toks")
+      .where("size(toks) >= 3")
+      .selectExpr("doc_id", s"${LlmOps.shingleArrayExpr("toks")} AS sh")
+      // The r15 per-row contract takes the PRE-HASHED array (one
+      // hash60 per shingle, eight multiply-shift passes) — the same
+      // shape st14's stream side feeds it.
+      .selectExpr("doc_id",
+        s"transform(array_distinct(sh), x -> ${LlmOps.shingleHash60("x")}) AS sa")
+      .selectExpr("doc_id" +: LlmOps.perRowMinExprs("sa"): _*)
+      .selectExpr("doc_id",
+        s"posexplode(array(${LlmOps.bandKeyExprs.mkString(", ")})) AS (band, bkey)")
+    assert(aggregated.exceptAll(perRow).count() === 0)
+    assert(perRow.exceptAll(aggregated).count() === 0)
+    assert(perRow.count() > 0)
+  }
+
+  test("the minhash signature aggregate hash-aggregates (no SortAggregate)") {
+    // The r13 int64 signature exists exactly so this aggregate stops
+    // being a SortAggregate (min over md5 hex strings has no fixed-width
+    // buffer); lock the plan so a future hash-type change can't silently
+    // regress the dedup family's dominant operator.
+    import graft.operators.LlmOps
+    val d2 = LlmOps.d2DedupMinhash(spark, Sf)
+    d2.count()
+    val plan = d2.queryExecution.executedPlan.toString
+    assert(!plan.contains("SortAggregate"),
+      s"d2's plan should carry no SortAggregate; plan:\n${plan.take(4000)}")
+    assert(plan.contains("HashAggregate"))
+    PersistScope.releaseAll()
+  }
 }

@@ -33,8 +33,7 @@ class SpanIndexSpec extends SparkTestBase {
     // same key, so the stored side must scan bucketed with no Exchange
     // in front of the aggregate (the WinnowPhashSpec assertion, applied
     // to the read path).
-    val prefix = LlmOps.ensureSpanIndex(spark, Sf,
-      excludeSource = LlmOps.FullCorpusSource)
+    val prefix = LlmOps.ensureSpanIndex(spark, Sf, None)
     val gate = spark.table(s"${prefix}_spans")
       .groupBy("hash").agg(count(lit(1)).as("nd"))
     gate.count()
@@ -46,15 +45,14 @@ class SpanIndexSpec extends SparkTestBase {
   }
 
   test("the whole-corpus span index holds every source's fingerprints") {
-    // FullCorpusSource is a sentinel no real row carries — the exclusion
-    // filter must keep everything (a typo'd real source name here would
-    // silently shrink the index and t19b's oracle would catch it only as
-    // a row-count mismatch downstream; this pins the contract directly).
-    val prefix = LlmOps.ensureSpanIndex(spark, Sf,
-      excludeSource = LlmOps.FullCorpusSource)
+    // No excluded source means no exclusion filter at all — the index
+    // must keep everything (a dropped source here would silently shrink
+    // the index and t19b's oracle would catch it only as a row-count
+    // mismatch downstream; this pins the contract directly).
+    val prefix = LlmOps.ensureSpanIndex(spark, Sf, None)
     val storedDocs = spark.table(s"${prefix}_spans")
       .select("doc_id").distinct().count()
-    val batchPrefix = LlmOps.ensureSpanIndex(spark, Sf)
+    val batchPrefix = LlmOps.ensureSpanIndex(spark, Sf, Some(LlmOps.BatchSource))
     val corpusMinusBatchDocs = spark.table(s"${batchPrefix}_spans")
       .select("doc_id").distinct().count()
     assert(storedDocs > corpusMinusBatchDocs,

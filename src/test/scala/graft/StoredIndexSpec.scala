@@ -3,22 +3,68 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{LlmOps, Scale, Similarity}
 
-/** Round-13 additions: the materialized IVF inverted-list index
-  * (sim_ivf_idx / sim_ivf_recall_idx / sim_ivf_ingest).
+/** Stored indexes (the build-once, probe-many pattern): the shared
+  * build-if-absent gate ([[Scale.storedIndex]]), the IVF inverted-list
+  * index (sim_ivf_idx / sim_ivf_recall_idx / sim_ivf_ingest) and the
+  * triangle-ingest snapshot.
   *
   * The index contract is the d7b one — "pure optimization": every stored
   * form must return EXACTLY its recompute twin's rows, the lists table
   * must be laid out partitioned by pivot (the probe's pruning key), and
   * the ingest must touch only batch-proportional work.
   */
-class Round13Spec extends SparkTestBase {
+class StoredIndexSpec extends SparkTestBase {
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq === b.columns.toSeq)
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
+  }
+
+  test("the gate rebuilds a half-built corpus index; d5b_index_ingest rows are unchanged") {
+    def rows(): Seq[String] =
+      LlmOps.d5bIndexIngest(spark, Sf).collect().map(_.toString).toSeq.sorted
+    val before = rows()
+    assert(before.nonEmpty, "the fixture plants cross-source near-dups")
+    val prefix = LlmOps.ensureCorpusIndex(spark, Sf)
+    spark.sql(s"DROP TABLE ${prefix}_shingles")
+    assert(spark.catalog.tableExists(s"${prefix}_bands"))
+    assert(!spark.catalog.tableExists(s"${prefix}_shingles"))
+    // Bands alone must not satisfy the gate: the missing table rebuilds.
+    assert(LlmOps.ensureCorpusIndex(spark, Sf) === prefix)
+    assert(spark.catalog.tableExists(s"${prefix}_bands"))
+    assert(spark.catalog.tableExists(s"${prefix}_shingles"))
+    assert(rows() === before)
+  }
+
+  test("a second ensureLabelIndex call runs zero CC loops") {
+    val prefix = LlmOps.ensureLabelIndex(spark, Sf)
+    spark.sql(s"DROP TABLE ${prefix}_labels")
+    val before = LlmOps.ccRuns
+    assert(LlmOps.ensureLabelIndex(spark, Sf) === prefix)
+    assert(LlmOps.ccRuns - before === 1, "the call after the drop must build the labels")
+    assert(LlmOps.ensureLabelIndex(spark, Sf) === prefix)
+    assert(LlmOps.ccRuns - before === 1, "the second call must read the stored labels")
+    assert(spark.table(s"${prefix}_labels").count() > 0)
+  }
+
+  test("whole-corpus, batch-excluded and re-versioned indexes get distinct prefixes") {
+    val batch = Some(LlmOps.BatchSource)
+    val prefixes = Seq(
+      LlmOps.ensureSpanIndex(spark, Sf, None), LlmOps.ensureSpanIndex(spark, Sf, batch),
+      LlmOps.ensureLabelIndex(spark, Sf), LlmOps.ensureLabelIndex(spark, Sf, batch))
+    assert(prefixes.distinct.size === 4, s"prefixes collide: $prefixes")
+    // The format version is part of the key: a bumped version names a
+    // new index, and its missing table runs the build.
+    var built = Seq.empty[String]
+    def gate(version: String): String =
+      Scale.storedIndex(spark, "fmt_probe", s"$version|$Sf", Seq("t"))(p => built :+= p)
+    val (v1, v2) = (gate("v1"), gate("v2"))
+    assert(v1 !== v2)
+    assert(Seq(v1, v2).forall(p => p.startsWith("fmt_probe_") && p.length === 18))
+    assert(built === Seq(v1, v2))
   }
 
   test("sim_ivf_idx: the stored inverted lists equal the full recompute") {
@@ -105,55 +151,6 @@ class Round13Spec extends SparkTestBase {
     ingest.foreach { case (vec, piv) =>
       assert(stored(vec) === piv, s"vec $vec: ingest pivot $piv != stored ${stored(vec)}")
     }
-    PersistScope.releaseAll()
-  }
-
-  test("per-row and aggregating minhash formulations produce identical bands") {
-    // st14's stream side computes the signature per row (array HOFs over
-    // the carried shingle array); minhashBandsOf computes it through a
-    // groupBy. The expressions are shared (LlmOps.perRowMinExprs /
-    // bandKeyExprs), but the parity of the two PLANS is the contract the
-    // stream gate rests on — a drift means stream docs silently stop
-    // colliding with stored corpus bands. Lock it on the real corpus.
-    import graft.operators.LlmOps
-    val docs = Tables.documents(spark, Sf)
-    // Both sides shingle through the SHARED LlmOps.shingleArrayExpr
-    // (advisor finding r13: an inline copy here let the shingle layer
-    // drift while this test still passed).
-    val aggregated = LlmOps.minhashBandsOf(
-      docs.selectExpr("doc_id", "split(text, ' ') AS toks")
-        .where("size(toks) >= 3")
-        .selectExpr("doc_id",
-          s"explode(${LlmOps.shingleArrayExpr("toks")}) AS shingle"))
-    val perRow = docs
-      .selectExpr("doc_id", "split(text, ' ') AS toks")
-      .where("size(toks) >= 3")
-      .selectExpr("doc_id", s"${LlmOps.shingleArrayExpr("toks")} AS sh")
-      // The r15 per-row contract takes the PRE-HASHED array (one
-      // hash60 per shingle, eight multiply-shift passes) — the same
-      // shape st14's stream side feeds it.
-      .selectExpr("doc_id",
-        s"transform(array_distinct(sh), x -> ${LlmOps.shingleHash60("x")}) AS sa")
-      .selectExpr("doc_id" +: LlmOps.perRowMinExprs("sa"): _*)
-      .selectExpr("doc_id",
-        s"posexplode(array(${LlmOps.bandKeyExprs.mkString(", ")})) AS (band, bkey)")
-    assert(aggregated.exceptAll(perRow).count() === 0)
-    assert(perRow.exceptAll(aggregated).count() === 0)
-    assert(perRow.count() > 0)
-  }
-
-  test("the minhash signature aggregate hash-aggregates (no SortAggregate)") {
-    // The r13 int64 signature exists exactly so this aggregate stops
-    // being a SortAggregate (min over md5 hex strings has no fixed-width
-    // buffer); lock the plan so a future hash-type change can't silently
-    // regress the dedup family's dominant operator.
-    import graft.operators.LlmOps
-    val d2 = LlmOps.d2DedupMinhash(spark, Sf)
-    d2.count()
-    val plan = d2.queryExecution.executedPlan.toString
-    assert(!plan.contains("SortAggregate"),
-      s"d2's plan should carry no SortAggregate; plan:\n${plan.take(4000)}")
-    assert(plan.contains("HashAggregate"))
     PersistScope.releaseAll()
   }
 }

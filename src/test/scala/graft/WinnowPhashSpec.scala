@@ -153,8 +153,8 @@ class WinnowPhashSpec extends SparkTestBase {
 
   test("t29b: the stored span table aggregates through its bucket layout") {
     import org.apache.spark.sql.functions._
-    LlmOps.ensureSpanIndex(spark, Sf)
-    val stored = spark.table(s"${LlmOps.ensureSpanIndex(spark, Sf)}_spans")
+    val stored = spark.table(
+      s"${LlmOps.ensureSpanIndex(spark, Sf, Some(LlmOps.BatchSource))}_spans")
     val agged = stored.groupBy("hash").agg(count(lit(1)).as("nc"))
     agged.count()
     val plan = agged.queryExecution.executedPlan.toString
