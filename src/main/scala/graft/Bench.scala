@@ -166,13 +166,14 @@ object Bench {
     b.result()
   }
 
-  /** Run `names` untimed, releasing each one's pins and cache, then GC. */
+  /** Run `names` untimed, clearing the cache after each, then GC (which
+    * frees the pins of every dropped result).
+    */
   private def runUntimed(spark: org.apache.spark.sql.SparkSession,
                          sfDir: String, names: Seq[String]): Unit = {
     names.foreach { n =>
       try SparkEntry.queries.get(n).foreach(_(spark, sfDir).count())
       catch { case _: Throwable => () }
-      PersistScope.releaseAll()
       spark.catalog.clearCache()
     }
     System.gc()
@@ -195,9 +196,10 @@ object Bench {
   private[graft] final case class Rep(wallSec: Double, cpuSec: Double, rows: Long)
 
   /** The one timed rep Bench grades and tools.Profile reports: run the
-    * query and `count()` it inside the timed window, then release its
-    * PersistScope pins OUTSIDE the window, so a persist-heavy query's
-    * reading never includes unpinning its working set.
+    * query and `count()` it inside the timed window. The result is
+    * dropped on return; its pins are freed by the caller's next GC,
+    * outside the window, so a pin-heavy query's reading never includes
+    * unpinning its working set.
     */
   private[graft] def timedRep(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                               fn: (org.apache.spark.sql.SparkSession, String) =>
@@ -207,7 +209,6 @@ object Bench {
     val rows = fn(spark, sfDir).count()
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = if (c0 < 0) -1.0 else processCpuSec() - c0
-    PersistScope.releaseAll()
     Rep(wall, cpu, rows)
   }
 
@@ -249,10 +250,10 @@ object Bench {
         println(s"BENCHE $name ${msg.replace('\n', ' ').replace('\r', ' ')}")
       } finally {
         // Per-query isolation: clearCache drops persisted datasets and the
-        // untimed GC lets ContextCleaner release their blocks, shuffles and
-        // broadcasts NOW instead of inside a later query's timed window
-        // (measured as a 5-11× slowdown of joins after the d* family).
-        PersistScope.releaseAll()
+        // untimed GC lets ContextCleaner release the dropped result's
+        // pins, shuffles and broadcasts NOW instead of inside a later
+        // query's timed window (measured as a 5-11× slowdown of joins
+        // after the d* family).
         spark.catalog.clearCache()
         System.gc()
       }

@@ -1,64 +1,14 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
-/** Lifecycle registry for persisted query intermediates.
-  *
-  * The dedup/similarity family pins shared scans with `persist()` (both
-  * sides of a self-join, signature tables, band tables). The RESULT the
-  * query returns is lazy, so the operator itself cannot unpersist — the
-  * caller's action is what consumes the pinned blocks. Round-5 finding:
-  * nothing ever released them, so a long session running many queries
-  * accumulated tens of GB of dead blocks until LRU eviction (and on a
-  * large heap, until a multi-second mixed GC inside someone else's timed
-  * window).
-  *
-  * Contract: operators route query-path persists through [[persisted]]
-  * (or register a custom release thunk for storage that CacheManager
-  * does not track, e.g. localCheckpoint blocks); harnesses call
-  * [[releaseAll]] after each query's action. Releasing is idempotent and
-  * never throws — a thunk over an already-released block is a no-op.
+/** Compatibility shim: the process-global pin registry this object once
+  * held is gone. Operators pin intermediates with
+  * `org.apache.spark.sql.graftshim.PlanBridge.pin`, and a pin lives as long
+  * as a plan over it is reachable (ContextCleaner frees it after a GC), so
+  * there is nothing to drain. [[releaseAll]] stays only because the
+  * whole-job benchmark harness (`perfbench/`, which this build does not
+  * edit) still calls it after each operation.
   */
 object PersistScope {
-  private val thunks = scala.collection.mutable.Buffer[() => Unit]()
-
-  /** persist(df), remembering how to release it. */
-  def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    register(() => p.unpersist(false))
-    p
-  }
-
-  /** Remember a custom release action (checkpoint blocks, RDD storage). */
-  def register(release: () => Unit): Unit = synchronized { thunks += release }
-
-  /** Free the executor blocks behind a `localCheckpoint`ed DataFrame.
-    * `Dataset.unpersist` only uncaches CacheManager entries; a local
-    * checkpoint's storage belongs to the materialized RDD inside the
-    * resulting `LogicalRDD` leaf, so that RDD is what must be
-    * unpersisted. Matches only when the DataFrame's plan root IS the
-    * checkpoint leaf — a tree-wide traversal would also release
-    * checkpoints this plan merely READS (e.g. a loop's round-0 state
-    * derives from an adjacency checkpoint; releasing that mid-loop
-    * loses blocks a later round still needs). The DataFrame must not
-    * be used again afterwards (its lineage was truncated at the
-    * checkpoint). Shared by the d7 CC loop and PageRank's edge table.
-    */
-  def releaseCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Release everything registered since the last call. Call AFTER the
-    * query's action: plain persists recompute transparently if the plan
-    * is touched again, but checkpoint-backed registrations (d7's final
-    * labels) have truncated lineage — re-running a stale result handle
-    * after release fails rather than recomputes. One action per query
-    * result, then release, is the harness contract.
-    */
-  def releaseAll(): Unit = synchronized {
-    thunks.foreach(t => try t() catch { case _: Throwable => () })
-    thunks.clear()
-  }
+  /** No-op; see the object doc. */
+  def releaseAll(): Unit = ()
 }

@@ -47,10 +47,9 @@ object Verify {
         errors(name) = msg
         System.err.println(s"[verify] FAILED $name — $msg")
       } finally {
-        // Queries that persist() don't leak across: scoped release of
-        // registered intermediates (incl. checkpoint blocks CacheManager
-        // can't see), then the cache-table hammer for anything else.
-        PersistScope.releaseAll()
+        // A query's pins and checkpoint blocks live as long as its
+        // result, which is dropped here; the cache-table hammer covers
+        // anything a query cached by name.
         spark.catalog.clearCache()
       }
     }

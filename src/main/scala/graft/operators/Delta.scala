@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 
 import graft.Tables
 
@@ -63,7 +64,7 @@ object Delta {
     // perturbed snapshot, and (in scd2) the max-version lookup — the r16
     // scan audit counted 14 uncached orders scans in q_scd2_merge from
     // exactly this fan-out.
-    val old = graft.PersistScope.persisted(Tables.orders(spark, dir).select(
+    val old = PlanBridge.pin(Tables.orders(spark, dir).select(
       col("o_orderkey"),
       col("o_orderstatus").as("status"),
       expr("cast(round(o_totalprice * 100) as bigint)").as("cents")))
@@ -117,7 +118,7 @@ object Delta {
     // Pinned (r16): the classification feeds both the open-row split and
     // the successor build; unpinned, the md5 diff (and the full-outer
     // beneath it) ran twice.
-    val diff = graft.PersistScope.persisted(snapshotDiff(
+    val diff = PlanBridge.pin(snapshotDiff(
       open.select((keyCols ++ compareCols).map(col): _*), next, keyCols, compareCols))
     // Every open row classifies as unchanged / changed / removed
     // ('added' keys have no open row, so the inner join drops nothing).

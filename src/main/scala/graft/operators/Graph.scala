@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 
-import graft.{PersistScope, Tables}
+import graft.Tables
 
 /** Graph analytics over relational data — the second graph operator
   * family after [[LlmOps.connectedComponents]] (dedup resolution).
@@ -67,10 +68,9 @@ object Graph {
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
       .localCheckpoint(true)
-    PersistScope.register(() => PersistScope.releaseCheckpointBlocks(edges))
     // deg is referenced once per iteration plus the node-count subtree;
-    // persist so the degree aggregate over the edge blocks runs once.
-    val deg = PersistScope.persisted(
+    // pin so the degree aggregate over the edge blocks runs once.
+    val deg = PlanBridge.pin(
       edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
     val nDf = deg.agg(count(lit(1)).as("n"))
     var ranks = deg.crossJoin(broadcast(nDf))
@@ -107,19 +107,21 @@ object Graph {
     // Materialize the bipartite purchase edges ONCE: a recursive CTE
     // re-evaluates its inlined subqueries every iteration, so inlining
     // the orders⋈lineitem build here would re-run that join per hop
-    // (round-6/7 finding). A persisted view makes each hop an
+    // (round-6/7 finding). A pinned view makes each hop an
     // InMemoryRelation probe instead; at 100 TB this is "build the edge
     // table as a real table, recurse over it", which is how any
-    // production closure job is shaped anyway.
+    // production closure job is shaped anyway. The view is dropped once
+    // the query is resolved (its analyzed plan already holds the pin),
+    // so the pin lives as long as the returned DataFrame, not the view.
     val o = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
     val l = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey"))
     val pairs = o.join(l, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey"), col("l_partkey"))
-    val edges = PersistScope.persisted(
+    val edges = PlanBridge.pin(
       pairs.select((col("o_custkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
         .union(pairs.select((col("l_partkey") * 2 + 1).as("src"), (col("o_custkey") * 2).as("dst"))))
     edges.createOrReplaceTempView("rec_edges")
-    spark.sql(
+    val closure = spark.sql(
       """WITH RECURSIVE r(node, hop) AS (
         |  SELECT CAST(4 AS BIGINT) AS node, 0 AS hop
         |  UNION ALL
@@ -127,6 +129,45 @@ object Graph {
         |  JOIN rec_edges e ON e.src = r.node
         |  WHERE r.hop < 2)
         |SELECT node, CAST(min(hop) AS BIGINT) AS hops FROM r GROUP BY node""".stripMargin)
+    spark.catalog.dropTempView("rec_edges")
+    closure
+  }
+
+  /** Shared pair-build + degree + orientation prefix for the three
+    * triangle forms and the edge-index build (reviewer finding: this
+    * pipeline used to exist as three verbatim copies, so an edge-build
+    * fix had to land in three places). Returns (e0, deg, o): distinct
+    * undirected edges, per-node degrees, and the (degree, id)-oriented
+    * edge stream carrying d_dst. e0 and deg come back pinned (each
+    * is read by several consumers in every caller); o's caching is the
+    * caller's choice — the wedge join reads it three times (pin),
+    * the index build and adjacency fold read it once or twice (don't).
+    * The e0/deg pins pay off even for a caller that consumes `o`
+    * exactly once (advisor question): `o`'s OWN plan references e0 six
+    * times (twice through the symmetrized union, twice through each deg
+    * join's union) and deg twice, so without the pins a single
+    * `o.count()` re-runs the lineitem self-join ~6×.
+    */
+  private def orientedEdges(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame) =
+    orientedEdgesOf(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")))
+
+  private def orientedEdgesOf(li: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val e0 = PlanBridge.pin(
+      li.as("a").join(li.as("b"), Seq("l_orderkey"))
+        .filter(col("a.l_partkey") < col("b.l_partkey"))
+        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
+        .distinct())
+    val e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
+    val deg = PlanBridge.pin(
+      e.groupBy(col("u").as("node")).agg(count(lit(1)).as("d")))
+    val o = e.join(deg.select(col("node").as("u"), col("d").as("d_u")), "u")
+      .join(deg.select(col("node").as("v"), col("d").as("d_v")), "v")
+      .filter(col("d_u") < col("d_v") ||
+        (col("d_u") === col("d_v") && col("u") < col("v")))
+      .select(col("u").as("src"), col("v").as("dst"), col("d_v").as("d_dst"))
+    (e0, deg, o)
   }
 
   /** Triangle counting over the part co-purchase graph (parts are
@@ -144,43 +185,6 @@ object Graph {
     * lines-per-order², single-digit here), never global. Each triangle
     * {a,b,c} is counted exactly once: at its (degree, id)-minimal vertex.
     */
-  /** Shared pair-build + degree + orientation prefix for the three
-    * triangle forms and the edge-index build (reviewer finding: this
-    * pipeline used to exist as three verbatim copies, so an edge-build
-    * fix had to land in three places). Returns (e0, deg, o): distinct
-    * undirected edges, per-node degrees, and the (degree, id)-oriented
-    * edge stream carrying d_dst. e0 and deg come back persisted (each
-    * is read by several consumers in every caller); o's caching is the
-    * caller's choice — the wedge join reads it three times (persist),
-    * the index build and adjacency fold read it once or twice (don't).
-    * The e0/deg persists pay off even for a caller that consumes `o`
-    * exactly once (advisor question): `o`'s OWN plan references e0 six
-    * times (twice through the symmetrized union, twice through each deg
-    * join's union) and deg twice, so without the pins a single
-    * `o.count()` re-runs the lineitem self-join ~6×.
-    */
-  private def orientedEdges(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    orientedEdgesOf(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")))
-
-  private def orientedEdgesOf(li: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val e0 = PersistScope.persisted(
-      li.as("a").join(li.as("b"), Seq("l_orderkey"))
-        .filter(col("a.l_partkey") < col("b.l_partkey"))
-        .select(col("a.l_partkey").as("u"), col("b.l_partkey").as("v"))
-        .distinct())
-    val e = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-    val deg = PersistScope.persisted(
-      e.groupBy(col("u").as("node")).agg(count(lit(1)).as("d")))
-    val o = e.join(deg.select(col("node").as("u"), col("d").as("d_u")), "u")
-      .join(deg.select(col("node").as("v"), col("d").as("d_v")), "v")
-      .filter(col("d_u") < col("d_v") ||
-        (col("d_u") === col("d_v") && col("u") < col("v")))
-      .select(col("u").as("src"), col("v").as("dst"), col("d_v").as("d_dst"))
-    (e0, deg, o)
-  }
-
   def qTriangles(spark: SparkSession, dir: String): DataFrame = {
     // The edge and oriented-edge tables are each read several times
     // downstream; pin them so the lineitem self-join runs ONCE (the
@@ -190,7 +194,7 @@ object Graph {
     // shuffle_hash because sort-merge would SORT the 41M-wedge stream,
     // measured 25 s vs 8.5 s).
     val (e0, deg, o0) = orientedEdges(spark, dir)
-    val o = PersistScope.persisted(o0)
+    val o = PlanBridge.pin(o0)
     val wedgeClosed = o.as("o1")
       .join(o.as("o2"), col("o1.src") === col("o2.src") &&
         (col("o1.d_dst") < col("o2.d_dst") ||
@@ -220,9 +224,10 @@ object Graph {
     * the same rule, bigger number. Every stored index follows it.
     */
   def buildEdgeIndex(spark: SparkSession, dir: String, prefix: String): Unit = {
-    val (_, _, o) = orientedEdges(spark, dir)
+    val (e0, deg, o) = orientedEdges(spark, dir)
     Scale.writeBucketed(o, s"${prefix}_edges", "src", spark.sparkContext.defaultParallelism)
-    PersistScope.releaseAll()
+    PlanBridge.release(e0)
+    PlanBridge.release(deg)
   }
 
   /** Stored FORMAT version of both triangle indexes ([[ensureEdgeIndex]],
@@ -282,7 +287,7 @@ object Graph {
     // Out-neighbor arrays straight off the bucketed layout: the groupBy
     // key IS the bucket column, so no exchange precedes the aggregate,
     // and its output keeps that partitioning for the src attach join.
-    val adj = PersistScope.persisted(
+    val adj = PlanBridge.pin(
       o.groupBy(col("src").as("node"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
     val perEdge = o
@@ -356,7 +361,8 @@ object Graph {
       .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
       .write.format("parquet").mode(org.apache.spark.sql.SaveMode.Overwrite)
       .saveAsTable(s"${prefix}_stats")
-    PersistScope.releaseAll()
+    PlanBridge.release(e0)
+    PlanBridge.release(deg)
   }
 
   /** The ingest snapshot's prefix, built on first use ([[Scale.storedIndex]]). */
@@ -414,11 +420,11 @@ object Graph {
         when(smallerU, col("v")).otherwise(col("u")).as("dst"))
     // Only genuinely NEW edges count (a batch order can re-ship a pair
     // the corpus already has) — read several times below, so pinned.
-    val newE = PersistScope.persisted(
+    val newE = PlanBridge.pin(
       oriented.join(edges, Seq("src", "dst"), "left_anti"))
     // Batch-side adjacency: S = sources of new edges (batch-sized, so
     // its joins below broadcast).
-    val adjNew = PersistScope.persisted(
+    val adjNew = PlanBridge.pin(
       newE.groupBy(col("src").as("node"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs_new")))
     // Attach stored and FULL (= stored ∪ new, merged sorted) adjacency
@@ -499,7 +505,7 @@ object Graph {
     // Oriented out-neighbor lists, sorted for the merge-count contract
     // (edges are distinct by construction, so so are the elements).
     // Persisted: read twice (once per attach join).
-    val adj = PersistScope.persisted(
+    val adj = PlanBridge.pin(
       o.groupBy(col("src").as("node"))
         .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
     val perEdge = o

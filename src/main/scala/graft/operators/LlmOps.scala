@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 
-import graft.{PersistScope, Tables}
+import graft.Tables
 
 /** LLM-training-data pipeline operators over the `documents` corpus:
   * deduplication (exact, MinHash/LSH, SimHash, n-gram Jaccard), text
@@ -449,14 +450,29 @@ object LlmOps {
     * ~linear while recall for true near-dups (J close to 1) stays high.
     */
   def d2DedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    d2DedupMinhashOf(shingleRows(spark, dir))
+    d2DedupMinhashOf(shingled(shingleRows(spark, dir)))
+
+  /** A corpus's shingle rows and their distinct (doc_id, shingle) set,
+    * both pinned: the tokenized corpus every shingle consumer of one
+    * query reads. The shingle scan (tokenize + window) feeds d2's band
+    * table and its verify set, so it runs once per query, not once per
+    * derived table (round-2 finding: the dedup family's dominant shared
+    * cost); a composed query hands the same pair to t11
+    * ([[curationNeardupManifest]]).
+    */
+  private[graft] final case class Shingled(rows: DataFrame, set: DataFrame)
+
+  private[graft] def shingled(rows: DataFrame): Shingled = {
+    val pinned = PlanBridge.pin(rows)
+    Shingled(pinned, PlanBridge.pin(pinned.distinct()))
+  }
 
   /** [[d2DedupMinhash]] over an arbitrary shingle-row table — the seam
     * the label-index build ([[buildLabelIndex]]) and the incremental
     * label ingest ([[d7cResolveIngest]]'s batch-internal edges) use to
     * run the same oracle-checked pipeline on a document SUBSET.
-    */
-  /** `keepZeroOverlap = false` (r14, the ≥-threshold consumers' form):
+    *
+    * `keepZeroOverlap = false` (r14, the ≥-threshold consumers' form):
     * an i = 0 candidate pair can never pass any positive Jaccard
     * threshold, so d7/d7c edge generation takes the INNER verify join —
     * the candidate set is then consumed exactly once (by the
@@ -465,20 +481,16 @@ object LlmOps {
     * its output contract includes the guaranteed-but-disjoint
     * candidates at jaccard 0 (and its oracle states them).
     */
-  private[graft] def d2DedupMinhashOf(shingles0: DataFrame,
+  private[graft] def d2DedupMinhashOf(sh: Shingled,
                                       keepZeroOverlap: Boolean = true): DataFrame = {
     // The bands and shingle-set tables are each used on BOTH sides of a
     // self-join; exchange reuse does not fire across the renamed join
     // branches (verified in the physical plan), so each would compute
-    // twice. persist() pins them — exactly the "materialize the
-    // signature table" step a production-scale dedup run performs. Both
-    // are tiny relative to the corpus (docs × bands rows; docs rows).
-    // The shingle scan itself (tokenize + window) feeds BOTH the band
-    // and the set tables — persist it too so the corpus is tokenized
-    // once per query, not once per derived table (round-2 finding: the
-    // dedup family's dominant shared cost).
-    val shingles = PersistScope.persisted(shingles0)
-    // Persist the UNCAPPED band table too: capBandBuckets reads its
+    // twice. Pinning them is exactly the "materialize the signature
+    // table" step a production-scale dedup run performs. Both are tiny
+    // relative to the corpus (docs × bands rows; docs rows).
+    val shingles = sh.rows
+    // Pin the UNCAPPED band table too: capBandBuckets reads its
     // argument on both sides (band rows + the bucket-size aggregate),
     // and with only the capped OUTPUT cached the signature aggregation
     // executed twice per materialization (r11 plan read: two full
@@ -486,8 +498,8 @@ object LlmOps {
     // 30× rows as a min(string) SortAggregate; cheaper since the r13
     // int64 signature made it a HashAggregate, but the 8-md5s-per-
     // shingle scan beneath it still dominates and must run once).
-    val rawBands = PersistScope.persisted(minhashBandsOf(shingles))
-    val bands = PersistScope.persisted(capBandBuckets(rawBands))
+    val rawBands = PlanBridge.pin(minhashBandsOf(shingles))
+    val bands = PlanBridge.pin(capBandBuckets(rawBands))
     val bandsA = bands.toDF("doc_a", "band_a", "bkey_a")
     val bandsB = bands.toDF("doc_b", "band_b", "bkey_b")
     // Candidates feed both the intersection build and the final
@@ -499,7 +511,7 @@ object LlmOps {
       .select("doc_a", "doc_b")
       .distinct()
     val candidates =
-      if (keepZeroOverlap) PersistScope.persisted(candidates0) else candidates0
+      if (keepZeroOverlap) PlanBridge.pin(candidates0) else candidates0
     // Exact-Jaccard verify, RELATIONALLY (the d4/d9 lesson, applied here
     // in round 9): per-pair array_intersect over collected shingle sets
     // is interpreted per row and scales with |candidates|·|set| — the
@@ -511,7 +523,7 @@ object LlmOps {
     // codegen, the shape that survives 100 TB. Values are identical
     // (set sizes from distinct rows == collect_set sizes), and the left
     // join + coalesce keeps the guaranteed-but-cheap i=0 case exact.
-    val toks = PersistScope.persisted(shingles.distinct())
+    val toks = sh.set
     val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = candidates
       .join(toks.toDF("doc_a", "shingle"), "doc_a")
@@ -577,7 +589,7 @@ object LlmOps {
     * banded-join scale shape as [[d2DedupMinhash]] — never all-pairs.
     */
   def d6SimhashNeardup(spark: SparkSession, dir: String): DataFrame = {
-    val sig = PersistScope.persisted(d3Simhash(spark, dir))
+    val sig = PlanBridge.pin(d3Simhash(spark, dir))
     val candidates = d6Candidates(d6Bands(sig))
     candidates
       .join(sig.toDF("doc_a", "sha"), "doc_a")
@@ -650,7 +662,7 @@ object LlmOps {
     // the same collisions in both engines and output equality holds by
     // construction, not by an injectivity assumption.
     // Guide §2.3 "narrower types / shuffle fewer bytes".
-    val raw = PersistScope.persisted(
+    val raw = PlanBridge.pin(
       shingleRows(spark, dir)
         .select(col("doc_id"), expr(shingleHash60("shingle")).as("shingle"))
         .distinct().join(meta, "doc_id"))
@@ -666,7 +678,7 @@ object LlmOps {
     // 25/5000 at sf0.1). Integer arithmetic both engines.
     val nDocs = broadcast(Tables.documents(spark, dir).agg(count("*").as("n_docs")))
     val dfs = raw.groupBy("shingle").agg(count("*").as("df"))
-    val rows = PersistScope.persisted(
+    val rows = PlanBridge.pin(
       raw.join(dfs, "shingle").crossJoin(nDocs)
         .filter(col("df") * lit(D4DfDropDiv) <= col("n_docs"))
         .select("doc_id", "shingle", "source", "len_bucket"))
@@ -703,8 +715,8 @@ object LlmOps {
     */
   def d5DedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val src = Tables.documents(spark, dir).select(col("doc_id"), col("source"))
-    val shingles = PersistScope.persisted(shingleRows(spark, dir))
-    val bands = PersistScope.persisted(minhashBandsOf(shingles).join(src, "doc_id"))
+    val shingles = PlanBridge.pin(shingleRows(spark, dir))
+    val bands = PlanBridge.pin(minhashBandsOf(shingles).join(src, "doc_id"))
     val newBands = bands.filter(col("source") === BatchSource)
       .select(col("doc_id").as("new_doc"), col("band").as("band_n"), col("bkey").as("bkey_n"))
     // Corpus-side band-skew cap (same contract as d2/d6): a hot CORPUS
@@ -718,7 +730,7 @@ object LlmOps {
       .join(corpusBands, col("band_n") === col("band") && col("bkey_n") === col("bkey"))
       .select("new_doc", "existing_doc")
       .distinct()
-    val sh = PersistScope.persisted(docShinglesOf(shingles, "doc_id", "sset"))
+    val sh = PlanBridge.pin(docShinglesOf(shingles, "doc_id", "sset"))
     candidates
       .join(sh.toDF("new_doc", "sa"), "new_doc")
       .join(sh.toDF("existing_doc", "sb"), "existing_doc")
@@ -750,19 +762,20 @@ object LlmOps {
   def buildCorpusIndex(spark: SparkSession, dir: String, prefix: String): Unit = {
     val buckets = spark.sparkContext.defaultParallelism
     val corpusDocs = Tables.documentsSpread(spark, dir).filter(col("source") =!= BatchSource)
-    val shingles = shingleRowsOf(corpusDocs).persist()
+    val shingles = PlanBridge.pin(shingleRowsOf(corpusDocs))
     // Cap applied at INDEX BUILD time: over-cap corpus buckets never
     // enter the stored band table, so every future ingest inherits the
     // skew guard for free (and the cap is amortized like the index).
-    // Persisted for the same two-sided capBandBuckets read as in d2 —
+    // Pinned for the same two-sided capBandBuckets read as in d2 —
     // without it the signature aggregate (and the 8-md5 shingle scan
-    // beneath it) runs twice in the build.
-    val rawBands = minhashBandsOf(shingles).persist()
+    // beneath it) runs twice in the build. Both pins are dead once their
+    // eager writes return, so they are released then, not at a GC.
+    val rawBands = PlanBridge.pin(minhashBandsOf(shingles))
     Scale.writeBucketed(capBandBuckets(rawBands),
       s"${prefix}_bands", "bkey", buckets)
-    rawBands.unpersist()
+    PlanBridge.release(rawBands)
     Scale.writeBucketed(docShinglesOf(shingles, "doc_id", "sset"), s"${prefix}_shingles", "doc_id", buckets)
-    shingles.unpersist()
+    PlanBridge.release(shingles)
   }
 
   /** Incremental ingest against a [[buildCorpusIndex]] snapshot: shingle
@@ -775,14 +788,11 @@ object LlmOps {
     */
   def d5IncrementalAgainstIndex(spark: SparkSession, dir: String, prefix: String): DataFrame = {
     val batchDocs = Tables.documentsSpread(spark, dir).filter(col("source") === BatchSource)
-    // PersistScope-pinned (r16 — was deliberately unpersisted after an
-    // advisor finding about a bare .persist() outliving the query; the
-    // PersistScope registry is exactly the lifecycle answer, and every
-    // harness releases it per query): the band probe and the verify-set
-    // aggregate below both read the batch shingles, so the pin halves
-    // the batch tokenize+md5 work. Work stays ∝ batch either way — the
-    // corpus side is the materialized index.
-    val batchShingles = PersistScope.persisted(shingleRowsOf(batchDocs))
+    // Pinned for the life of the returned plan (r16): the band probe
+    // and the verify-set aggregate below both read the batch shingles,
+    // so the pin halves the batch tokenize+md5 work. Work stays ∝ batch
+    // either way — the corpus side is the materialized index.
+    val batchShingles = PlanBridge.pin(shingleRowsOf(batchDocs))
     d5IngestOf(spark, prefix, batchShingles)
   }
 
@@ -859,8 +869,10 @@ object LlmOps {
     * Output: (doc_id, canonical_id) for EVERY document — singletons map
     * to themselves. Deterministic: min over an unordered neighbor set.
     */
-  def d7DedupResolve(spark: SparkSession, dir: String): DataFrame =
-    d7ResolveOf(spark, Tables.documentsSpread(spark, dir))
+  def d7DedupResolve(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsSpread(spark, dir)
+    d7ResolveOf(spark, docs, shingled(shingleRowsOf(docs)))
+  }
 
   /** [[d7DedupResolve]] over an arbitrary document table — the seam the
     * materialized label index builds through ([[buildLabelIndex]] runs it
@@ -868,13 +880,14 @@ object LlmOps {
     * the fixture-parallelism spread where the caller wants it (a filter
     * of a spread scan preserves the layout).
     */
-  private[graft] def d7ResolveOf(spark: SparkSession, docs: DataFrame): DataFrame = {
-    // No persist on the edge list: connectedComponents eagerly
+  private[graft] def d7ResolveOf(spark: SparkSession, docs: DataFrame,
+                                 sh: Shingled): DataFrame = {
+    // No pin on the edge list: connectedComponents eagerly
     // localCheckpoints it as its first act, so the candidate pipeline
     // runs exactly once either way and a cache layer would only add a
     // write it never reads back (r11 — the persist predated the
     // edge-level checkpoint).
-    val edges = d2DedupMinhashOf(shingleRowsOf(docs), keepZeroOverlap = false)
+    val edges = d2DedupMinhashOf(sh, keepZeroOverlap = false)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("doc_a"), col("doc_b"))
     val identity = docs
@@ -905,6 +918,14 @@ object LlmOps {
     * silently returning (round-2 finding).
     */
   val MaxResolveRounds = 20
+
+  /** Test instrumentation (single-session, like
+    * [[graft.Tables.lastRegisterFailures]]): how many times the CC loop
+    * has run. Lets a spec assert a COMPOSED pipeline shares one
+    * resolution pass instead of re-running candidate generation + CC per
+    * consumer — the d7-inside-d12 double-execution the bench exposes.
+    */
+  private[graft] var ccRuns: Int = 0
 
   /** Min-label connected components over an undirected edge list — the
     * distributed CC core of [[d7DedupResolve]], exposed so a spec can
@@ -942,14 +963,6 @@ object LlmOps {
     * Returns (labels: (doc_id, canonical_id) for every node with ≥1 edge,
     * converged: whether a fixpoint was reached within `maxRounds`).
     */
-  /** Test instrumentation (single-session, like
-    * [[graft.Tables.lastRegisterFailures]]): how many times the CC loop
-    * has run. Lets a spec assert a COMPOSED pipeline shares one
-    * resolution pass instead of re-running candidate generation + CC per
-    * consumer — the d7-inside-d12 double-execution the bench exposes.
-    */
-  private[graft] var ccRuns: Int = 0
-
   def connectedComponents(edges: DataFrame, maxRounds: Int): (DataFrame, Boolean) = {
     ccRuns += 1
     // Materialize the incoming edge list ONCE (eager localCheckpoint):
@@ -984,32 +997,19 @@ object LlmOps {
     // [see scaladoc numbers in SURVEY 7.7]). Same shape a cluster run
     // wants: partition the static side of an iterative join once,
     // stream the evolving side past it.
-    val adj = sym
+    val adj = PlanBridge.pin(sym
       .union(sym.select(col("doc_a"), col("doc_a").as("doc_b")).distinct())
       .repartition(col("doc_b"))
-      .sortWithinPartitions("doc_b")
-      .persist()
-    var labels: DataFrame = adj.filter(col("doc_a") === col("doc_b"))
-      .select(col("doc_a").as("doc_id"), col("doc_a").as("canonical_id"))
-      .persist()
+      .sortWithinPartitions("doc_b"))
+    var labels: DataFrame = PlanBridge.pin(adj.filter(col("doc_a") === col("doc_b"))
+      .select(col("doc_a").as("doc_id"), col("doc_a").as("canonical_id")))
     var converged = false
     var rounds = 0
-    // Base-storage release is idempotent and shared by every exit path
-    // (advisor finding: with maxRounds == 0, or an exception mid-loop,
-    // the eager `flat` checkpoint and the persisted `adj` used to leak
-    // for the session's lifetime with nothing registered to free them).
-    var baseReleased = false
-    def releaseBase(): Unit = if (!baseReleased) {
-      baseReleased = true
-      adj.unpersist()
-      releaseCheckpointBlocks(flat)
-    }
     // The checkpoint-ROOTED frame backing the current `labels` view —
     // the handle storage release must use (labels itself is a projection
-    // or jump-join OVER the checkpoint, which releaseCheckpointBlocks
+    // or jump-join OVER the checkpoint, which PlanBridge.release
     // deliberately does not traverse). Null until the first round.
     var steppedRoot: DataFrame = null
-    try {
     while (!converged && rounds < maxRounds) {
       // One join: every (doc_a, doc_b) edge pulls doc_b's label; the
       // self-loop makes min() = least(own, neighbor min) and prev = the
@@ -1057,50 +1057,26 @@ object LlmOps {
           stepped
             .join(stepped.select(col("doc_a").as("nmin"), col("nmin").as("jumped")), "nmin")
             .select(col("doc_a").as("doc_id"), col("jumped").as("canonical_id"))
-      // Release the superseded round's storage NOW (advisor finding:
-      // checkpoint blocks otherwise accumulate for the session's
-      // lifetime). unpersist() handles the cached round-0 labels;
-      // releaseCheckpointBlocks the checkpoint ROOT behind rounds ≥ 1.
-      labels.unpersist()
-      if (steppedRoot != null) releaseCheckpointBlocks(steppedRoot)
+      // Release the superseded round's storage NOW rather than at the
+      // next GC: the pinned round-0 labels, then the checkpoint ROOT
+      // behind rounds ≥ 1 (a long loop would otherwise hold every
+      // round's blocks until the collector runs).
+      PlanBridge.release(if (steppedRoot != null) steppedRoot else labels)
       steppedRoot = stepped
       labels = next
       rounds += 1
     }
-    } catch { case t: Throwable =>
-      // Abnormal exit: free the round-in-flight storage too — the caller
-      // never sees it, so nothing else ever would.
-      releaseBase()
-      labels.unpersist(false)
-      if (steppedRoot != null) releaseCheckpointBlocks(steppedRoot)
-      throw t
-    }
     // After ≥1 round the surviving labels are checkpoint-backed and no
     // longer reference the adjacency — its cache, and the flat edge
-    // list's checkpoint blocks beneath it, can go too. (rounds == 0 only
-    // under maxRounds == 0, where the returned labels still read adj —
-    // release it with the query's other pinned intermediates instead.)
-    if (rounds > 0) releaseBase()
-    else PersistScope.register { () => releaseBase() }
-    // The FINAL labels' storage (round-0 cache or the last round's
-    // checkpoint blocks) is still referenced by the result the caller
-    // will consume — release it with the query's other pinned
-    // intermediates, not here. The release handle must be the
-    // checkpoint-ROOTED df, not the projection returned to the caller.
-    val finalLabels = labels
-    val finalRoot = steppedRoot
-    PersistScope.register { () =>
-      finalLabels.unpersist(false)
-      if (finalRoot != null) releaseCheckpointBlocks(finalRoot)
+    // list's checkpoint blocks beneath it, can go now. Every other pin
+    // here (the final labels' storage, or adj itself when maxRounds == 0
+    // or the loop throws) lives as long as a plan over it is reachable.
+    if (rounds > 0) {
+      PlanBridge.release(adj)
+      PlanBridge.release(flat)
     }
     (labels.select(col("doc_id"), col("canonical_id")), converged)
   }
-
-  /** See [[PersistScope.releaseCheckpointBlocks]] — shared helper,
-    * aliased for the loop code below.
-    */
-  private def releaseCheckpointBlocks(df: DataFrame): Unit =
-    PersistScope.releaseCheckpointBlocks(df)
 
   /** D12: quality-aware dedup resolution — the step production curation
     * actually runs after [[d7DedupResolve]] groups near-dups: elect the
@@ -1176,7 +1152,7 @@ object LlmOps {
     * CC loop behind it run once).
     */
   def d12From(labeled0: DataFrame): DataFrame = {
-    val labeled = PersistScope.persisted(labeled0)
+    val labeled = PlanBridge.pin(labeled0)
     val winners = labeled
       .groupBy("canonical_id")
       .agg(max(struct(col("quality_milli"), (-col("doc_id")).as("neg_doc"))).as("best"))
@@ -1209,7 +1185,8 @@ object LlmOps {
                       excludeSource: Option[String]): Unit = {
     val docs = excludeSource.foldLeft(Tables.documentsSpread(spark, dir))(
       (d, s) => d.filter(col("source") =!= s))
-    Scale.writeBucketed(d7ResolveOf(spark, docs), s"${prefix}_labels", "doc_id",
+    Scale.writeBucketed(d7ResolveOf(spark, docs, shingled(shingleRowsOf(docs))),
+      s"${prefix}_labels", "doc_id",
       spark.sparkContext.defaultParallelism)
   }
 
@@ -1288,11 +1265,11 @@ object LlmOps {
     // composed ingest used to re-tokenize and re-md5 the batch ~3×:
     // twice inside the unpinned d5 probe, once more for the internal
     // edges; interleaved A/B at sf0.1: 3.03 → 2.91 s median).
-    val batchShingles = PersistScope.persisted(shingleRowsOf(batchDocs))
+    val batchShingles = PlanBridge.pin(shingleRowsOf(batchDocs))
     val batchCorpus = d5IngestOf(spark, bandPrefix, batchShingles)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("new_doc").as("doc_a"), col("existing_doc").as("doc_b"))
-    val batchInternal = d2DedupMinhashOf(batchShingles, keepZeroOverlap = false)
+    val batchInternal = d2DedupMinhashOf(shingled(batchShingles), keepZeroOverlap = false)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("doc_a"), col("doc_b"))
     // Contract corpus endpoints to their stored representative (3.);
@@ -1372,14 +1349,6 @@ object LlmOps {
         count("*").as("tf"),
         countDistinct("doc_id").as("df"))
 
-  /** T8: deterministic train/val/test split — hash-mod bucketing, the
-    * reproducible-split primitive (seeded RNG sampling is engine- and
-    * partitioning-dependent; a content-addressed hash split gives the
-    * same assignment on any engine, any cluster size, any rerun, and
-    * stays stable when the corpus is re-partitioned or appended to).
-    * Bucket = first two md5 nibbles of the doc id (0-255) mod 100;
-    * split 90/5/5. Map-only, no shuffle, no RNG.
-    */
   /** Deterministic doc bucket in [0, 100): the first FOUR md5 nibbles
     * (16 bits) mod 100. Two nibbles (8 bits) had 256 % 100 = 56 heavy
     * buckets — a 3/256-vs-2/256 modulo bias that skewed the documented
@@ -1395,6 +1364,14 @@ object LlmOps {
 
   private def docBucketExpr: String = bucketExpr("doc_id")
 
+  /** T8: deterministic train/val/test split — hash-mod bucketing, the
+    * reproducible-split primitive (seeded RNG sampling is engine- and
+    * partitioning-dependent; a content-addressed hash split gives the
+    * same assignment on any engine, any cluster size, any rerun, and
+    * stays stable when the corpus is re-partitioned or appended to).
+    * Bucket = the doc id's [[bucketExpr]] (first four md5 nibbles
+    * mod 100); split 90/5/5. Map-only, no shuffle, no RNG.
+    */
   def t8HashSplit(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(
@@ -1661,7 +1638,7 @@ object LlmOps {
     // Interleaved A/B at sf0.1: 1.91 → 1.59 s median (−17%), cold first
     // rep 9.5 → 3.6 s. Same t31 discipline (its `rolled` was already
     // pinned).
-    val perDoc = PersistScope.persisted(docs
+    val perDoc = PlanBridge.pin(docs
       .select(col("doc_id"), expr(s"rolling_hashes(text, $SpanWindow)"))
       .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
     val crossDoc = perDoc.groupBy("hash")
@@ -1721,7 +1698,7 @@ object LlmOps {
       .filter(length(col("text")) >= SpanWindow)
       .select(col("doc_id"), expr(s"rolling_hashes(text, $SpanWindow)"))
     if (pinPostAgg) {
-      val agg = PersistScope.persisted(
+      val agg = PlanBridge.pin(
         rolledRaw.groupBy("doc_id", "hash").agg(count(lit(1)).as("k")))
       val perDoc = agg.groupBy("doc_id").agg(sum("k").as("n_windows"))
       val crossDoc = agg.groupBy("hash")
@@ -1734,7 +1711,7 @@ object LlmOps {
           expr(milli("coalesce(n_dup_windows, 0)", "n_windows"))
             .as("dup_coverage_milli"))
     } else {
-      val rolled = PersistScope.persisted(rolledRaw)
+      val rolled = PlanBridge.pin(rolledRaw)
       val perDoc = rolled.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
       val crossDoc = rolled.select("doc_id", "hash").distinct()
         .groupBy("hash").agg(count(lit(1)).as("nd"))
@@ -1910,13 +1887,13 @@ object LlmOps {
     // guarantee length, WinnowPosPack validity guard) live in
     // winnowEligible, shared with the index build/ingest and mirrored in
     // the oracle twin; winnowOversized monitors the upper cut.
-    val docs = PersistScope.persisted(
+    val docs = PlanBridge.pin(
       winnowEligible(Tables.documentsSpread(spark, dir))
         .select(col("doc_id"), col("text")))
     // perDoc pinned (r16, the t19 fix): it feeds both the cross-doc gate
     // and the verify join — unpinned, Catalyst re-runs the whole winnow
     // selection (generator + bounded-frame window) on a second subtree.
-    val perDoc = PersistScope.persisted(
+    val perDoc = PlanBridge.pin(
       winnowSelectChunked(docs, SpanWindow, WinnowWindow)
         .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
     val crossDoc = perDoc.groupBy("hash")
@@ -2017,12 +1994,12 @@ object LlmOps {
     val stored = spark.table(s"${prefix}_spans")
     // Verify text for BOTH sides comes from the full eligible corpus;
     // persisted because the batch selection and the verify join read it.
-    val docs = PersistScope.persisted(winnowEligible(
+    val docs = PlanBridge.pin(winnowEligible(
       Tables.documentsSpread(spark, dir))
       .select(col("doc_id"), col("text"), col("source")))
     // Pinned (r16, the t19 fix): `batch` feeds both the gate's count and
     // the union — unpinned, the batch winnow selection ran twice.
-    val batch = PersistScope.persisted(winnowSelectChunked(
+    val batch = PlanBridge.pin(winnowSelectChunked(
       docs.filter(col("source") === BatchSource).select("doc_id", "text"),
       SpanWindow, WinnowWindow)
       .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
@@ -2139,8 +2116,11 @@ object LlmOps {
     * Production runs use longer n-grams (8-13); the window-lead
     * construction generalizes by adding leads.
     */
-  def t11Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingleRows(spark, dir).distinct()
+  def t11Decontaminate(spark: SparkSession, dir: String): DataFrame =
+    t11Of(shingleRows(spark, dir).distinct())
+
+  /** [[t11Decontaminate]] over a distinct (doc_id, shingle) set. */
+  private def t11Of(sh: DataFrame): DataFrame = {
     val bench = sh.filter(col("doc_id") < BenchmarkDocs)
       .select(col("shingle")).distinct()
     sh.filter(col("doc_id") >= BenchmarkDocs)
@@ -2203,11 +2183,17 @@ object LlmOps {
     * computed ONCE — [[d12From]] consumes the shared labeled table — so
     * the candidate pipeline + CC loop execute once in the composed plan
     * (asserted by Round11Spec via [[ccRuns]]), not once per consuming
-    * stage. Remaining stages and the output contract are identical to
+    * stage. The corpus is tokenized once too: t11's benchmark-overlap
+    * check reads the shingle set d7's candidate pipeline pinned.
+    * Remaining stages and the output contract are identical to
     * [[curationManifest]].
     */
-  def curationNeardupManifest(spark: SparkSession, dir: String): DataFrame =
-    curationNeardupFrom(spark, dir, d12QualityResolve(spark, dir))
+  def curationNeardupManifest(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsSpread(spark, dir)
+    val sh = shingled(shingleRowsOf(docs))
+    curationNeardupFrom(spark, dir,
+      d12From(withPinnedQuality(spark, dir, d7ResolveOf(spark, docs, sh))), t11Of(sh.set))
+  }
 
   /** [[curationNeardupManifest]] with the resolution stage read from the
     * MAINTAINED label index ([[d12bQualityIdx]]) — the shape a production
@@ -2216,7 +2202,7 @@ object LlmOps {
     * q_curation_neardup (the index is a pure optimization).
     */
   def curationNeardupIdx(spark: SparkSession, dir: String): DataFrame =
-    curationNeardupFrom(spark, dir, d12bQualityIdx(spark, dir))
+    curationNeardupFrom(spark, dir, d12bQualityIdx(spark, dir), t11Decontaminate(spark, dir))
 
   /** Dup-span coverage ceiling for the curation coverage gate: documents
     * with `dup_coverage_milli` above this are dropped from the manifest —
@@ -2261,17 +2247,17 @@ object LlmOps {
     val coverageBad = spanCoverageOf(spark, dir, pinPostAgg = true)
       .filter(col("dup_coverage_milli") > CoverageCeilingMilli)
       .select("doc_id")
-    curationNeardupFrom(spark, dir, d12bQualityIdx(spark, dir))
+    curationNeardupFrom(spark, dir, d12bQualityIdx(spark, dir), t11Decontaminate(spark, dir))
       .join(coverageBad, Seq("doc_id"), "left_anti")
   }
 
   private def curationNeardupFrom(spark: SparkSession, dir: String,
-                                  d12out: DataFrame): DataFrame = {
+                                  d12out: DataFrame, t11out: DataFrame): DataFrame = {
     val kept = d12out
       .filter(col("is_kept") === 1).select("doc_id")
     val qualityOk = t3QualityScore(spark, dir)
       .filter(col("tier") =!= "low").select("doc_id")
-    val contaminated = t11Decontaminate(spark, dir).select("doc_id")
+    val contaminated = t11out.select("doc_id")
     val sampled = t10MixtureSample(spark, dir)
     val split = t8HashSplit(spark, dir).select("doc_id", "split")
     sampled
@@ -2384,7 +2370,7 @@ object LlmOps {
     // Referenced by the sketch pass, the total count, and the recount —
     // persist so the corpus explodes once, not three times (reviewer
     // finding).
-    val bigrams = PersistScope.persisted(Tables.documents(spark, dir)
+    val bigrams = PlanBridge.pin(Tables.documents(spark, dir)
       .select(expr(tokExpr).as("toks"))
       .select(col("toks"), posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("pos") <= size(col("toks")) - 2)
@@ -2441,7 +2427,7 @@ object LlmOps {
     // Referenced by dlen (twice, via corpus and the join) and tfs —
     // persist so the corpus tokenizes once, not three times (reviewer
     // finding; the qKmeansCluster working-set lesson).
-    val toks = PersistScope.persisted(Tables.documents(spark, dir)
+    val toks = PlanBridge.pin(Tables.documents(spark, dir)
       .select(col("doc_id"), explode(expr(tokExpr)).as("tok")))
     val dlen = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
     val corpus = dlen
@@ -2475,35 +2461,6 @@ object LlmOps {
   val PrefixJaccardNum = 4
   val PrefixJaccardDen = 5
 
-  /** Exact shingle-set similarity join by PREFIX FILTERING — the
-    * AllPairs/PPJoin family, the exact counterpart to the approximate
-    * candidate generators (d2's MinHash bands, d6's SimHash bands) and
-    * to d4's blocked comparison: NO false negatives by construction.
-    * Tokens are globally ordered rarest-first (document frequency, then
-    * lexicographic); a document's PREFIX is its first
-    * |A| − ⌈t·|A|⌉ + 1 shingles in that order, and the classic prefix
-    * lemma guarantees any pair with Jaccard ≥ t shares a prefix
-    * shingle — so the candidate join touches prefixes only, and the
-    * exact intersection count then keeps precisely the qualifying
-    * pairs.
-    *
-    * 100 TB shape: the df ranking is a wordcount; prefixes are ~1/5 of
-    * each document's shingles and weighted toward RARE shingles, so the
-    * candidate join's per-key fan-out is small by construction (the
-    * frequent head never appears in a prefix unless a doc is nearly all
-    * boilerplate); intersection counts are relational (the d4 lesson —
-    * no per-pair array ops), and every join is an equi-join on shingle
-    * or doc id.
-    *
-    * OUTPUT bound, stated explicitly (SCALE_CURVE attribution): this is
-    * an EXACT join, so a corpus whose docs form k-way near-dup cliques
-    * NECESSARILY emits Θ(k²) pairs per clique — the ×30 replica
-    * fixture's 79× wall at 30× data tracks its ~900× true-pair growth,
-    * not a plan defect. A corpus that can contain degenerate
-    * (>[[D9DegreeCap]]-doc) cliques should run [[d9bPrefixGuarded]],
-    * which bounds the verify work and the output by refusing to explode
-    * them, with [[d9DegreeStats]] counting what was refused.
-    */
   /** [[d9PrefixJoin]]'s prefix table: distinct (doc, shingle) rows ranked
     * rarest-first, cut to the prefix the lemma requires; rn and s ride
     * along for the positional filter. This and the stage builders below
@@ -2552,14 +2509,43 @@ object LlmOps {
     grouped.filter(col("ub") * (PrefixJaccardNum + PrefixJaccardDen) >=
       lit(PrefixJaccardNum) * (col("sa") + col("sb")))
 
+  /** Exact shingle-set similarity join by PREFIX FILTERING — the
+    * AllPairs/PPJoin family, the exact counterpart to the approximate
+    * candidate generators (d2's MinHash bands, d6's SimHash bands) and
+    * to d4's blocked comparison: NO false negatives by construction.
+    * Tokens are globally ordered rarest-first (document frequency, then
+    * lexicographic); a document's PREFIX is its first
+    * |A| − ⌈t·|A|⌉ + 1 shingles in that order, and the classic prefix
+    * lemma guarantees any pair with Jaccard ≥ t shares a prefix
+    * shingle — so the candidate join touches prefixes only, and the
+    * exact intersection count then keeps precisely the qualifying
+    * pairs.
+    *
+    * 100 TB shape: the df ranking is a wordcount; prefixes are ~1/5 of
+    * each document's shingles and weighted toward RARE shingles, so the
+    * candidate join's per-key fan-out is small by construction (the
+    * frequent head never appears in a prefix unless a doc is nearly all
+    * boilerplate); intersection counts are relational (the d4 lesson —
+    * no per-pair array ops), and every join is an equi-join on shingle
+    * or doc id.
+    *
+    * OUTPUT bound, stated explicitly (SCALE_CURVE attribution): this is
+    * an EXACT join, so a corpus whose docs form k-way near-dup cliques
+    * NECESSARILY emits Θ(k²) pairs per clique — the ×30 replica
+    * fixture's 79× wall at 30× data tracks its ~900× true-pair growth,
+    * not a plan defect. A corpus that can contain degenerate
+    * (>[[D9DegreeCap]]-doc) cliques should run [[d9bPrefixGuarded]],
+    * which bounds the verify work and the output by refusing to explode
+    * them, with [[d9DegreeStats]] counting what was refused.
+    */
   def d9PrefixJoin(spark: SparkSession, dir: String): DataFrame = {
     // Distinct (doc, shingle) rows feed the df ranking, the prefix cut,
     // both intersection sides, and the size lookups — one scan, pinned.
-    val toks = PersistScope.persisted(shingleRows(spark, dir).distinct())
+    val toks = PlanBridge.pin(shingleRows(spark, dir).distinct())
     // Both sides of the candidate self-join read prefix — persist so
     // the df join + per-doc window sort + prefix cut run once, not per
     // join side (reviewer finding; the qTriangles oriented-edge lesson).
-    val prefix = PersistScope.persisted(d9Prefix(toks))
+    val prefix = PlanBridge.pin(d9Prefix(toks))
     // PPJoin's LENGTH and POSITIONAL filters run BEFORE the
     // intersection join. Positional: every shared shingle sorts
     // at-or-after the FIRST shared prefix shingle w in BOTH documents
@@ -2629,8 +2615,8 @@ object LlmOps {
       .withColumn("dropped", col("n_candidates") > D9DegreeCap)
 
   def d9DegreeStats(spark: SparkSession, dir: String): DataFrame = {
-    val toks = PersistScope.persisted(shingleRows(spark, dir).distinct())
-    val prefix = PersistScope.persisted(d9Prefix(toks))
+    val toks = PlanBridge.pin(shingleRows(spark, dir).distinct())
+    val prefix = PlanBridge.pin(d9Prefix(toks))
     d9Degrees(d9PositionFilter(d9LengthFilter(d9Grouped(d9PairsRaw(prefix)))))
   }
 
@@ -2649,11 +2635,11 @@ object LlmOps {
     * contract, per the capBandBuckets precedent.
     */
   def d9bPrefixGuarded(spark: SparkSession, dir: String): DataFrame = {
-    val toks = PersistScope.persisted(shingleRows(spark, dir).distinct())
-    val prefix = PersistScope.persisted(d9Prefix(toks))
+    val toks = PlanBridge.pin(shingleRows(spark, dir).distinct())
+    val prefix = PlanBridge.pin(d9Prefix(toks))
     // Referenced by the degree aggregate and the guarded join — persist
     // so the prefix self-join runs once.
-    val cand = PersistScope.persisted(
+    val cand = PlanBridge.pin(
       d9PositionFilter(d9LengthFilter(d9Grouped(d9PairsRaw(prefix)))))
     val over = d9Degrees(cand).filter(col("dropped")).select("doc_id")
     val kept = cand
@@ -2701,7 +2687,7 @@ object LlmOps {
   def t23RareBigrams(spark: SparkSession, dir: String): DataFrame = {
     // Referenced by the df aggregate, the doc-count scalar, and the
     // scoring join — persist so the corpus explodes once.
-    val bigrams = PersistScope.persisted(Tables.documentsSpread(spark, dir)
+    val bigrams = PlanBridge.pin(Tables.documentsSpread(spark, dir)
       .select(col("doc_id"), expr(tokExpr).as("toks"))
       .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "tok")))
       .filter(col("pos") <= size(col("toks")) - 2)
@@ -2884,7 +2870,7 @@ object LlmOps {
     // Distinct words with corpus frequencies; read twice (pair stats +
     // encode), so persisted. len >= 1 drops the empty tokens consecutive
     // spaces would inject as vocabulary (the t25 discipline).
-    val words = PersistScope.persisted(
+    val words = PlanBridge.pin(
       Tables.documents(spark, dir)
         .select(explode(expr(tokExpr)).as("tok"))
         .filter(length(col("tok")) >= 1)
@@ -2977,7 +2963,7 @@ object LlmOps {
     * soon as their successor is materialized.
     */
   def t30BpeLearn(spark: SparkSession, dir: String): DataFrame = {
-    val words = PersistScope.persisted(
+    val words = PlanBridge.pin(
       Tables.documents(spark, dir)
         .select(explode(expr(tokExpr)).as("tok"))
         .filter(length(col("tok")) >= 1)
@@ -3050,7 +3036,7 @@ object LlmOps {
                |    else concat(acc, ' ', x) end)""".stripMargin))
           planSizes += stepped.queryExecution.logical.map(_ => 1).sum
           val next = stepped.localCheckpoint(true)
-          releaseCheckpointBlocks(sym)
+          PlanBridge.release(sym)
           sym = next
           r += 1
         }
@@ -3058,7 +3044,7 @@ object LlmOps {
     } finally {
       // The last round's blocks back nothing the caller sees (the merge
       // table is driver-local); free them on every exit path.
-      releaseCheckpointBlocks(sym)
+      PlanBridge.release(sym)
       lastLearnPlanSizes = planSizes.result()
     }
     learned.toSeq.toDF("merge_rank", "a", "b", "pair_count")
@@ -3094,7 +3080,7 @@ object LlmOps {
     * one declarative plan.
     */
   def t25Classifier(spark: SparkSession, dir: String): DataFrame = {
-    val toks = PersistScope.persisted(
+    val toks = PlanBridge.pin(
       Tables.documentsSpread(spark, dir)
         .select(col("doc_id"), col("source"), explode(expr(tokExpr)).as("tok"))
         .filter(length(col("tok")) >= 1))
@@ -3145,7 +3131,7 @@ object LlmOps {
     * default when the model outgrows the broadcast threshold.
     */
   def t26BigramLm(spark: SparkSession, dir: String): DataFrame = {
-    val bi = PersistScope.persisted(
+    val bi = PlanBridge.pin(
       Tables.documents(spark, dir)
         .select(col("doc_id"), expr(tokExpr).as("toks"))
         .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "a")))
@@ -3184,7 +3170,7 @@ object LlmOps {
     */
   def t27BigramTopk(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bi = PersistScope.persisted(
+    val bi = PlanBridge.pin(
       Tables.documents(spark, dir)
         .select(col("doc_id"), expr(tokExpr).as("toks"))
         .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "a")))

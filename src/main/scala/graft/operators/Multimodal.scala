@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 
 import graft.Tables
 
@@ -212,10 +213,9 @@ object Multimodal {
     * key space, so buckets SHRINK as the corpus grows past 2^16.
     */
   def m6PhashNeardup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.PersistScope
     // Both the band explode and the two verify joins read the hash
     // table — pin so the P6 decode runs once, not three times.
-    val ph = PersistScope.persisted(
+    val ph = PlanBridge.pin(
       m5ImagePhash(spark, dir).select(col("doc_id"), col("phash"),
         col("band_hi"), col("band_lo")))
     val bands = LlmOps.capBandBuckets(ph.select(
@@ -400,8 +400,7 @@ object Multimodal {
     * [[AudioFpMaxHamming]] bits.
     */
   def m8AudioNeardup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.PersistScope
-    val fp = PersistScope.persisted(
+    val fp = PlanBridge.pin(
       m7AudioFingerprint(spark, dir).select(col("doc_id"), col("fingerprint")))
     val bands = LlmOps.capBandBuckets(fp.select(
       col("doc_id"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
@@ -1139,7 +1140,7 @@ object Relational {
     val base = Tables.customer(spark, dir)
       .select(col("c_custkey").as("key"), col("c_name").as("name"))
     def pass(sortKey: org.apache.spark.sql.Column): DataFrame = {
-      val rn = graft.PersistScope.persisted(
+      val rn = PlanBridge.pin(
         Scale.globalRowNumbers(base.withColumn("sortkey", sortKey), Seq("sortkey")))
       // The ±W band stated as an inequality join would plan as a nested
       // loop over n² rn pairs (measured: 82 s at sf0.1). Exploding each
@@ -1268,9 +1269,9 @@ object Relational {
     // s1/s2 pinned (r16): each feeds the next step AND the final join —
     // unpinned, their scan+aggregate subtrees ran twice apiece (6 events
     // scans in the r16 scan audit, 3 needed).
-    val s1 = graft.PersistScope.persisted(
+    val s1 = PlanBridge.pin(
       firstOf("signup").groupBy("user_id").agg(min("ts").as("t1")))
-    val s2 = graft.PersistScope.persisted(
+    val s2 = PlanBridge.pin(
       firstOf("view").join(s1, "user_id").filter(col("ts") > col("t1"))
         .groupBy("user_id").agg(min("ts").as("t2")))
     val s3 = firstOf("purchase").join(s2, "user_id").filter(col("ts") > col("t2"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 
 /** Scale-out join utilities — the two techniques the 100 TB posture
   * notes throughout this engine keep referring to, as concrete API:
@@ -175,7 +176,7 @@ object Scale {
     val n = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val keys = sortCols.map(col)
-    val parted = graft.PersistScope.persisted(
+    val parted = PlanBridge.pin(
       df.repartitionByRange(n, keys: _*)
         .sortWithinPartitions(keys: _*)
         .withColumn("__pid", spark_partition_id()))
@@ -354,55 +355,8 @@ object Scale {
     * SAME rows straight from the source, so the correctness gate itself
     * proves the maintenance rewrite is invisible to readers.
     */
-  /** Scratch dirs awaiting cleanup, swept by a single JVM shutdown hook —
-    * the fallback for a library caller that never runs
-    * [[graft.PersistScope.releaseAll]] (deleteOnExit cannot do this: it
-    * is a no-op on non-empty directories). Harness runs still clean up
-    * eagerly via the registered thunk, which removes the dir from here.
-    */
-  private val pendingScratch =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import scala.jdk.CollectionConverters._
-      pendingScratch.asScala.toSeq.foreach { d =>
-        try scala.util.Using.resource(java.nio.file.Files.walk(d)) { st =>
-          st.iterator().asScala.toSeq
-            .sortBy(-_.getNameCount).foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      }
-    }, "graft-scratch-sweeper"))
-  }
-
-  /** Create a scratch dir whose recursive deletion is registered with
-    * [[graft.PersistScope]] (the harness's post-query hook; the returned
-    * plan reads the dir, so deletion must wait for the action — exactly
-    * PersistScope's releaseAll contract. deleteOnExit is a no-op on
-    * non-empty dirs). The walk stream must be CLOSED (advisor finding: an
-    * unclosed Files.walk leaks a directory handle per releaseAll); Using
-    * closes it even when a delete throws. Callers must [[enrollScratch]]
-    * AFTER their writes complete — enrolling before lets the shutdown
-    * hook race an in-flight write (advisor finding); a crash mid-write
-    * now leaks the temp dir instead, the safe side of that trade.
-    */
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val scratch = java.nio.file.Files.createTempDirectory(prefix)
-    graft.PersistScope.register { () =>
-      import scala.jdk.CollectionConverters._
-      pendingScratch.remove(scratch)
-      scala.util.Using.resource(java.nio.file.Files.walk(scratch)) { st =>
-        st.iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }
-    scratch
-  }
-
-  private def enrollScratch(scratch: java.nio.file.Path): Unit =
-    pendingScratch.add(scratch)
-
   def qCompact(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val scratch = scratchDir("graft_compact")
+    val scratch = graft.Scratch.dir("graft_compact")
     val table = s"$scratch/orders"
     graft.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -410,8 +364,7 @@ object Scale {
       .repartition(64)
       .write.mode(SaveMode.Overwrite).parquet(table)
     compactFiles(spark, table, targetBytes = 8L << 20)
-    enrollScratch(scratch)
-    spark.read.parquet(table)
+    graft.Scratch.deleteWhenUnread(spark.read.parquet(table), scratch)
   }
 
   /** `q_incremental_rollup`: incremental aggregate maintenance — THE
@@ -458,7 +411,7 @@ object Scale {
       return ev.groupBy("day", "event_type")
         .agg(count(lit(1)).as("n_events"), sum("value_milli").as("total_value_milli"))
     val cutoffDay = cutoffRow.getDate(0)
-    val scratch = scratchDir("graft_rollup")
+    val scratch = graft.Scratch.dir("graft_rollup")
     val table = s"$scratch/daily_rollup"
     // Materialize the closed-days rollup partitioned BY DAY: the layout a
     // maintained table needs so the next increment can overwrite only the
@@ -467,7 +420,6 @@ object Scale {
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("n_events"), sum("value_milli").as("total_value_milli"))
       .write.mode(SaveMode.Overwrite).partitionBy("day").parquet(table)
-    enrollScratch(scratch)
     // The explicit schema makes the read well-defined even when every day
     // falls inside the tail window (tiny fixtures): zero data files is
     // then an empty relation, not an infer-schema error — and it pins the
@@ -478,7 +430,8 @@ object Scale {
       org.apache.spark.sql.types.StructField("n_events", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("total_value_milli", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("day", org.apache.spark.sql.types.DateType)))
-    val maintained = spark.read.schema(rollupSchema).parquet(table)
+    val maintained = graft.Scratch.deleteWhenUnread(
+      spark.read.schema(rollupSchema).parquet(table), scratch)
     val delta = ev.filter(col("day") >= lit(cutoffDay))
       .groupBy("day", "event_type")
       .agg(count(lit(1)).as("n_events"), sum("value_milli").as("total_value_milli"))

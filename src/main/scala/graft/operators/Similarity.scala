@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PlanBridge
 import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
@@ -95,18 +96,6 @@ object Similarity {
   val IvfQueries = 4
   val IvfTopK = 3
 
-  /** IVF-style ANN: the other classic scale path besides LSH. The corpus
-    * is partitioned into inverted lists by nearest pivot (pivots are the
-    * first [[NumIvfPivots]] vectors — deterministic stand-ins for k-means
-    * centroids, whose float averaging would be aggregation-order
-    * dependent); a query probes its [[IvfProbes]] nearest pivots and
-    * exhaustively searches only those lists. Assignment and probing both
-    * rank by (cos_milli, pivot id) so every step is oracle-stable.
-    *
-    * At 100 TB: the inverted lists are the partition layout (write the
-    * corpus partitioned by pivot); a query touches probes/pivots of the
-    * data. Recall < 1 by design — the exact baseline is [[simTopk]].
-    */
   /** Pivot table: the first [[NumIvfPivots]] vectors (pushed-down
     * `vec_id < k` scan — metadata-sized however big the corpus is).
     */
@@ -172,6 +161,18 @@ object Similarity {
         col("vec_id").as("neighbor_id"), col("cos_milli"))
   }
 
+  /** IVF-style ANN: the other classic scale path besides LSH. The corpus
+    * is partitioned into inverted lists by nearest pivot (pivots are the
+    * first [[NumIvfPivots]] vectors — deterministic stand-ins for k-means
+    * centroids, whose float averaging would be aggregation-order
+    * dependent); a query probes its [[IvfProbes]] nearest pivots and
+    * exhaustively searches only those lists. Assignment and probing both
+    * rank by (cos_milli, pivot id) so every step is oracle-stable.
+    *
+    * At 100 TB: the inverted lists are the partition layout (write the
+    * corpus partitioned by pivot); a query touches probes/pivots of the
+    * data. Recall < 1 by design — the exact baseline is [[simTopk]].
+    */
   def simIvfTopk(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.embeddings(spark, dir)
       .select(col("vec_id"), expr(embExpr).as("emb"))
@@ -316,7 +317,7 @@ object Similarity {
   def d8EmbedNeardup(spark: SparkSession, dir: String): DataFrame = {
     // Pinned (r16): both directions of the symmetrization read `pairs`,
     // and unpinned the whole LSH pipeline beneath it ran twice.
-    val pairs = graft.PersistScope.persisted(simLshPairs(spark, dir)
+    val pairs = PlanBridge.pin(simLshPairs(spark, dir)
       .filter(col("cos_milli") >= EmbedDedupThreshold)
       .select(col("vec_a"), col("vec_b")))
     val sym = pairs.select(col("vec_a").as("doc_id"), col("vec_b").as("nb"))
@@ -489,12 +490,11 @@ object Similarity {
     */
   def qKmeansCluster(spark: SparkSession, dir: String): DataFrame = {
     // The (vec, dim, val) rows are referenced ~2× per unrolled Lloyd
-    // iteration (assign join + centroid update); persist so the scan +
+    // iteration (assign join + centroid update); pin so the scan +
     // explode + shift runs once, not ~6 times (measured 3.5 s → 2.4 s
-    // at sf0.1). Registered with PersistScope like every query-scoped
-    // intermediate; at cluster scale this is the cached working set a
-    // real k-means job would hold across iterations anyway.
-    val v = graft.PersistScope.persisted(Tables.embeddings(spark, dir)
+    // at sf0.1). At cluster scale this is the cached working set a real
+    // k-means job would hold across iterations anyway.
+    val v = PlanBridge.pin(Tables.embeddings(spark, dir)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "xf")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"),
         (round(col("xf").cast("double") * 1000).cast("long") + 1000L).as("val")))
@@ -552,7 +552,7 @@ object Similarity {
     val assign = qKmeansCluster(spark, dir).select(col("vec_id"), col("cluster"))
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val withEmb = graft.PersistScope.persisted(assign.join(emb, "vec_id"))
+    val withEmb = PlanBridge.pin(assign.join(emb, "vec_id"))
     val a = withEmb.select(col("vec_id").as("vid_a"), col("cluster"),
       col("embedding").as("emb_a"))
     val b = withEmb.select(col("vec_id").as("vid_b"), col("cluster"),
@@ -622,7 +622,7 @@ object Similarity {
     // Every query × every pivot, ranked: pr = probe order (best first).
     val probes = ivfProbes(spark, dir, NumIvfPivots)
     // Candidate pool: each corpus vector reachable at probe depth `pr`.
-    val cand = graft.PersistScope.persisted(
+    val cand = PlanBridge.pin(
       probes.join(assigned, "pivot")
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
@@ -633,10 +633,12 @@ object Similarity {
       .withColumn("rk", row_number().over(wRank))
       .filter(col("rk") <= IvfTopK)
       .select(col("query_id"), col("vec_id"))
-    val exact = graft.PersistScope.persisted(topk(NumIvfPivots))
+    val exact = PlanBridge.pin(topk(NumIvfPivots))
     val expected = broadcast(exact.groupBy().agg(count(lit(1)).as("n_expected")))
     IvfProbeSweep.map { pCnt =>
-      topk(pCnt).join(exact, Seq("query_id", "vec_id"))
+      // Full probe depth IS the exact set: read the pin, not a re-rank.
+      val found = if (pCnt == NumIvfPivots) exact else topk(pCnt)
+      found.join(exact, Seq("query_id", "vec_id"))
         .groupBy().agg(count(lit(1)).as("n_hits"))
         .crossJoin(expected)
         .select(lit(pCnt.toLong).as("probes"), col("n_hits"), col("n_expected"),
@@ -714,7 +716,7 @@ object Similarity {
     // same persisted frame the join reads — it feeds both the keep-set
     // and the dropped count without re-running the bucket aggregate or
     // broadcasting a separate keep-set (the r13 shape this replaces).
-    val withCnt = graft.PersistScope.persisted(
+    val withCnt = PlanBridge.pin(
       e.crossJoin(broadcast(planes))
         .select(col("vec_id"), col("emb"), col("p"),
           expr("dot_double(emb, pe)").as("d"))

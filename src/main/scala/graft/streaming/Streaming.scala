@@ -32,27 +32,12 @@ object Streaming {
   private val runId = new AtomicInteger(0)
 
   /** Streaming scratch (checkpoint dirs full of state-store files,
-    * symlink staging, append outputs) previously accumulated under /tmp
-    * for the host's lifetime (reviewer finding — the disk analogue of
-    * the executor-block leak PersistScope closed). Every scratch dir is
-    * registered here and recursively deleted at JVM exit; checkpoints
-    * are per-run throwaways by design (a resumable job passes its OWN
-    * checkpointLocation, see StreamingResumeSpec).
+    * symlink staging, append outputs) is deleted at JVM exit
+    * ([[graft.Scratch]]); checkpoints are per-run throwaways by design (a
+    * resumable job passes its OWN checkpointLocation, see
+    * StreamingResumeSpec).
     */
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    scratchDirs.forEach { root =>
-      try java.nio.file.Files.walk(root)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { try java.nio.file.Files.deleteIfExists(p) catch { case _: Throwable => () } })
-      catch { case _: Throwable => () }
-    }))
-
-  private def scratchDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    scratchDirs.add(d)
-    d.toString
-  }
+  private def scratchDir(prefix: String): String = graft.Scratch.dir(prefix).toString
 
   /** File-stream over events with the ts normalization. The file
     * source requires a DIRECTORY; the fixture is a single parquet file,
@@ -252,12 +237,11 @@ object Streaming {
       q.awaitTermination()
     }
     val result = spark.table(name)
-    // The memory sink pins the whole aggregate in DRIVER memory behind
-    // the temp view; release it with the query's other intermediates
-    // (the result's analyzed plan already holds the data, so the
-    // caller's one action still works — reviewer finding: views were
-    // never dropped and grew with every run).
-    graft.PersistScope.register(() => spark.catalog.dropTempView(name))
+    // The memory sink holds the whole aggregate in DRIVER memory behind
+    // the temp view. The resolved plan already holds the sink, so drop
+    // the view now: the data then lives exactly as long as the result,
+    // and views do not pile up run after run.
+    spark.catalog.dropTempView(name)
     result
   }
 
@@ -590,15 +574,6 @@ object Streaming {
         col("user_id"), col("n_events"))
   }
 
-  /** ST11: per-user count milestones via Spark 4's transformWithState —
-    * see [[Milestones]] for the processor and the determinism contract.
-    * The API REQUIRES the RocksDB state store provider (it refuses the
-    * default heap-backed one), so the provider conf is scoped around
-    * the run exactly like RocksDbStateSpec — which is the right
-    * default at scale anyway: per-user longs for every user ever seen
-    * outlive any executor heap. Append mode through the executor-side
-    * parquet sink; output rows ∝ events/Step.
-    */
   /** The st11 pipeline over any (streaming) events frame with
     * (user_id, ts, event_id) — split out so MilestonesSpec can feed a
     * hand-staged multi-batch stream and prove the count state carries
@@ -614,6 +589,15 @@ object Streaming {
       .toDF()
   }
 
+  /** ST11: per-user count milestones via Spark 4's transformWithState —
+    * see [[Milestones]] for the processor and the determinism contract.
+    * The API REQUIRES the RocksDB state store provider (it refuses the
+    * default heap-backed one), so the provider conf is scoped around
+    * the run exactly like RocksDbStateSpec — which is the right
+    * default at scale anyway: per-user longs for every user ever seen
+    * outlive any executor heap. Append mode through the executor-side
+    * parquet sink; output rows ∝ events/Step.
+    */
   def st11Milestones(spark: SparkSession, dir: String): DataFrame =
     withRocksDb(spark) {
       runAppendToParquet(spark, streamParts(spark, dir), milestonesOf(spark, eventsStream(spark, dir)))

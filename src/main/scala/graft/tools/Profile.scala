@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
 
-import graft.{Bench, PersistScope, Sessions, SparkEntry}
+import graft.{Bench, Sessions, SparkEntry}
 
 /** The one profiling entry point over the [[SparkEntry]] catalog.
   *
@@ -117,7 +117,7 @@ object Profile {
         }
       } catch { case e: Throwable =>
         System.err.println(s"[profile] $q FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      } finally { PersistScope.releaseAll(); spark.catalog.clearCache() }
+      } finally spark.catalog.clearCache()
     }
   }
 
@@ -149,7 +149,7 @@ object Profile {
           s"objAgg=${n("ObjectHashAggregate")} scans=${scanCounts(plan).mkString(",")}")
       } catch { case e: Throwable =>
         println(s"AUDIT $name ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
-      } finally { PersistScope.releaseAll(); spark.catalog.clearCache() }
+      } finally spark.catalog.clearCache()
     }
 
   private def scanCounts(plan: SparkPlan): Seq[String] = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{PersistScope, Sessions}
+import graft.Sessions
 import graft.operators.Similarity
 
 /** Dev tool: dump the ANN tuning evidence (ANN_RECALL.json) — the IVF
@@ -33,9 +33,7 @@ object RecallCurve {
       // to the recompute form, so the published values are unchanged;
       // what changes is what the tool exercises (build + probe path).
       val ivf = rows(Similarity.simIvfRecallIdx(spark, dir))
-      PersistScope.releaseAll()
       val lsh = rows(Similarity.simLshSweep(spark, dir))
-      PersistScope.releaseAll()
       val sf = dir.split('/').last
       s""""$sf": {"ivf_recall_at_${Similarity.IvfTopK}": $ivf, "lsh_width_sweep": $lsh}"""
     }

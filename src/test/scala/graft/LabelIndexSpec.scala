@@ -44,12 +44,9 @@ class LabelIndexSpec extends SparkTestBase {
     // Warm the snapshot first so the consumer measurements below are
     // steady-state (first touch builds it, which DOES run CC once).
     LlmOps.d7bResolveIdx(spark, Sf).count()
-    PersistScope.releaseAll()
     val before = LlmOps.ccRuns
     assertSameRows(LlmOps.d12bQualityIdx(spark, Sf), LlmOps.d12QualityResolve(spark, Sf))
-    PersistScope.releaseAll()
     assertSameRows(LlmOps.d13bSplitIdx(spark, Sf), LlmOps.d13GroupSplit(spark, Sf))
-    PersistScope.releaseAll()
     assertSameRows(LlmOps.curationNeardupIdx(spark, Sf),
       LlmOps.curationNeardupManifest(spark, Sf))
     // Each FULL-recompute twin above pays one CC loop; the index-side

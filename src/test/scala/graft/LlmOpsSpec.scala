@@ -198,7 +198,6 @@ class LlmOpsSpec extends SparkTestBase {
     assert(a.count() > 0)
     assert(a.exceptAll(b).count() === 0)
     assert(b.exceptAll(a).count() === 0)
-    PersistScope.releaseAll()
   }
 
   test("per-row and aggregating minhash formulations produce identical bands") {
@@ -247,6 +246,5 @@ class LlmOpsSpec extends SparkTestBase {
     assert(!plan.contains("SortAggregate"),
       s"d2's plan should carry no SortAggregate; plan:\n${plan.take(4000)}")
     assert(plan.contains("HashAggregate"))
-    PersistScope.releaseAll()
   }
 }

@@ -261,13 +261,11 @@ class PlanSpec extends SparkTestBase {
     val t27 = plan(LlmOps.t27BigramTopk(spark, Sf))
     assert(t27.contains("BroadcastHashJoin"),
       s"t27's pruned model must broadcast:\n$t27")
-    PersistScope.releaseAll()
     // d2 with the bucket cap: the guard must stay an equi-join filter —
     // no nested loop, no cartesian anywhere in the candidate pipeline.
     val d2 = plan(LlmOps.d2DedupMinhash(spark, Sf))
     assert(!d2.contains("CartesianProduct") && !d2.contains("BroadcastNestedLoop"),
       s"d2's capped candidate join must stay equi:\n$d2")
-    PersistScope.releaseAll()
     // d11: wordcount shape — aggregates only, no join operator.
     val d11 = plan(LlmOps.d11BandStats(spark, Sf))
     assert(!d11.contains("Join"), s"d11 must be aggregate-only:\n$d11")

@@ -39,10 +39,8 @@ class Round9Spec extends SparkTestBase {
   test("t27 with large K equals t26 exactly (pruning is the only difference)") {
     val full = LlmOps.t26BigramLm(spark, Sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    PersistScope.releaseAll()
     val topk = LlmOps.t27BigramTopk(spark, Sf, k = Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    PersistScope.releaseAll()
     assert(topk === full)
   }
 
@@ -101,13 +99,11 @@ class Round9Spec extends SparkTestBase {
       (9002L, "completely different unique text about spark partitions and shuffles there"))
     writeDocs(dir, boiler ++ pair)
     val d2 = LlmOps.d2DedupMinhash(spark, dir).collect()
-    PersistScope.releaseAll()
     assert(!d2.exists(r => r.getLong(0) <= 200L && r.getLong(1) <= 200L),
       "no pair may come from the over-cap cluster")
     assert(d2.exists(r => r.getLong(0) == 9001L && r.getLong(1) == 9002L),
       "the guard must not suppress normal-bucket candidates")
     val d6 = LlmOps.d6SimhashNeardup(spark, dir).collect()
-    PersistScope.releaseAll()
     assert(!d6.exists(r => r.getLong(0) <= 200L && r.getLong(1) <= 200L))
   }
 
@@ -126,7 +122,6 @@ class Round9Spec extends SparkTestBase {
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val d5 = LlmOps.d5DedupIncremental(spark, dir).collect()
-    PersistScope.releaseAll()
     assert(!d5.exists(_.getLong(0) == 9000L),
       "the batch doc landing in the over-cap corpus bucket must emit nothing")
     assert(d5.exists(r => r.getLong(0) == 9001L && r.getLong(1) == 8000L),
@@ -150,7 +145,6 @@ class Round9Spec extends SparkTestBase {
   test("q_rec_closure returns the 2-hop neighborhood with min-hop dedup") {
     val out = Graph.qRecClosure(spark, Sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    PersistScope.releaseAll()
     assert(out(4L) === 0L, "the seed dedups to hop 0 even if revisited at hop 2")
     assert(out.nonEmpty && out.values.forall(h => h >= 0L && h <= 2L))
     // Hop-1 nodes are exactly the seed customer's parts (odd ids).

@@ -94,7 +94,6 @@ class ScaleSpec extends SparkTestBase {
       val n = agg.getLong(0)
       assert(agg.getLong(1) === n, "rn must be unique")
       assert(agg.getLong(2) === 1L && agg.getLong(3) === n, "rn must be dense 1..n")
-      PersistScope.releaseAll()
     }
   }
 
@@ -212,19 +211,19 @@ class ScaleSpec extends SparkTestBase {
       s"AQE did not mark the hot partition as skewed:\n${plan.take(2000)}")
   }
 
-  test("q_compact releases its scratch copy after the harness release hook") {
+  test("q_compact deletes its scratch copy once its result is unreachable") {
     def compactDirs(): Set[String] = {
       val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
       tmp.listFiles().filter(_.getName.startsWith("graft_compact")).map(_.getName).toSet
     }
     val before = compactDirs()
-    for (_ <- 1 to 2) {
-      Scale.qCompact(spark, Sf).count()
-      PersistScope.releaseAll()
-    }
+    // A helper frame, so no result handle outlives it.
+    def runAndDrop(): Unit = for (_ <- 1 to 2) Scale.qCompact(spark, Sf).count()
+    runAndDrop()
+    releasedAfterGc((compactDirs() -- before).isEmpty)
     val leaked = compactDirs() -- before
     assert(leaked.isEmpty,
-      s"q_compact left scratch dirs behind after releaseAll: $leaked")
+      s"q_compact left scratch dirs behind after its results dropped: $leaked")
   }
 
   test("salted join returns exactly the plain join's rows") {

@@ -25,7 +25,6 @@ class SpanIndexSpec extends SparkTestBase {
       LlmOps.t19bDupSpansIdx(spark, Sf),
       LlmOps.t29WinnowDups(spark, Sf))
     assert(LlmOps.t19bDupSpansIdx(spark, Sf).count() > 0)
-    PersistScope.releaseAll()
   }
 
   test("t19b's cross-doc gate aggregates the stored spans exchange-free") {

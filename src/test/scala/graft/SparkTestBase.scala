@@ -11,20 +11,25 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = Sessions.local("4")
 
-  /** Release PersistScope registrations after EVERY test — suites run
-    * queries that pin working sets (dedup family, k-means, PageRank),
-    * and the shared session otherwise accumulates their blocks for the
-    * whole run; worse, lingering CacheManager entries can make a later
-    * plan-shape assertion resolve through InMemoryRelation instead of
-    * the scan it was written against (reviewer finding).
-    */
-  override protected def withFixture(test: NoArgTest): org.scalatest.Outcome =
-    try super.withFixture(test) finally PersistScope.releaseAll()
-
   /** sf0.001 corpus — smallest driver fixture, for tests that want real
     * tables rather than in-memory rows.
     */
   val Sf = "/root/testdata/sf0.001"
+
+  /** Runs a GC once a second until `released` holds or 60 s pass, and
+    * returns `released`. Pins and scratch dirs are freed by ContextCleaner
+    * and Cleaner threads once a GC finds them unreachable; Spark's
+    * listener threads can still hold the last plan for a moment after
+    * an action, so one GC straight after it is not enough.
+    */
+  def releasedAfterGc(released: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (!released && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(1000)
+    }
+    released
+  }
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

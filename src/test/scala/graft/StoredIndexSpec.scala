@@ -115,7 +115,6 @@ class StoredIndexSpec extends SparkTestBase {
     val totalEdges = rebuilt.select("n_edges").as[Long].head()
     assert(totalEdges > storedEdges,
       s"batch must add edges: stored $storedEdges vs total $totalEdges")
-    PersistScope.releaseAll()
   }
 
   test("the ingest's stored tables are bucketed on their probe keys") {
@@ -151,6 +150,5 @@ class StoredIndexSpec extends SparkTestBase {
     ingest.foreach { case (vec, piv) =>
       assert(stored(vec) === piv, s"vec $vec: ingest pivot $piv != stored ${stored(vec)}")
     }
-    PersistScope.releaseAll()
   }
 }
