@@ -166,18 +166,15 @@ object Bench {
     b.result()
   }
 
-  /** Run `names` untimed, clearing the cache after each, then GC (which
-    * frees the pins of every dropped result).
+  /** Run `names` untimed. A failed warm-up is reported on stderr; the
+    * timed run of that query reports its own error.
     */
   private def runUntimed(spark: org.apache.spark.sql.SparkSession,
-                         sfDir: String, names: Seq[String]): Unit = {
-    names.foreach { n =>
-      try SparkEntry.queries.get(n).foreach(_(spark, sfDir).count())
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache()
+                         sfDir: String, names: Seq[String]): Unit =
+    SparkEntry.run(spark, sfDir, names)((_, build) => build().count()) {
+      case (n, Left(msg)) => System.err.println(s"[bench] warm-up $n FAILED: $msg")
+      case _ => ()
     }
-    System.gc()
-  }
 
   /** Whole-process CPU seconds (all threads, user+sys) — the per-rep
     * delta separates "host stalled" (wall ≫ cpu/threads) from "real
@@ -195,26 +192,24 @@ object Bench {
   /** One timed rep's wall seconds, process-CPU seconds and row count. */
   private[graft] final case class Rep(wallSec: Double, cpuSec: Double, rows: Long)
 
-  /** The one timed rep Bench grades and tools.Profile reports: run the
+  /** The one timed rep Bench grades and tools.Profile reports: build the
     * query and `count()` it inside the timed window. The result is
-    * dropped on return; its pins are freed by the caller's next GC,
-    * outside the window, so a pin-heavy query's reading never includes
-    * unpinning its working set.
+    * dropped on return; its pins are freed by a later GC of
+    * [[SparkEntry.run]], outside the window, so a pin-heavy query's
+    * reading never includes unpinning its working set.
     */
-  private[graft] def timedRep(spark: org.apache.spark.sql.SparkSession, sfDir: String,
-                              fn: (org.apache.spark.sql.SparkSession, String) =>
-                                org.apache.spark.sql.DataFrame): Rep = {
+  private[graft] def timedRep(build: () => org.apache.spark.sql.DataFrame): Rep = {
     val c0 = processCpuSec()
     val t0 = System.nanoTime()
-    val rows = fn(spark, sfDir).count()
+    val rows = build().count()
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = if (c0 < 0) -1.0 else processCpuSec() - c0
     Rep(wall, cpu, rows)
   }
 
-  /** Child mode: time `names` and print, as each query finishes, `BENCHQ
-    * name graded rep,rep,.. cpu,cpu,..` or `BENCHE name message`, then
-    * `BENCHDONE`. Stdout carries only these lines (Spark logs go to
+  /** Child mode: time `names` through [[SparkEntry.run]] and print, as
+    * each query finishes, `BENCHQ name graded rep,rep,.. cpu,cpu,..` or
+    * `BENCHE name message`, then `BENCHDONE`. Stdout carries only these lines (Spark logs go to
     * stderr, which the parent inherits). Bulk chunks (`selfWarm` false)
     * take one rep and escalate in place; self-warmed groups take
     * median-of-3.
@@ -227,36 +222,25 @@ object Bench {
     runUntimed(spark, sfDir, warmupsFor(names))
     if (selfWarm) runUntimed(spark, sfDir, names)
     var escalationsLeft = MaxEscalations
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      try {
-        def rep(): Rep = timedRep(spark, sfDir, fn)
-        val r1 = rep()
-        val escalate = !selfWarm && escalationsLeft > 0 && quiet.get(name).exists(qm =>
-          r1.wallSec > InSituRatio * qm && r1.wallSec - qm > AuditFloor)
-        if (escalate) escalationsLeft -= 1
-        val rs =
-          if (escalate || (selfWarm && r1.wallSec > RepThreshold)) Seq(r1, rep(), rep())
-          else Seq(r1)
-        // An escalated entry drops its cold first rep and grades the mean
-        // of the two warm reps; otherwise the median.
-        val graded =
-          if (escalate) (rs(1).wallSec + rs(2).wallSec) / 2
-          else rs.map(_.wallSec).sorted.apply(rs.size / 2)
-        println(f"BENCHQ $name $graded%.4f ${rs.map(r => f"${r.wallSec}%.4f").mkString(",")} " +
-          rs.map(r => f"${r.cpuSec}%.4f").mkString(","))
-      } catch { case e: Throwable =>
-        val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
-        println(s"BENCHE $name ${msg.replace('\n', ' ').replace('\r', ' ')}")
-      } finally {
-        // Per-query isolation: clearCache drops persisted datasets and the
-        // untimed GC lets ContextCleaner release the dropped result's
-        // pins, shuffles and broadcasts NOW instead of inside a later
-        // query's timed window (measured as a 5-11× slowdown of joins
-        // after the d* family).
-        spark.catalog.clearCache()
-        System.gc()
-      }
+    SparkEntry.run(spark, sfDir, names) { (name, build) =>
+      def rep(): Rep = timedRep(build)
+      val r1 = rep()
+      val escalate = !selfWarm && escalationsLeft > 0 && quiet.get(name).exists(qm =>
+        r1.wallSec > InSituRatio * qm && r1.wallSec - qm > AuditFloor)
+      if (escalate) escalationsLeft -= 1
+      val rs =
+        if (escalate || (selfWarm && r1.wallSec > RepThreshold)) Seq(r1, rep(), rep())
+        else Seq(r1)
+      // An escalated entry drops its cold first rep and grades the mean
+      // of the two warm reps; otherwise the median.
+      val graded =
+        if (escalate) (rs(1).wallSec + rs(2).wallSec) / 2
+        else rs.map(_.wallSec).sorted.apply(rs.size / 2)
+      f"BENCHQ $name $graded%.4f ${rs.map(r => f"${r.wallSec}%.4f").mkString(",")} " +
+        rs.map(r => f"${r.cpuSec}%.4f").mkString(",")
+    } { (name, r) =>
+      println(r.fold(msg => s"BENCHE $name ${msg.take(200).replace('\n', ' ').replace('\r', ' ')}",
+        identity))
       System.out.flush()
     }
     println("BENCHDONE")
@@ -444,8 +428,8 @@ object Bench {
   }
 
   /** (corpus dir, local-mode CPU count) from SPARK_GRAFT_SF_DIR and
-    * SPARK_GRAFT_CPUS, with the defaults every harness main shares
-    * (Bench, Verify and tools.Profile).
+    * SPARK_GRAFT_CPUS, with the defaults every graft main shares
+    * (Bench, Verify and the tools).
     */
   private[graft] def env(): (String, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

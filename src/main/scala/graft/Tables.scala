@@ -151,42 +151,20 @@ object Tables {
     * other nine — queries that never touch the broken table keep working.
     * A query that DOES reference the broken table gets a bare
     * TABLE_OR_VIEW_NOT_FOUND (the view is dropped, the load error is not
-    * re-thrown at use), so the root cause is recorded two ways: a stderr
-    * line with the exception class + message, and [[lastRegisterFailures]]
-    * for harnesses to consult programmatically.
+    * re-thrown at use), so the root cause goes to stderr: one line per
+    * failed table with the exception class + message.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit = {
-    val failures = All.flatMap { name =>
+  def registerAll(spark: SparkSession, dir: String): Unit =
+    All.foreach { name =>
       try {
         val df = if (name == "events") events(spark, dir) else load(spark, dir, name)
         df.createOrReplaceTempView(name)
-        None
       } catch {
         case e: Exception =>
           spark.catalog.dropTempView(name) // stale prior view would silently serve old data
-          Some(name -> e)
+          System.err.println(s"graft.Tables.registerAll: view '$name' not registered " +
+            s"(queries touching it will see TABLE_OR_VIEW_NOT_FOUND): " +
+            s"${e.getClass.getName}: ${e.getMessage}")
       }
     }
-    lastRegisterFailures = failures.toMap
-    failures.foreach { case (name, e) =>
-      System.err.println(s"graft.Tables.registerAll: view '$name' not registered " +
-        s"(queries touching it will see TABLE_OR_VIEW_NOT_FOUND): " +
-        s"${e.getClass.getName}: ${e.getMessage}")
-    }
-  }
-
-  /** Per-table load failures from the most recent [[registerAll]] call
-    * (empty when all ten views registered) — the discoverable root cause
-    * behind any later TABLE_OR_VIEW_NOT_FOUND on a fixture view.
-    *
-    * PROCESS-GLOBAL, last-writer-wins (advisor finding): concurrent
-    * [[registerAll]] calls — two sessions, or one session over two dirs —
-    * clobber each other here, so a harness reading this after its own
-    * call may see another run's failure map. All in-repo harnesses
-    * (Verify/Bench/tools.Profile) are single-session and call
-    * registerAll once before reading, which is the supported use; a
-    * multi-session caller should treat this as best-effort diagnostics
-    * only (temp views themselves are per-session and unaffected).
-    */
-  @volatile var lastRegisterFailures: Map[String, Exception] = Map.empty
 }

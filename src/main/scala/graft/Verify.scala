@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -28,39 +30,41 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query-name filter (dev iteration).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val (_, cpus) = Bench.env()
-    val spark = Sessions.local(cpus)
+  /** Writes each of `names` from `catalog` to `<outDir>/<name>` as one
+    * parquet file through [[SparkEntry.run]], then `oracle_sql.json` and
+    * `errors.json`. Returns the errors, name → message, in run order.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String],
+          catalog: Map[String, SparkEntry.Query] = SparkEntry.queries): Map[String, String] = {
     new java.io.File(outDir).mkdirs()
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
-        errors(name) = msg
+    val errors = scala.collection.immutable.ListMap.newBuilder[String, String]
+    SparkEntry.run(spark, sfDir, names, catalog) { (name, build) =>
+      build().coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    } {
+      case (name, Left(msg)) =>
+        errors += name -> msg.take(500)
         System.err.println(s"[verify] FAILED $name — $msg")
-      } finally {
-        // A query's pins and checkpoint blocks live as long as its
-        // result, which is dropped here; the cache-table hammer covers
-        // anything a query cached by name.
-        spark.catalog.clearCache()
-      }
+      case _ => ()
     }
+    val errs = errors.result()
     def obj(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
-    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(errors))
-    if (errors.nonEmpty) {
-      System.err.println(s"[verify] ${errors.size} quer${if (errors.size == 1) "y" else "ies"} FAILED: ${errors.keys.mkString(", ")}")
+    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(errs))
+    if (errs.nonEmpty) {
+      System.err.println(s"[verify] ${errs.size} quer${if (errs.size == 1) "y" else "ies"} FAILED: ${errs.keys.mkString(", ")}")
     }
-    spark.stop()
+    errs
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    // Optional third arg: comma-separated query-name filter (dev iteration).
+    val names = args.lift(2).map(_.split(",").toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq).sorted
+    val (_, cpus) = Bench.env()
+    val spark = Sessions.local(cpus)
+    val errors = try run(spark, sfDir, outDir, names) finally spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }
 }

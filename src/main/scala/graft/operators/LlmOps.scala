@@ -919,8 +919,8 @@ object LlmOps {
     */
   val MaxResolveRounds = 20
 
-  /** Test instrumentation (single-session, like
-    * [[graft.Tables.lastRegisterFailures]]): how many times the CC loop
+  /** Test instrumentation (process-global: a second session's runs
+    * count here too): how many times the CC loop
     * has run. Lets a spec assert a COMPOSED pipeline shares one
     * resolution pass instead of re-running candidate generation + CC per
     * consumer — the d7-inside-d12 double-execution the bench exposes.

@@ -17,7 +17,10 @@ import graft.{Bench, Sessions, SparkEntry}
   * Corpus and CPU count come from SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS
   * with [[Bench]]'s defaults; `time` runs SPARK_GRAFT_REPS (default 3)
   * warm reps after one untimed warm-up. No name list = the whole
-  * catalog. Not part of the library surface.
+  * catalog. Every mode runs through [[SparkEntry.run]]: a failed or
+  * unknown query prints `[profile] name FAILED` on stderr (`audit`: an
+  * `AUDIT name ERROR` line) and the run goes on. Not part of the library
+  * surface.
   */
 object Profile {
 
@@ -33,7 +36,7 @@ object Profile {
     if (positional.headOption.contains("time") && args.contains("--list")) {
       // Lets tools/sweep_quiet.sh chunk the catalog across fresh JVMs
       // without a query list anywhere outside SparkEntry.
-      SparkEntry.queries.keys.toSeq.sorted.foreach(println)
+      println(SparkEntry.queries.keys.toSeq.sorted.mkString("\n"))
       return
     }
     val names = positional.lift(1)
@@ -47,7 +50,7 @@ object Profile {
         spark => time(spark, dir, names, reps)(println)
       case Some("plan") if positional.length >= 2 =>
         spark => plan(spark, dir, names, args.contains("--final"), out)
-      case Some("audit") => spark => audit(spark, dir, names)
+      case Some("audit") => spark => audit(spark, dir, names)(println)
       case _ =>
         System.err.println("usage: Profile time [q1,...] | time --list | " +
           "plan q1,... [--final] [--out DIR TAG] | audit [q1,...]")
@@ -67,11 +70,10 @@ object Profile {
                           reps: Int)(emit: String => Unit): Unit = {
     val tally = new StageTally
     spark.sparkContext.addSparkListener(tally)
-    try names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
+    try SparkEntry.run(spark, dir, names) { (name, build) =>
       val timed = (0 to reps).map { i =>
         val s0 = snapshot()
-        val r = Bench.timedRep(spark, dir, fn)
+        val r = Bench.timedRep(build)
         // A slow rep with cpu ~ wall*threads is real work (plan/spill);
         // low cpu + high host steal is hypervisor contention; low cpu +
         // high iowait is disk stalls; high gc is heap pressure. The
@@ -84,16 +86,17 @@ object Profile {
         r
       }.tail
       val med = timed.map(_.wallSec).sorted.apply(timed.size / 2)
-      emit(f"TIME $name%-24s median=$med%7.3f s  " +
+      f"TIME $name%-24s median=$med%7.3f s  " +
         s"reps=${timed.map(r => f"${r.wallSec}%.3f").mkString(",")}  " +
-        s"rows=${timed.head.rows}  cpu=${timed.map(r => f"${r.cpuSec}%.3f").mkString(",")}")
-      // Without a collection between queries, dead blocks from earlier
-      // queries surface as multi-second mixed GCs inside a later query's
-      // timed window (q_triangles 19 s aged vs 5.6 s fresh).
-      spark.catalog.clearCache()
-      System.gc()
+        s"rows=${timed.head.rows}  cpu=${timed.map(r => f"${r.cpuSec}%.3f").mkString(",")}"
+    } {
+      case (_, Right(line)) => emit(line)
+      case (name, Left(msg)) => failed(name, msg)
     } finally spark.sparkContext.removeSparkListener(tally)
   }
+
+  private def failed(name: String, msg: String): Unit =
+    System.err.println(s"[profile] $name FAILED: $msg")
 
   /** Formatted physical plan per query, to stdout or to `DIR/<q>_TAG.txt`
     * (the plans/ evidence layout). `runFinal` runs the query first so
@@ -103,21 +106,20 @@ object Profile {
   private def plan(spark: SparkSession, dir: String, names: Seq[String],
                    runFinal: Boolean, out: Option[(String, String)]): Unit = {
     out.foreach { case (d, _) => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)) }
-    names.foreach { q =>
-      try {
-        val df = SparkEntry.queries(q)(spark, dir)
-        if (runFinal) df.count()
-        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-        out match {
-          case Some((d, tag)) =>
-            val path = java.nio.file.Paths.get(d, s"${q}_$tag.txt")
-            java.nio.file.Files.write(path, txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            System.err.println(s"[profile] wrote $path")
-          case None => println(s"===== $q\n$txt")
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[profile] $q FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      } finally spark.catalog.clearCache()
+    SparkEntry.run(spark, dir, names) { (q, build) =>
+      val df = build()
+      if (runFinal) df.count()
+      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      out match {
+        case Some((d, tag)) =>
+          val path = java.nio.file.Paths.get(d, s"${q}_$tag.txt")
+          java.nio.file.Files.write(path, txt.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          System.err.println(s"[profile] wrote $path")
+        case None => println(s"===== $q\n$txt")
+      }
+    } {
+      case (q, Left(msg)) => failed(q, msg)
+      case _ => ()
     }
   }
 
@@ -138,19 +140,16 @@ object Profile {
     *    the query's shape needs is work the query really re-runs (the
     *    unpinned-branch class t19/t29 had).
     */
-  private def audit(spark: SparkSession, dir: String, names: Seq[String]): Unit =
-    names.foreach { name =>
-      try {
-        val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan
-        val p = plan.toString
-        def n(node: String) = node.r.findAllIn(p).length
-        println(f"AUDIT $name%-24s cart=${n("CartesianProduct")} smj=${n("SortMergeJoin")} " +
-          s"bnlj=${n("BroadcastNestedLoopJoin")} sortAgg=${n("SortAggregate")} " +
-          s"objAgg=${n("ObjectHashAggregate")} scans=${scanCounts(plan).mkString(",")}")
-      } catch { case e: Throwable =>
-        println(s"AUDIT $name ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
-      } finally spark.catalog.clearCache()
-    }
+  private[graft] def audit(spark: SparkSession, dir: String, names: Seq[String])
+                          (emit: String => Unit): Unit =
+    SparkEntry.run(spark, dir, names) { (name, build) =>
+      val plan = build().queryExecution.executedPlan
+      val p = plan.toString
+      def n(node: String) = node.r.findAllIn(p).length
+      f"AUDIT $name%-24s cart=${n("CartesianProduct")} smj=${n("SortMergeJoin")} " +
+        s"bnlj=${n("BroadcastNestedLoopJoin")} sortAgg=${n("SortAggregate")} " +
+        s"objAgg=${n("ObjectHashAggregate")} scans=${scanCounts(plan).mkString(",")}"
+    } { (name, r) => emit(r.fold(msg => s"AUDIT $name ERROR $msg", identity)) }
 
   private def scanCounts(plan: SparkPlan): Seq[String] = {
     import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec}

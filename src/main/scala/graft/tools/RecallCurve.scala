@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Sessions
+import graft.{Bench, Sessions}
 import graft.operators.Similarity
 
 /** Dev tool: dump the ANN tuning evidence (ANN_RECALL.json) — the IVF
@@ -15,7 +15,7 @@ object RecallCurve {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RecallCurve <outPath> <sfDir> [...]")
     val out = args(0)
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = Sessions.local(Bench.env()._2)
 
     def rows(df: org.apache.spark.sql.DataFrame): String = {
       val cols = df.columns

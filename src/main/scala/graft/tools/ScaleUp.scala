@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Sessions, Tables}
+import graft.{Bench, Sessions, Tables}
 
 /** Dev tool: replicate a driver fixture N× with referential-integrity-
   * preserving key remapping, producing an sf1-equivalent corpus for the
@@ -29,7 +29,7 @@ object ScaleUp {
     val src = args(0)
     val out = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val (_, cpus) = Bench.env()
     val spark = Sessions.local(cpus)
 
     def maxOf(df: DataFrame, c: String): Long = {

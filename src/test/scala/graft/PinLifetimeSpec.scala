@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 import graft.operators.LlmOps
+import graft.sinks.SheetsShaped
 
 /** Pinned intermediates live as long as the DataFrame that reads them.
   * The dedup family pins shared scans (`PlanBridge.pin`) and d7's CC loop
@@ -58,6 +59,10 @@ class PinLifetimeSpec extends SparkTestBase {
     LlmOps.d2DedupMinhash(spark, Sf).count()
     LlmOps.d4NgramJaccard(spark, Sf).count()
     LlmOps.d7DedupResolve(spark, Sf).count()
+    // The only persist() calls left: st8's foreachBatch pin and the
+    // Sheets upload's, each unpersisted in a finally.
+    SparkEntry.queries("st8_stream_upsert")(spark, Sf).count()
+    SheetsShaped.upload(spark.range(5).toDF("id"), tempDir("pin_sheets"), "tab")
     assert(cacheManager.isEmpty, "a pin registered a CacheManager entry")
   }
 }
