@@ -792,14 +792,32 @@ object SparkEntry {
 
   /** 60-bit shingle hash — token-for-token twin of LlmOps.shingleHash60
     * (first 15 md5 hex chars, big-endian nibbles; the q_table_checksum
-    * encoding). The d5-family verify runs on hashed DISTINCT sets in
-    * both engines, so the int64 transformation is part of the checked
-    * semantics, never an engine-side assumption.
+    * encoding). Every MinHash-family verify ([[duckVerify]]) runs on
+    * hashed DISTINCT sets in both engines, so the int64 transformation
+    * is part of the checked semantics, never an engine-side assumption.
     */
   private def duckHash60(c: String): String =
     s"CAST(list_sum(list_transform(range(0, 15), i -> " +
       s"(strpos('0123456789abcdef', substr(md5($c), CAST(i + 1 AS INTEGER), 1)) - 1)::BIGINT * " +
       s"(1::BIGINT << (4 * (14 - CAST(i AS INTEGER)))))) AS BIGINT)"
+
+  /** The `shh` CTE: each doc's distinct hash60 set over the `sh` CTE's
+    * shingle lists — the twin of the engine's per-doc verify sets.
+    */
+  private val duckShh =
+    s"shh AS (SELECT doc_id, list_distinct(list_transform(s, x -> ${duckHash60("x")})) AS s FROM sh)"
+
+  /** The exact-Jaccard verify every MinHash-family twin grades (d2, the
+    * d7 chain through [[duckCcCte]], d5/d5b, st14): the `cand` CTE's
+    * pairs joined on `a` and `b` to their [[duckShh]] sets, carrying
+    * `cols`, with jaccard_milli = round-half-up(1000 · |sa ∩ sb| /
+    * |sa ∪ sb|): the twin of LlmOps.jaccardOf.
+    */
+  private def duckVerify(a: String, b: String, cols: String): String =
+    s"SELECT $cols, (2000*i + u) // (2*u) AS jaccard_milli FROM (" +
+      s"SELECT $cols, len(list_intersect(sa.s, sb.s)) AS i, " +
+      "len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)) AS u " +
+      s"FROM cand JOIN shh sa ON cand.$a = sa.doc_id JOIN shh sb ON cand.$b = sb.doc_id)"
 
   /** r15 seeded-family twin: the engine's native mix64 restated as exact
     * HUGEINT mod-2^64 arithmetic — ((a_h·v + b_h) mod 2^64) // 16, with
@@ -829,8 +847,7 @@ object SparkEntry {
     */
   private lazy val d5DedupSql =
     s"WITH tokd AS ($duckTok), " +
-      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), " +
-      s"shh AS (SELECT doc_id, list_distinct(list_transform(s, x -> ${duckHash60("x")})) AS s FROM sh), " +
+      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), $duckShh, " +
       s"sig AS (SELECT doc_id, ${duckSeededSig} AS g FROM sh), " +
       s"bands AS (SELECT sig.doc_id, d.source, b, md5(array_to_string(g[b*${LlmOps.RowsPerBand}+1 : b*${LlmOps.RowsPerBand}+${LlmOps.RowsPerBand}], '|')) AS bkey " +
       "FROM sig JOIN documents d ON sig.doc_id = d.doc_id CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)), " +
@@ -840,9 +857,7 @@ object SparkEntry {
       s"corpk AS (SELECT * FROM corp WHERE (b, bkey) IN (SELECT (b, bkey) FROM corp GROUP BY b, bkey HAVING count(*) <= ${LlmOps.LshBucketCap})), " +
       "cand AS (SELECT DISTINCT n.doc_id AS new_doc, c.doc_id AS existing_doc FROM bands n JOIN corpk c " +
       "ON n.b = c.b AND n.bkey = c.bkey AND n.source = 'src0') " +
-      "SELECT new_doc, existing_doc, (2000*i + u) // (2*u) AS jaccard_milli FROM (" +
-      "SELECT new_doc, existing_doc, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)) AS u " +
-      "FROM cand JOIN shh sa ON cand.new_doc = sa.doc_id JOIN shh sb ON cand.existing_doc = sb.doc_id)"
+      duckVerify("new_doc", "existing_doc", "new_doc, existing_doc")
 
   /** t30 twin: the learn loop unrolled as [[LlmOps.BpeLearnRounds]] CTE
     * stages — per round, pair counts over the current symbolization, a
@@ -881,18 +896,15 @@ object SparkEntry {
     */
   private lazy val st14NeardupSql: String =
     s"WITH tokd AS ($duckTok), " +
-      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), " +
-      s"shh AS (SELECT doc_id, list_distinct(list_transform(s, x -> ${duckHash60("x")})) AS s FROM sh), " +
+      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), $duckShh, " +
       s"sig AS (SELECT doc_id, ${duckSeededSig} AS g FROM sh), " +
       s"bands AS (SELECT sig.doc_id, d.source, b, md5(array_to_string(g[b*${LlmOps.RowsPerBand}+1 : b*${LlmOps.RowsPerBand}+${LlmOps.RowsPerBand}], '|')) AS bkey " +
       "FROM sig JOIN documents d ON sig.doc_id = d.doc_id CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)), " +
       "corp AS (SELECT * FROM bands WHERE source != 'src0'), " +
       s"corpk AS (SELECT * FROM corp WHERE (b, bkey) IN (SELECT (b, bkey) FROM corp GROUP BY b, bkey HAVING count(*) <= ${LlmOps.LshBucketCap})), " +
-      "cand AS (SELECT n.doc_id AS new_doc, c.doc_id AS existing_doc, n.b AS band FROM bands n JOIN corpk c " +
+      "cand AS (SELECT n.doc_id AS new_doc, c.doc_id AS existing_doc, CAST(n.b AS BIGINT) AS band FROM bands n JOIN corpk c " +
       "ON n.b = c.b AND n.bkey = c.bkey AND n.source = 'src0') " +
-      "SELECT new_doc, existing_doc, CAST(band AS BIGINT) AS band, (2000*i + u) // (2*u) AS jaccard_milli FROM (" +
-      "SELECT new_doc, existing_doc, band, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)) AS u " +
-      "FROM cand JOIN shh sa ON cand.new_doc = sa.doc_id JOIN shh sb ON cand.existing_doc = sb.doc_id)"
+      duckVerify("new_doc", "existing_doc", "new_doc, existing_doc, band")
 
   private def duckOcc(p: String): String =
     s"(length(text) - length(replace(text, '$p', ''))) // ${p.length}"
@@ -919,19 +931,26 @@ object SparkEntry {
       "AND (o1.d_dst < o2.d_dst OR (o1.d_dst = o2.d_dst AND o1.dst < o2.dst)) " +
       "JOIN o o3 ON o3.src = o1.dst AND o3.dst = o2.dst"
 
+  /** d2's CTE chain up to its banded candidates (`cand`), with the
+    * corpus's hashed verify sets (`shh`): the twin of
+    * LlmOps.d2DedupMinhashOf, shared by d2 and [[duckCcCte]].
+    */
+  private lazy val duckD2Ctes =
+    s"tokd AS ($duckTok), " +
+      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), $duckShh, " +
+      s"sig AS (SELECT doc_id, ${duckSeededSig} AS g FROM sh), " +
+      s"bands0 AS (SELECT doc_id, b, md5(array_to_string(g[b*${LlmOps.RowsPerBand}+1 : b*${LlmOps.RowsPerBand}+${LlmOps.RowsPerBand}], '|')) AS bkey FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)), " +
+      // Band-skew ceiling mirrored from capBandBuckets: over-cap
+      // buckets are degenerate clusters, not near-dup candidates.
+      s"bands AS (SELECT * FROM bands0 WHERE (b, bkey) IN (SELECT (b, bkey) FROM bands0 GROUP BY b, bkey HAVING count(*) <= ${LlmOps.LshBucketCap})), " +
+      "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id)"
+
   // Connected-components prefix shared by d7 and d12: recursive transitive
   // closure over the symmetrized near-dup edges (UNION dedups, so cycles
   // terminate); `reach(a, b)` = b reachable from a, canonical = min(b).
   private lazy val duckCcCte =
-    s"WITH RECURSIVE tokd AS ($duckTok), " +
-      s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), " +
-      s"sig AS (SELECT doc_id, ${duckSeededSig} AS g FROM sh), " +
-      s"bands0 AS (SELECT doc_id, b, md5(array_to_string(g[b*${LlmOps.RowsPerBand}+1 : b*${LlmOps.RowsPerBand}+${LlmOps.RowsPerBand}], '|')) AS bkey FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)), " +
-      s"bands AS (SELECT * FROM bands0 WHERE (b, bkey) IN (SELECT (b, bkey) FROM bands0 GROUP BY b, bkey HAVING count(*) <= ${LlmOps.LshBucketCap})), " +
-      "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id), " +
-      "jac AS (SELECT doc_a, doc_b, (2000*i + u) // (2*u) AS jaccard_milli FROM (" +
-      "SELECT doc_a, doc_b, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)) AS u " +
-      "FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)), " +
+    s"WITH RECURSIVE $duckD2Ctes, " +
+      s"jac AS (${duckVerify("doc_a", "doc_b", "doc_a, doc_b")}), " +
       s"edges AS (SELECT doc_a, doc_b FROM jac WHERE jaccard_milli >= ${LlmOps.ResolveThreshold} " +
       s"UNION ALL SELECT doc_b, doc_a FROM jac WHERE jaccard_milli >= ${LlmOps.ResolveThreshold}), " +
       "reach(a, b) AS (SELECT doc_id, doc_id FROM documents UNION SELECT r.a, e.doc_b FROM reach r JOIN edges e ON r.b = e.doc_a)"
@@ -1043,17 +1062,7 @@ object SparkEntry {
         "SELECT b AS band, bkey, CAST(count(*) AS BIGINT) AS n_docs, " +
         s"count(*) > ${LlmOps.LshBucketCap} AS dropped FROM bands0 GROUP BY b, bkey"),
     "d2_dedup_minhash" ->
-      (s"WITH tokd AS ($duckTok), " +
-        s"sh AS (SELECT doc_id, $duckShingles AS s FROM tokd WHERE len(tok) >= 3), " +
-        s"sig AS (SELECT doc_id, ${duckSeededSig} AS g FROM sh), " +
-        s"bands0 AS (SELECT doc_id, b, md5(array_to_string(g[b*${LlmOps.RowsPerBand}+1 : b*${LlmOps.RowsPerBand}+${LlmOps.RowsPerBand}], '|')) AS bkey FROM sig CROSS JOIN (VALUES (0),(1),(2),(3)) AS t(b)), " +
-        // Band-skew ceiling mirrored from capBandBuckets: over-cap
-        // buckets are degenerate clusters, not near-dup candidates.
-        s"bands AS (SELECT * FROM bands0 WHERE (b, bkey) IN (SELECT (b, bkey) FROM bands0 GROUP BY b, bkey HAVING count(*) <= ${LlmOps.LshBucketCap})), " +
-        "cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b FROM bands a JOIN bands b ON a.b = b.b AND a.bkey = b.bkey AND a.doc_id < b.doc_id) " +
-        "SELECT doc_a, doc_b, (2000*i + u) // (2*u) AS jaccard_milli FROM (" +
-        "SELECT doc_a, doc_b, len(list_intersect(sa.s, sb.s)) AS i, len(sa.s) + len(sb.s) - len(list_intersect(sa.s, sb.s)) AS u " +
-        "FROM cand JOIN sh sa ON cand.doc_a = sa.doc_id JOIN sh sb ON cand.doc_b = sb.doc_id)"),
+      (s"WITH $duckD2Ctes " + duckVerify("doc_a", "doc_b", "doc_a, doc_b")),
     "d3_simhash" ->
       (s"WITH tokd AS ($duckTok), " +
         "t8 AS (SELECT doc_id, list_transform(tok, t -> substr(md5(t), 1, 8)) AS tok8 FROM tokd) " +

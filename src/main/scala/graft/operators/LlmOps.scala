@@ -308,8 +308,10 @@ object LlmOps {
     * exact-Jaccard verify run on SORTED LONG ARRAYS through the native
     * codegen'd `sorted_intersect_count` merge instead of interpreted
     * per-pair string `array_intersect` (~175 µs/pair, the construct the
-    * repo measured and removed from d4 in round 3 — VERDICT r11 #3
-    * flagged the same cost left in d5/d5b/st14). Equality contract
+    * repo measured and removed from d4 in round 3). Every MinHash-family
+    * verify runs on these sets: d2 and everything built on
+    * [[d2DedupMinhashOf]] (d7, the label index, d7c, d12, d13 and the
+    * curation manifests), d5/d5b and st14. Equality contract
     * (r17, ADVICE r16): every consumer whose AGGREGATES run over the
     * hash — the per-doc verify sets here, but also d4's GLOBAL df
     * counts and block intersections — must hash in BOTH engines, so
@@ -323,20 +325,33 @@ object LlmOps {
   private[graft] def shingleHash60(c: String): String =
     s"cast(conv(substring(md5($c), 1, 15), 16, 10) as bigint)"
 
-  /** (doc_id → idName, sorted distinct shingle-hash array → setName):
-    * per-doc verify sets, materialized behind the aggregation barrier so
-    * the array construction can never be inlined into a downstream
-    * per-PAIR projection by projection collapse (measured as the d4
-    * bottleneck). sort_array(collect_set(hash)) is order-independent, so
-    * results are deterministic under any partitioning — and sortedness
-    * is exactly [[graft.functions.SortedIntersectCount]]'s input
-    * contract.
+  /** (doc_id, sset = sorted distinct shingle-hash array): per-doc
+    * verify sets, materialized behind the aggregation barrier so the
+    * array construction can never be inlined into a downstream per-PAIR
+    * projection by projection collapse (measured as the d4 bottleneck).
+    * sort_array(collect_set(hash)) is order-independent, so results are
+    * deterministic under any partitioning — and sortedness is exactly
+    * [[graft.functions.SortedIntersectCount]]'s input contract.
     */
-  private def docShinglesOf(shingles: DataFrame, idName: String, setName: String): DataFrame =
+  private def docShinglesOf(shingles: DataFrame): DataFrame =
     shingles
       .groupBy("doc_id")
-      .agg(sort_array(collect_set(expr(shingleHash60("shingle")))).as(setName))
-      .withColumnRenamed("doc_id", idName)
+      .agg(sort_array(collect_set(expr(shingleHash60("shingle")))).as("sset"))
+
+  /** The MinHash family's exact-Jaccard verify: each candidate (a, b)
+    * pair joined to its two [[docShinglesOf]]-shaped (id, set) tables and
+    * scored by the native codegen'd `sorted_intersect_count` merge.
+    * Output: (a, b, jaccard_milli). Every candidate doc has a set (its
+    * bands come from its shingles), so the inner joins drop no pair,
+    * i = 0 included.
+    */
+  private def jaccardOf(candidates: DataFrame, a: String, b: String,
+                        setsA: DataFrame, setsB: DataFrame): DataFrame =
+    candidates
+      .join(setsA.toDF(a, "sa"), a)
+      .join(setsB.toDF(b, "sb"), b)
+      .withColumn("i", expr("sorted_intersect_count(sa, sb)"))
+      .select(col(a), col(b), expr(milli("i", "size(sa) + size(sb) - i")).as("jaccard_milli"))
 
   /** Round-half-up(1000 * num / den) in pure integer arithmetic.
     * private[graft] so MilliSpec can property-test it against the
@@ -450,46 +465,26 @@ object LlmOps {
     * ~linear while recall for true near-dups (J close to 1) stays high.
     */
   def d2DedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    d2DedupMinhashOf(shingled(shingleRows(spark, dir)))
+    d2DedupMinhashOf(shingleRows(spark, dir))
 
-  /** A corpus's shingle rows and their distinct (doc_id, shingle) set,
-    * both pinned: the tokenized corpus every shingle consumer of one
-    * query reads. The shingle scan (tokenize + window) feeds d2's band
-    * table and its verify set, so it runs once per query, not once per
-    * derived table (round-2 finding: the dedup family's dominant shared
-    * cost); a composed query hands the same pair to t11
-    * ([[curationNeardupManifest]]).
+  /** [[d2DedupMinhash]] over an arbitrary (doc_id, shingle) row table —
+    * the seam the label-index build ([[buildLabelIndex]]) and the
+    * incremental label ingest ([[d7cResolveIngest]]'s batch-internal
+    * edges) use to run the same oracle-checked pipeline on a document
+    * SUBSET. `rows` is pinned here (a no-op for a caller's pin): the
+    * band table and the verify sets both read it, so the shingle scan
+    * (tokenize + window, the dedup family's dominant shared cost) runs
+    * once per query; a composed caller pins it first to share it
+    * ([[curationNeardupManifest]] hands the same pin to t11).
     */
-  private[graft] final case class Shingled(rows: DataFrame, set: DataFrame)
-
-  private[graft] def shingled(rows: DataFrame): Shingled = {
-    val pinned = PlanBridge.pin(rows)
-    Shingled(pinned, PlanBridge.pin(pinned.distinct()))
-  }
-
-  /** [[d2DedupMinhash]] over an arbitrary shingle-row table — the seam
-    * the label-index build ([[buildLabelIndex]]) and the incremental
-    * label ingest ([[d7cResolveIngest]]'s batch-internal edges) use to
-    * run the same oracle-checked pipeline on a document SUBSET.
-    *
-    * `keepZeroOverlap = false` (r14, the ≥-threshold consumers' form):
-    * an i = 0 candidate pair can never pass any positive Jaccard
-    * threshold, so d7/d7c edge generation takes the INNER verify join —
-    * the candidate set is then consumed exactly once (by the
-    * intersection build), needs no cache, and the final left join's
-    * second candidate scan disappears. Catalog d2 keeps the left form:
-    * its output contract includes the guaranteed-but-disjoint
-    * candidates at jaccard 0 (and its oracle states them).
-    */
-  private[graft] def d2DedupMinhashOf(sh: Shingled,
-                                      keepZeroOverlap: Boolean = true): DataFrame = {
+  private[graft] def d2DedupMinhashOf(rows: DataFrame): DataFrame = {
     // The bands and shingle-set tables are each used on BOTH sides of a
     // self-join; exchange reuse does not fire across the renamed join
     // branches (verified in the physical plan), so each would compute
     // twice. Pinning them is exactly the "materialize the signature
     // table" step a production-scale dedup run performs. Both are tiny
     // relative to the corpus (docs × bands rows; docs rows).
-    val shingles = sh.rows
+    val shingles = PlanBridge.pin(rows)
     // Pin the UNCAPPED band table too: capBandBuckets reads its
     // argument on both sides (band rows + the bucket-size aggregate),
     // and with only the capped OUTPUT cached the signature aggregation
@@ -502,44 +497,13 @@ object LlmOps {
     val bands = PlanBridge.pin(capBandBuckets(rawBands))
     val bandsA = bands.toDF("doc_a", "band_a", "bkey_a")
     val bandsB = bands.toDF("doc_b", "band_b", "bkey_b")
-    // Candidates feed both the intersection build and the final
-    // left join below — pin so the banded self-join runs once (left
-    // form only; the inner form consumes them exactly once).
-    val candidates0 = bandsA
+    val candidates = bandsA
       .join(bandsB, col("band_a") === col("band_b") && col("bkey_a") === col("bkey_b"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b")
       .distinct()
-    val candidates =
-      if (keepZeroOverlap) PlanBridge.pin(candidates0) else candidates0
-    // Exact-Jaccard verify, RELATIONALLY (the d4/d9 lesson, applied here
-    // in round 9): per-pair array_intersect over collected shingle sets
-    // is interpreted per row and scales with |candidates|·|set| — the
-    // dominant term once near-dup density is real (the sf1 sweep's
-    // 5.7× came from ~10⁴× candidate growth hitting that per-pair cost).
-    // Instead: candidate pairs explode against the distinct (doc,
-    // shingle) rows of ONE side, equi-join the other side on (doc_b,
-    // shingle), and count — pure shuffle/group-count, whole-stage
-    // codegen, the shape that survives 100 TB. Values are identical
-    // (set sizes from distinct rows == collect_set sizes), and the left
-    // join + coalesce keeps the guaranteed-but-cheap i=0 case exact.
-    val toks = sh.set
-    val sizes = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = candidates
-      .join(toks.toDF("doc_a", "shingle"), "doc_a")
-      .join(toks.toDF("doc_b", "shingle"), Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-    val withZero =
-      if (keepZeroOverlap) candidates.join(inter, Seq("doc_a", "doc_b"), "left")
-      else inter
-    withZero
-      .join(sizes.toDF("doc_a", "na"), "doc_a")
-      .join(sizes.toDF("doc_b", "nb"), "doc_b")
-      .select(
-        col("doc_a"), col("doc_b"),
-        expr(milli(
-          "coalesce(i, 0)",
-          "na + nb - coalesce(i, 0)")).as("jaccard_milli"))
+    val sets = PlanBridge.pin(docShinglesOf(shingles))
+    jaccardOf(candidates, "doc_a", "doc_b", sets, sets)
   }
 
   // ---------------------------------------------------------------------
@@ -730,14 +694,8 @@ object LlmOps {
       .join(corpusBands, col("band_n") === col("band") && col("bkey_n") === col("bkey"))
       .select("new_doc", "existing_doc")
       .distinct()
-    val sh = PlanBridge.pin(docShinglesOf(shingles, "doc_id", "sset"))
-    candidates
-      .join(sh.toDF("new_doc", "sa"), "new_doc")
-      .join(sh.toDF("existing_doc", "sb"), "existing_doc")
-      .withColumn("i", expr("sorted_intersect_count(sa, sb)"))
-      .select(
-        col("new_doc"), col("existing_doc"),
-        expr(milli("i", "size(sa) + size(sb) - i")).as("jaccard_milli"))
+    val sets = PlanBridge.pin(docShinglesOf(shingles))
+    jaccardOf(candidates, "new_doc", "existing_doc", sets, sets)
   }
 
   // ---------------------------------------------------------------------
@@ -774,7 +732,7 @@ object LlmOps {
     Scale.writeBucketed(capBandBuckets(rawBands),
       s"${prefix}_bands", "bkey", buckets)
     PlanBridge.release(rawBands)
-    Scale.writeBucketed(docShinglesOf(shingles, "doc_id", "sset"), s"${prefix}_shingles", "doc_id", buckets)
+    Scale.writeBucketed(docShinglesOf(shingles), s"${prefix}_shingles", "doc_id", buckets)
     PlanBridge.release(shingles)
   }
 
@@ -812,13 +770,8 @@ object LlmOps {
       .join(corpusBands, col("band_n") === col("band") && col("bkey_n") === col("bkey"))
       .select("new_doc", "existing_doc")
       .distinct()
-    candidates
-      .join(docShinglesOf(batchShingles, "new_doc", "sa"), "new_doc")
-      .join(spark.table(s"${prefix}_shingles").toDF("existing_doc", "sb"), "existing_doc")
-      .withColumn("i", expr("sorted_intersect_count(sa, sb)"))
-      .select(
-        col("new_doc"), col("existing_doc"),
-        expr(milli("i", "size(sa) + size(sb) - i")).as("jaccard_milli"))
+    jaccardOf(candidates, "new_doc", "existing_doc",
+      docShinglesOf(batchShingles), spark.table(s"${prefix}_shingles"))
   }
 
   /** D5b: [[d5IncrementalAgainstIndex]] as a self-contained query — the
@@ -871,7 +824,7 @@ object LlmOps {
     */
   def d7DedupResolve(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsSpread(spark, dir)
-    d7ResolveOf(spark, docs, shingled(shingleRowsOf(docs)))
+    d7ResolveOf(docs, shingleRowsOf(docs))
   }
 
   /** [[d7DedupResolve]] over an arbitrary document table — the seam the
@@ -880,14 +833,13 @@ object LlmOps {
     * the fixture-parallelism spread where the caller wants it (a filter
     * of a spread scan preserves the layout).
     */
-  private[graft] def d7ResolveOf(spark: SparkSession, docs: DataFrame,
-                                 sh: Shingled): DataFrame = {
+  private[graft] def d7ResolveOf(docs: DataFrame, shingles: DataFrame): DataFrame = {
     // No pin on the edge list: connectedComponents eagerly
     // localCheckpoints it as its first act, so the candidate pipeline
     // runs exactly once either way and a cache layer would only add a
     // write it never reads back (r11 — the persist predated the
     // edge-level checkpoint).
-    val edges = d2DedupMinhashOf(sh, keepZeroOverlap = false)
+    val edges = d2DedupMinhashOf(shingles)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("doc_a"), col("doc_b"))
     val identity = docs
@@ -1185,7 +1137,7 @@ object LlmOps {
                       excludeSource: Option[String]): Unit = {
     val docs = excludeSource.foldLeft(Tables.documentsSpread(spark, dir))(
       (d, s) => d.filter(col("source") =!= s))
-    Scale.writeBucketed(d7ResolveOf(spark, docs, shingled(shingleRowsOf(docs))),
+    Scale.writeBucketed(d7ResolveOf(docs, shingleRowsOf(docs)),
       s"${prefix}_labels", "doc_id",
       spark.sparkContext.defaultParallelism)
   }
@@ -1269,7 +1221,7 @@ object LlmOps {
     val batchCorpus = d5IngestOf(spark, bandPrefix, batchShingles)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("new_doc").as("doc_a"), col("existing_doc").as("doc_b"))
-    val batchInternal = d2DedupMinhashOf(shingled(batchShingles), keepZeroOverlap = false)
+    val batchInternal = d2DedupMinhashOf(batchShingles)
       .filter(col("jaccard_milli") >= ResolveThreshold)
       .select(col("doc_a"), col("doc_b"))
     // Contract corpus endpoints to their stored representative (3.);
@@ -1675,55 +1627,30 @@ object LlmOps {
     * map-combinable hash-count gate + one per-doc count — no joins wider
     * than the qualifying-hash probe; no all-pairs anywhere.
     */
-  def t31SpanCoverage(spark: SparkSession, dir: String): DataFrame =
-    spanCoverageOf(spark, dir, pinPostAgg = false)
-
-  /** The t31 pipeline with the pin placed either on the raw per-position
-    * rolled table (`pinPostAgg = false` — the standalone t31 shape) or on
-    * the (doc, hash, position-count) AGGREGATE (`true` — one row per
-    * distinct (doc, hash); n_windows = Σk and the cross-doc gate's
-    * distinct comes free, so output is identical by algebra). Which pin
-    * wins depends on the consumer, both measured r17 interleaved at
-    * sf0.1: STANDALONE the post-agg pin pays an extra exchange inside
-    * the pin build for nothing (0.56 → 0.74 s, −32%), but COMPOSED into
-    * q_curation_coverage — where the pin shares executor memory with the
-    * d12b index pins — halving the cached bytes wins 3.54 → 3.02 s
-    * (−15%, VERDICT r16 #4). Guide §5 (caching competes with execution
-    * memory): pin the smaller table when the query holds several pins,
-    * the cheaper-to-build one when it holds one.
-    */
-  private[graft] def spanCoverageOf(spark: SparkSession, dir: String,
-                                    pinPostAgg: Boolean): DataFrame = {
-    val rolledRaw = Tables.documentsSpread(spark, dir)
-      .filter(length(col("text")) >= SpanWindow)
-      .select(col("doc_id"), expr(s"rolling_hashes(text, $SpanWindow)"))
-    if (pinPostAgg) {
-      val agg = PlanBridge.pin(
-        rolledRaw.groupBy("doc_id", "hash").agg(count(lit(1)).as("k")))
-      val perDoc = agg.groupBy("doc_id").agg(sum("k").as("n_windows"))
-      val crossDoc = agg.groupBy("hash")
-        .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
-      val dupWin = agg.join(crossDoc, "hash")
-        .groupBy("doc_id").agg(sum("k").as("n_dup_windows"))
-      perDoc.join(dupWin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_windows"),
-          coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
-          expr(milli("coalesce(n_dup_windows, 0)", "n_windows"))
-            .as("dup_coverage_milli"))
-    } else {
-      val rolled = PlanBridge.pin(rolledRaw)
-      val perDoc = rolled.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
-      val crossDoc = rolled.select("doc_id", "hash").distinct()
-        .groupBy("hash").agg(count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2).select("hash")
-      val dupWin = rolled.join(crossDoc, "hash")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_dup_windows"))
-      perDoc.join(dupWin, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_windows"),
-          coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
-          expr(milli("coalesce(n_dup_windows, 0)", "n_windows"))
-            .as("dup_coverage_milli"))
-    }
+  def t31SpanCoverage(spark: SparkSession, dir: String): DataFrame = {
+    // The pin holds the (doc, hash, position-count) aggregate, one row
+    // per distinct (doc, hash), not the per-position rolled table:
+    // n_windows = Σk and the cross-doc gate's distinct comes free, and
+    // the cached bytes halve. Measured at sf0.1 on 4 CPUs (interleaved
+    // JVMs, Profile time): inside q_curation_coverage, where the pin
+    // shares executor memory with the d12b index pins, it reads 1.91 s
+    // against 2.19 s for the raw pin; standalone t31 pays the extra
+    // exchange in the pin build, 0.40 s against 0.30 s.
+    val agg = PlanBridge.pin(
+      Tables.documentsSpread(spark, dir)
+        .filter(length(col("text")) >= SpanWindow)
+        .select(col("doc_id"), expr(s"rolling_hashes(text, $SpanWindow)"))
+        .groupBy("doc_id", "hash").agg(count(lit(1)).as("k")))
+    val perDoc = agg.groupBy("doc_id").agg(sum("k").as("n_windows"))
+    val crossDoc = agg.groupBy("hash")
+      .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
+    val dupWin = agg.join(crossDoc, "hash")
+      .groupBy("doc_id").agg(sum("k").as("n_dup_windows"))
+    perDoc.join(dupWin, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_windows"),
+        coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
+        expr(milli("coalesce(n_dup_windows, 0)", "n_windows"))
+          .as("dup_coverage_milli"))
   }
 
   /** Winnowing window: every [[WinnowWindow]] consecutive span hashes
@@ -2184,15 +2111,16 @@ object LlmOps {
     * the candidate pipeline + CC loop execute once in the composed plan
     * (asserted by Round11Spec via [[ccRuns]]), not once per consuming
     * stage. The corpus is tokenized once too: t11's benchmark-overlap
-    * check reads the shingle set d7's candidate pipeline pinned.
+    * check reads the shingle rows d7's candidate pipeline pinned.
     * Remaining stages and the output contract are identical to
     * [[curationManifest]].
     */
   def curationNeardupManifest(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsSpread(spark, dir)
-    val sh = shingled(shingleRowsOf(docs))
+    val sh = PlanBridge.pin(shingleRowsOf(docs))
     curationNeardupFrom(spark, dir,
-      d12From(withPinnedQuality(spark, dir, d7ResolveOf(spark, docs, sh))), t11Of(sh.set))
+      d12From(withPinnedQuality(spark, dir, d7ResolveOf(docs, sh))),
+      t11Of(PlanBridge.pin(sh.distinct())))
   }
 
   /** [[curationNeardupManifest]] with the resolution stage read from the
@@ -2225,14 +2153,13 @@ object LlmOps {
     *    the graded production form, same discipline as
     *    [[curationNeardupIdx]]): CC labels computed once per corpus
     *    snapshot, never re-derived per manifest run;
-    *  - coverage from [[spanCoverageOf]] with the POST-AGGREGATE pin
-    *    (r17, VERDICT r16 #4): one cached row per distinct (doc, hash)
-    *    instead of the 12M-row per-position rolled table, so the
-    *    generator still runs once inside the composed plan but the pin
-    *    holds roughly half the bytes next to the d12b index pins
-    *    (measured −15%, see spanCoverageOf); docs too short to hold one
-    *    window have no coverage row and are KEPT (no duplication
-    *    evidence) — the anti-join encodes that directly.
+    *  - coverage from [[t31SpanCoverage]], whose pin holds one row per
+    *    distinct (doc, hash) instead of the 12M-row per-position rolled
+    *    table, so the generator runs once inside the composed plan and
+    *    the pin holds roughly half the bytes next to the d12b index
+    *    pins; docs too short to hold one window have no coverage row
+    *    and are KEPT (no duplication evidence) — the anti-join encodes
+    *    that directly.
     *
     * Scale shape: the over-ceiling set is per-doc keys (tiny next to the
     * corpus) → broadcast-able anti join; everything else is the already
@@ -2241,10 +2168,7 @@ object LlmOps {
     * optimizations under the same oracle.
     */
   def curationCoverageManifest(spark: SparkSession, dir: String): DataFrame = {
-    // pinPostAgg: inside this composition the coverage pin shares
-    // executor memory with the d12b index pins, and the halved cached
-    // bytes win the r17 A/B (3.54 -> 3.02 s) — see spanCoverageOf.
-    val coverageBad = spanCoverageOf(spark, dir, pinPostAgg = true)
+    val coverageBad = t31SpanCoverage(spark, dir)
       .filter(col("dup_coverage_milli") > CoverageCeilingMilli)
       .select("doc_id")
     curationNeardupFrom(spark, dir, d12bQualityIdx(spark, dir), t11Decontaminate(spark, dir))

@@ -49,6 +49,33 @@ class LlmOpsSpec extends SparkTestBase {
       .foreach(j => assert(j < 700L))
   }
 
+  test("d2's jaccard equals a join-and-count over distinct (doc, hash60) rows") {
+    // The verify merges per-doc sorted hash sets with the native
+    // sorted_intersect_count; recompute every pair here the relational
+    // way (distinct rows, join on the hash, count). The left join keeps
+    // candidate pairs that share no hash (i = 0) in the comparison.
+    import org.apache.spark.sql.functions.{col, count, expr, lit}
+    val d2 = LlmOps.d2DedupMinhash(spark, Sf)
+    val hashed = LlmOps.shingleRows(spark, Sf)
+      .select(col("doc_id"), expr(LlmOps.shingleHash60("shingle")).as("h"))
+      .distinct()
+    val sizes = hashed.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val pairs = d2.select("doc_a", "doc_b")
+    val inter = pairs
+      .join(hashed.toDF("doc_a", "h"), "doc_a")
+      .join(hashed.toDF("doc_b", "h"), Seq("doc_b", "h"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
+    val expected = pairs.join(inter, Seq("doc_a", "doc_b"), "left")
+      .join(sizes.toDF("doc_a", "na"), "doc_a")
+      .join(sizes.toDF("doc_b", "nb"), "doc_b")
+      .selectExpr("doc_a", "doc_b", "coalesce(i, 0) AS i", "na + nb - coalesce(i, 0) AS u")
+      .as[(Long, Long, Long, Long)].collect()
+      .map { case (a, b, i, u) => (a, b) -> (2000 * i + u) / (2 * u) }.toMap
+    val got = d2.as[(Long, Long, Long)].collect().map { case (a, b, j) => (a, b) -> j }.toMap
+    assert(got.nonEmpty, "sf0.001 should yield d2 candidate pairs")
+    assert(got === expected)
+  }
+
   test("d5 incremental: new batch (src0) finds its duplicates in the existing corpus") {
     // doc 0 (src0, new) vs doc 1 (src1, exact copy) and doc 2 (src2, near-dup).
     val pairs = LlmOps.d5DedupIncremental(spark, docsDir).collect()
@@ -188,16 +215,26 @@ class LlmOpsSpec extends SparkTestBase {
     assert(fp(0L)._1 !== fp(2L)._1) // near-dup has different exact hash
   }
 
-  test("t31 coverage: raw-rolled pin and post-aggregate pin are row-identical") {
-    // r17 (VERDICT r16 #4): q_curation_coverage pins the (doc, hash,
-    // position-count) aggregate while standalone t31 pins the raw rolled
-    // table — a pure pin-placement choice, so the two shapes must agree
-    // row-for-row on every column (n_windows = Σk by algebra).
-    val a = LlmOps.spanCoverageOf(spark, Sf, pinPostAgg = false)
-    val b = LlmOps.spanCoverageOf(spark, Sf, pinPostAgg = true)
-    assert(a.count() > 0)
-    assert(a.exceptAll(b).count() === 0)
-    assert(b.exceptAll(a).count() === 0)
+  test("t31 coverage: the post-aggregate pin equals a per-position recompute") {
+    // t31 pins the (doc, hash, position-count) aggregate; recompute the
+    // coverage here from the raw per-position rolled rows (n_windows =
+    // Σk and the cross-doc gate's distinct by algebra), row for row.
+    import org.apache.spark.sql.functions.{col, count, expr, length, lit}
+    val rolled = Tables.documents(spark, Sf)
+      .filter(length(col("text")) >= LlmOps.SpanWindow)
+      .select(col("doc_id"), expr(s"rolling_hashes(text, ${LlmOps.SpanWindow})"))
+    val crossDoc = rolled.select("doc_id", "hash").distinct()
+      .groupBy("hash").agg(count(lit(1)).as("nd")).filter(col("nd") >= 2)
+    val expected = rolled.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
+      .join(rolled.join(crossDoc, "hash").groupBy("doc_id").agg(count(lit(1)).as("n_dup")),
+        Seq("doc_id"), "left")
+      .selectExpr("doc_id", "n_windows", "coalesce(n_dup, 0) AS n_dup")
+      .as[(Long, Long, Long)].collect()
+      .map { case (d, n, k) => (d, n, k, (2000 * k + n) / (2 * n)) }.toSet
+    val got = LlmOps.t31SpanCoverage(spark, Sf).as[(Long, Long, Long, Long)].collect().toSet
+    assert(got.nonEmpty)
+    assert(got.exists(_._3 > 0), "sf0.001 should hold cross-doc duplicated windows")
+    assert(got === expected)
   }
 
   test("per-row and aggregating minhash formulations produce identical bands") {

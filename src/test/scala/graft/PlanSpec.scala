@@ -36,9 +36,11 @@ class PlanSpec extends SparkTestBase {
 
   test("dedup plans avoid interpreted per-row set ops and lambda generators") {
     import graft.operators.LlmOps
-    // d4's intersection sizes are relational (shingle-row join +
-    // group-count) — a regression back to per-pair array_intersect
-    // (~175 µs/pair interpreted) would re-introduce the round-3 bottleneck.
+    // d4 forms its pairs from the shingle-row join itself, so its
+    // intersection sizes are that join's group-count (the MinHash family
+    // verifies its banded candidates with sorted_intersect_count, see
+    // the next test). Neither may fall back to per-pair array_intersect
+    // (~175 µs/pair interpreted), the round-3 bottleneck.
     val d4 = plan(LlmOps.d4NgramJaccard(spark, Sf))
     assert(!d4.contains("array_intersect"), "d4 must not compute per-pair array_intersect")
     // d2's band generator must be a plain-column explode, not a
@@ -47,6 +49,22 @@ class PlanSpec extends SparkTestBase {
     assert(!d2.contains("lambdafunction"), "d2 must not evaluate lambda HOFs per row")
     val d6 = plan(LlmOps.d6SimhashNeardup(spark, Sf))
     assert(!d6.contains("lambdafunction"), "d6 must not evaluate lambda HOFs per row")
+  }
+
+  test("d2 verifies candidates with codegen'd sorted_intersect_count, no shingle join") {
+    import graft.operators.LlmOps
+    val df = LlmOps.d2DedupMinhash(spark, Sf)
+    df.collect()
+    val p = plan(df)
+    val line = p.linesIterator.find(l =>
+      l.contains("sorted_intersect_count") && l.contains("Project"))
+    assert(line.isDefined, s"no sorted_intersect_count projection in d2's plan:\n$p")
+    assert(line.get.contains("*("),
+      s"d2's sorted_intersect_count projection not codegen'd: ${line.get}")
+    val shingleJoins = p.linesIterator.filter(l =>
+      l.contains("Join") && "\\bshingle#".r.findFirstIn(l).isDefined).toSeq
+    assert(shingleJoins.isEmpty, s"d2 must not join on shingle rows:\n${shingleJoins.mkString("\n")}")
+    assert(!p.contains("array_intersect"), "d2 must not compute per-pair array_intersect")
   }
 
   test("subquery + decontamination plans broadcast the small side (q_scalar, t11)") {

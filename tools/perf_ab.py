@@ -19,6 +19,9 @@ benchmark holds against each metric's `bound`: a change that moves a metric
 far must also keep its runs within that many parent units), how many seed
 pairs moved the better way (from BENCHMARK.json's `better`), and the ratio of
 every seed pair.
+
+The exit status is 0 only when every run printed a result and no operation
+failed; otherwise it is 1, after the summary.
 """
 import argparse
 import json
@@ -90,6 +93,11 @@ def spread(values, base=None):
     return (q3 - q1) / base if base else None
 
 
+def complete(runs):
+    """True when every run of both sides has a result and no failed operation."""
+    return all(r is not None and r["failed"] == 0 for res in runs.values() for r in res.values())
+
+
 def summarize(runs, better):
     """The summary's lines. Medians are over every seed a side has a result
     for; pair ratios and win counts over the seeds both sides have."""
@@ -149,6 +157,9 @@ def main():
             runs[side][seed] = run_one(dirs[side], a.workload, seed, bench["run_seconds"])
             print(f"RUN {side} {seed} {json.dumps(runs[side][seed])}", flush=True)
     print("\n".join(summarize(runs, directions(bench))))
+    if not complete(runs):
+        print("perf_ab: a run printed no result or an operation failed", file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -3,9 +3,12 @@ untraced for the benchmark's own run length.
 
     python3 tools/test_perf_ab.py
 """
+import contextlib
+import io
 import os
 import sys
 import unittest
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import perf_ab  # noqa: E402
@@ -72,6 +75,29 @@ class PerfAbTest(unittest.TestCase):
         self.assertEqual(float(job[1]), 3.0)   # both parent runs count in its median
         self.assertEqual(job[6], "1/1")        # only seed 1 is a pair
         self.assertEqual(job[7:], ["0.500"])
+
+    def test_complete_only_when_every_run_has_a_result_and_no_failure(self):
+        ok = runs({1: result(job_s=1.0)}, {1: result(job_s=0.9)})
+        self.assertTrue(perf_ab.complete(ok))
+        self.assertFalse(perf_ab.complete(runs({1: None, 2: None}, {1: result(), 2: result()})))
+        self.assertFalse(perf_ab.complete(runs({1: result()}, {1: result(failed=1)})))
+
+    def test_main_exits_nonzero_after_the_summary_when_a_side_has_no_result(self):
+        here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        results = {"parent": None, "change": result(job_s=1.0)}
+        argv = ["perf_ab.py", "--parent", "p", "--change", here, "--workload", "curation",
+                "--seeds", "1-2"]
+        out = io.StringIO()
+        with mock.patch.object(sys, "argv", argv), \
+                mock.patch.object(perf_ab, "run_one",
+                                  lambda checkout, *a: results["change" if checkout == here
+                                                              else "parent"]), \
+                contextlib.redirect_stdout(out), contextlib.redirect_stderr(io.StringIO()):
+            with self.assertRaises(SystemExit) as exit_:
+                perf_ab.main()
+        self.assertEqual(exit_.exception.code, 1)
+        self.assertIn("parent: 0 runs, 0 of 0 operations failed, no result for seeds [1, 2]",
+                      out.getvalue())
 
     def test_worse_change_counts_no_win_and_unknown_direction_shows_dash(self):
         out = perf_ab.summarize(runs({1: result(job_s=1.0, extra=5.0)},
