@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Local scratch directories: streaming checkpoints, symlink staging,
-  * and the tables a query writes and then reads back. Each dir is swept
+/** Local scratch directories: streaming checkpoints and the tables a
+  * query writes and then reads back. Each dir is swept
   * at JVM exit at the latest (deleteOnExit cannot do this: it is a no-op
   * on a non-empty directory); a dir behind a returned DataFrame goes
   * sooner, once no plan reads it ([[deleteWhenUnread]]). A resumable

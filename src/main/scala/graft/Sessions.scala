@@ -44,6 +44,21 @@ object Sessions {
     SparkSession.getDefaultSession.filter(s => !s.sparkContext.isStopped)
       .getOrElse(build(cpus))
 
+  /** Runs `f` with each of `settings` set on the session's runtime
+    * config, then restores every key, also when `f` throws: the value it
+    * had before, or unset when it was unset before.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(f: => T): T = {
+    val before = spark.conf.getAll
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally settings.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
+
   private def build(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1181,9 +1181,6 @@ object SparkEntry {
         "CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split FROM b"),
   )
 
-  // Rabin-Karp window-hash constants shared with RollingMinHash: the
-  // oracle brute-forces Σ code·B^(w−1−j) mod M per window; the engine's
-  // rolling update computes the identical polynomial.
   /** Shared dHash pipeline CTE (WITH ... ph(doc_id, phash)) — m5's twin
     * SELECTs from it directly; m6's twin appends the banded-candidate
     * join. One string so the two can never de-sync.
@@ -1204,20 +1201,29 @@ object SparkEntry {
       s"ph AS (SELECT doc_id, $bits AS phash FROM p)"
   }
 
+  /** The `w`-char Rabin-Karp hash of the window starting at 1-based
+    * position `i` of `text` as one DuckDB expression, Σ code·B^(w−1−j)
+    * mod M with RollingMinHash's constants: every rolling-hash twin
+    * brute-forces it per window, and the engine's rolling update
+    * computes the identical polynomial.
+    */
+  private def rollingHashSql(w: Int): String = {
+    import graft.functions.RollingMinHash.{Base, Mod}
+    val terms = (0 until w).map { j =>
+      val p = (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
+      s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p"
+    }.mkString(" + ")
+    s"($terms) % $Mod"
+  }
+
   // Winnowed-dup twin: the same rolling-hash polynomial brute-forced per
   // position, the same packed (hash · 2^20 + reversed-pos) frame min —
   // so hash ties resolve to the identical rightmost position — then
   // t19's pipeline tail replayed on the selected subset.
   private val winnowDupSql: String = {
-    import graft.functions.RollingMinHash.{Base, Mod}
     val w = LlmOps.SpanWindow
     val ww = LlmOps.WinnowWindow
     val pk = LlmOps.WinnowPosPack
-    val pows = (0 until w).map { j =>
-      (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
-    }
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p" }.mkString(" + ")
     // r15 pre-chunk replay (the engine's preChunkSegments, token for
     // token): ≥ 2^20-char docs are cut into ≤ (2^20 − 1)-char segments
     // overlapping by SpanWindow + WinnowWindow − 1, winnowed per
@@ -1232,7 +1238,7 @@ object SparkEntry {
       s"(SELECT doc_id, text, unnest(range(0, CASE WHEN length(text) <= $maxLen THEN 1 " +
       s"ELSE (length(text) - $maxLen + $stride - 1) // $stride + 1 END)) AS k " +
       s"FROM documents WHERE length(text) >= $w)), " +
-      s"hs AS (SELECT doc_id, off, i, ($terms) % $Mod AS hash FROM " +
+      s"hs AS (SELECT doc_id, off, i, ${rollingHashSql(w)} AS hash FROM " +
       s"(SELECT doc_id, off, text, unnest(range(1, length(text) - ${w - 2})) AS i FROM seg WHERE length(text) >= $w)), " +
       s"sw AS (SELECT doc_id, off, count(*) OVER win AS nw, " +
       s"min(hash * $pk + ($pk - 1 - (i - 1))) OVER win AS sel FROM hs " +
@@ -1246,29 +1252,17 @@ object SparkEntry {
   }
 
   private val rkSql: String = {
-    import graft.functions.RollingMinHash.{Base, Mod}
     val w = LlmOps.RollingWindow
-    val pows = (0 until w).map { j =>
-      (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
-    }
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p" }.mkString(" + ")
     s"SELECT doc_id, CAST(list_min(list_transform(range(1, length(text) - ${w - 2}), " +
-      s"i -> ($terms) % $Mod)) AS BIGINT) AS rk_fingerprint FROM documents " +
+      s"i -> ${rollingHashSql(w)})) AS BIGINT) AS rk_fingerprint FROM documents " +
       s"WHERE length(text) >= $w"
   }
 
   // CDC twin: the same Rabin-Karp polynomial brute-forced per position,
   // the same mod-64 boundary rule, spans via lead, md5 per chunk.
   private val cdcSql: String = {
-    import graft.functions.RollingMinHash.{Base, Mod}
     val w = LlmOps.CdcWindow
-    val pows = (0 until w).map { j =>
-      (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
-    }
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p" }.mkString(" + ")
-    s"WITH hs AS (SELECT doc_id, i, ($terms) % $Mod AS hash FROM " +
+    s"WITH hs AS (SELECT doc_id, i, ${rollingHashSql(w)} AS hash FROM " +
       s"(SELECT doc_id, text, unnest(range(1, length(text) - $w + 2)) AS i FROM documents WHERE length(text) >= $w)), " +
       s"b AS (SELECT doc_id, 0 AS pos FROM documents UNION SELECT doc_id, i - 1 FROM hs WHERE hash % ${LlmOps.CdcModulus} = 0 AND i > 1), " +
       "c AS (SELECT doc_id, pos, lead(pos) OVER win AS next_pos, " +
@@ -1286,14 +1280,8 @@ object SparkEntry {
   // behavior is mirrored exactly (a direct substring group-by would
   // diverge whenever two spans in one doc collide).
   private val dupSpanSql: String = {
-    import graft.functions.RollingMinHash.{Base, Mod}
     val w = LlmOps.SpanWindow
-    val pows = (0 until w).map { j =>
-      (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
-    }
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p" }.mkString(" + ")
-    s"WITH hs AS (SELECT doc_id, i, ($terms) % $Mod AS hash FROM " +
+    s"WITH hs AS (SELECT doc_id, i, ${rollingHashSql(w)} AS hash FROM " +
       s"(SELECT doc_id, text, unnest(range(1, length(text) - ${w - 2})) AS i FROM documents WHERE length(text) >= $w)), " +
       "pd AS (SELECT doc_id, hash, min(i) AS i FROM hs GROUP BY 1, 2), " +
       "cd AS (SELECT hash FROM pd GROUP BY hash HAVING count(*) >= 2), " +
@@ -1310,14 +1298,8 @@ object SparkEntry {
     * cross-doc gate, and per-doc duplicated-window counts.
     */
   private lazy val spanCoverageCtes: String = {
-    import graft.functions.RollingMinHash.{Base, Mod}
     val w = LlmOps.SpanWindow
-    val pows = (0 until w).map { j =>
-      (0 until (w - 1 - j)).foldLeft(1L)((p, _) => p * Base % Mod)
-    }
-    val terms = pows.zipWithIndex
-      .map { case (p, j) => s"CAST(ord(substr(text, i + $j, 1)) AS BIGINT) * $p" }.mkString(" + ")
-    s"hs AS (SELECT doc_id, i, ($terms) % $Mod AS hash FROM " +
+    s"hs AS (SELECT doc_id, i, ${rollingHashSql(w)} AS hash FROM " +
       s"(SELECT doc_id, text, unnest(range(1, length(text) - ${w - 2})) AS i FROM documents WHERE length(text) >= $w)), " +
       "pw AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows FROM hs GROUP BY 1), " +
       "xd AS (SELECT hash FROM (SELECT DISTINCT doc_id, hash FROM hs) GROUP BY hash HAVING count(*) >= 2), " +

@@ -1562,6 +1562,25 @@ object LlmOps {
     */
   val SpanWindow = 32
 
+  /** The span-dedup family's cross-doc hash gate: the hashes of
+    * `perDoc` (per-doc first occurrences, one row per (doc_id, hash))
+    * that ≥ 2 documents carry.
+    */
+  private def crossDocHashes(perDoc: DataFrame): DataFrame =
+    perDoc.groupBy("hash")
+      .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
+
+  /** The span-dedup family's md5 byte-verify: the [[SpanWindow]]-char
+    * span at each gated (doc_id, pos) of `gated`, read from `docs`'
+    * text, kept when ≥ 2 rows carry the same bytes — so a rolling-hash
+    * collision never reports a span.
+    */
+  private def verifySpans(gated: DataFrame, docs: DataFrame): DataFrame =
+    gated.join(docs, "doc_id")
+      .select(expr(s"md5(substring(text, pos + 1, $SpanWindow))").as("span_md5"))
+      .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
+      .filter(col("n_docs") >= 2)
+
   /** T19: cross-document duplicated-SPAN detection — the exact-substring
     * half of the dedup family (suffix-array-style "same 32+ chars appear
     * in ≥2 documents": license boilerplate, copied paragraphs, mirrored
@@ -1593,13 +1612,7 @@ object LlmOps {
     val perDoc = PlanBridge.pin(docs
       .select(col("doc_id"), expr(s"rolling_hashes(text, $SpanWindow)"))
       .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
-    val crossDoc = perDoc.groupBy("hash")
-      .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
-    perDoc.join(crossDoc, "hash")
-      .join(docs, "doc_id")
-      .select(expr(s"md5(substring(text, pos + 1, $SpanWindow))").as("span_md5"))
-      .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
+    verifySpans(perDoc.join(crossDocHashes(perDoc), "hash"), docs)
   }
 
   /** T31: per-document duplicated-span COVERAGE — the fraction of a
@@ -1823,13 +1836,7 @@ object LlmOps {
     val perDoc = PlanBridge.pin(
       winnowSelectChunked(docs, SpanWindow, WinnowWindow)
         .groupBy("doc_id", "hash").agg(min("pos").as("pos")))
-    val crossDoc = perDoc.groupBy("hash")
-      .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
-    perDoc.join(crossDoc, "hash")
-      .join(docs, "doc_id")
-      .select(expr(s"md5(substring(text, pos + 1, $SpanWindow))").as("span_md5"))
-      .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
+    verifySpans(perDoc.join(crossDocHashes(perDoc), "hash"), docs)
   }
 
   // ---------------------------------------------------------------------
@@ -1935,13 +1942,9 @@ object LlmOps {
     val qualifying = storedCnt.join(batchCnt, Seq("hash"), "full_outer")
       .filter(coalesce(col("nc"), lit(0L)) + coalesce(col("nb"), lit(0L)) >= 2)
       .select("hash")
-    stored.select("doc_id", "hash", "pos")
+    verifySpans(stored.select("doc_id", "hash", "pos")
       .unionByName(batch.select("doc_id", "hash", "pos"))
-      .join(qualifying, "hash")
-      .join(docs.select("doc_id", "text"), "doc_id")
-      .select(expr(s"md5(substring(text, pos + 1, $SpanWindow))").as("span_md5"))
-      .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
+      .join(qualifying, "hash"), docs.select("doc_id", "text"))
   }
 
   /** T19b: [[t29WinnowDups]] answered from the STORED winnowed
@@ -1965,13 +1968,7 @@ object LlmOps {
     // for qualifying rows only, exactly like the recompute's verify.
     val docs = winnowEligible(Tables.documentsSpread(spark, dir))
       .select(col("doc_id"), col("text"))
-    val crossDoc = stored.groupBy("hash")
-      .agg(count(lit(1)).as("nd")).filter(col("nd") >= 2).select("hash")
-    stored.join(crossDoc, "hash")
-      .join(docs, "doc_id")
-      .select(expr(s"md5(substring(text, pos + 1, $SpanWindow))").as("span_md5"))
-      .groupBy("span_md5").agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= 2)
+    verifySpans(stored.join(crossDocHashes(stored), "hash"), docs)
   }
 
   /** T12: stopword selection from the corpus vocabulary — tokens whose

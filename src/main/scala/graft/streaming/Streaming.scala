@@ -2,25 +2,36 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming over the `events` table (SURVEY.md §2.9 / M6).
   * The reference is a weekly batch with no streaming semantics; these are
   * the engine's streaming extension, kept deterministic for the oracle:
   *
-  *  - source: file stream over the events parquet (schema pinned from a
-  *    batch footer read; ts nanos → micros exactly like Tables.events);
-  *  - Trigger.AvailableNow: process everything currently available, then
-  *    stop — a deterministic, resumable batch-over-stream run (the
-  *    pattern a 100 TB backfill would use, checkpointed per run);
+  *  - source: [[fileStream]], a file stream over `<dir>/<table>.parquet`,
+  *    a single file (the fixtures) or a directory of files landing over
+  *    time, read through a one-alternative brace glob on any Hadoop
+  *    filesystem; schema pinned from a batch footer read, events ts
+  *    nanos → micros exactly like Tables.events;
+  *  - one runner, [[run]]: state-store partitions derived from the
+  *    source's bytes, the RocksDB provider for transformWithState plans
+  *    only, a throwaway checkpoint and Trigger.AvailableNow (process
+  *    everything currently available, then stop — a deterministic,
+  *    resumable batch-over-stream run, the pattern a 100 TB backfill
+  *    would use), all scoped to the one run;
   *  - watermark declared on every aggregation (state-eviction contract —
   *    with AvailableNow + complete output it does not drop finals, so
   *    results equal the batch twin);
-  *  - memory sink in complete mode for the harness (bounded: aggregated
-  *    state only). Production sinks are the K-family writers (parquet /
-  *    kafka, append mode per closed window).
+  *  - two sinks: the memory sink in complete mode for bounded aggregates
+  *    ([[inMemory]]) and an executor-side parquet append for data-sized
+  *    output ([[appended]]); the foreachBatch writers of st8 show the
+  *    production shape (any batch sink per micro-batch).
   *
   * Each query returns the post-run result as a DataFrame so the driver's
   * Verify/oracle machinery treats streaming like any other operator;
@@ -32,59 +43,109 @@ object Streaming {
   private val runId = new AtomicInteger(0)
 
   /** Streaming scratch (checkpoint dirs full of state-store files,
-    * symlink staging, append outputs) is deleted at JVM exit
-    * ([[graft.Scratch]]); checkpoints are per-run throwaways by design (a
-    * resumable job passes its OWN checkpointLocation, see
-    * StreamingResumeSpec).
+    * append outputs) is deleted at JVM exit ([[graft.Scratch]]);
+    * checkpoints are per-run throwaways by design (a resumable job
+    * passes its OWN checkpointLocation, see StreamingResumeSpec).
     */
   private def scratchDir(prefix: String): String = graft.Scratch.dir(prefix).toString
 
-  /** File-stream over events with the ts normalization. The file
-    * source requires a DIRECTORY; the fixture is a single parquet file,
-    * so stage a temp directory with a symlink to it (zero copy). In
-    * production the source is already a directory of files landing over
-    * time — this staging is fixture plumbing only.
+  /** File stream over `<dir>/<table>.parquet`, a single file or a
+    * directory. The file source refuses a plain FILE path (it sets
+    * `basePath` to the path, which must be a directory), but it sets
+    * `basePath` only for a non-glob path, and the one-alternative brace
+    * glob `<dir>/{<table>.parquet}` matches exactly that file or that
+    * directory — so no staging, on any Hadoop filesystem. Spark's batch
+    * reader globs the same path, so a glob character in `dir` is no new
+    * exposure.
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val file = Paths.get(s"$dir/events.parquet")
-    val streamDir =
-      if (Files.isDirectory(file)) file.toString
-      else {
-        val d = Paths.get(scratchDir("graft_events_stream"))
-        // Absolute target: a relative corpus path would be stored
-        // verbatim and resolve against the TEMP dir, not the cwd —
-        // a dangling link the stream source then trips over (reviewer
-        // finding).
-        Files.createSymbolicLink(d.resolve("events.parquet"), file.toAbsolutePath)
-        d.toString
-      }
-    val rawSchema = spark.read.parquet(file.toString).schema
-    // ts physical type drifts across fixture generations — adapt via the
-    // same footer-schema branch the batch loader uses (graft.Tables).
-    graft.Tables.normalizeEventTs(
-      spark.readStream
-        .schema(rawSchema)
-        .parquet(streamDir))
+  private[graft] def fileStream(spark: SparkSession, dir: String, table: String): DataFrame =
+    spark.readStream
+      .schema(spark.read.parquet(s"$dir/$table.parquet").schema)
+      .parquet(s"$dir/{$table.parquet}")
+
+  /** [[fileStream]] over events with the batch loader's ts normalization
+    * (the ts physical type drifts across fixture generations).
+    */
+  private[graft] def events(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeEventTs(fileStream(spark, dir, "events"))
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private[graft] val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private[graft] val RocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `streamed`, a stream over `<dir>/<table>.parquet`, to the end
+    * of `trigger` into `sink`, and returns the finished query (its
+    * progress and state-operator metrics). Scoped to this one run, and
+    * restored afterwards even when a batch throws:
+    *
+    *  - `spark.sql.shuffle.partitions`, which fixes the state-store count,
+    *    from the source's input bytes ([[derivedStreamPartitions]]);
+    *  - the RocksDB state-store provider, only when the plan holds a
+    *    transformWithState (that API refuses the heap store; every other
+    *    stateful operator keeps the heap store, the measured faster one
+    *    at harness scale, or whatever provider the caller set).
+    *
+    * A fresh scratch checkpoint goes with every run.
+    */
+  private[graft] def run(spark: SparkSession, dir: String, table: String, streamed: DataFrame,
+                         trigger: Trigger = Trigger.AvailableNow())
+                        (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val parts = derivedStreamPartitions(spark, pathBytes(spark, s"$dir/$table.parquet"))
+    val rocks = streamed.queryExecution.logical.exists(_.isInstanceOf[TransformWithState])
+    graft.Sessions.withConf(spark,
+      Seq(ShufflePartitions -> parts.toString) ++
+        (if (rocks) Seq(StateStoreProvider -> RocksDb) else Nil): _*) {
+      val q = sink(streamed.writeStream)
+        .option("checkpointLocation", scratchDir("graft_ckpt"))
+        .trigger(trigger)
+        .start()
+      q.awaitTermination()
+      q
+    }
   }
 
-  /** File-stream over the documents table — [[eventsStream]]'s symlink
-    * staging applied to the text corpus (ingest-side streaming for the
-    * dedup family).
+  /** The memory sink, complete mode, for bounded aggregates: [[run]]
+    * `agged` over events and return the final table.
     */
-  private def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val file = Paths.get(s"$dir/documents.parquet")
-    val streamDir =
-      if (Files.isDirectory(file)) file.toString
-      else {
-        val d = Paths.get(scratchDir("graft_docs_stream"))
-        Files.createSymbolicLink(d.resolve("documents.parquet"), file.toAbsolutePath)
-        d.toString
-      }
-    spark.readStream
-      .schema(spark.read.parquet(file.toString).schema)
-      .parquet(streamDir)
+  private def inMemory(spark: SparkSession, dir: String, agged: DataFrame): DataFrame = {
+    val name = s"graft_stream_${runId.incrementAndGet()}"
+    run(spark, dir, "events", agged)(_.format("memory").queryName(name).outputMode("complete"))
+    val result = spark.table(name)
+    // The memory sink holds the whole aggregate in DRIVER memory behind
+    // the temp view. The resolved plan already holds the sink, so drop
+    // the view now: the data then lives exactly as long as the result,
+    // and views do not pile up run after run.
+    spark.catalog.dropTempView(name)
+    result
+  }
+
+  /** Append mode → parquet for DATA-SIZED streaming output
+    * (stream-stream join matches, dedup keys, transformWithState rows):
+    * each micro-batch's newly emitted rows are appended as executor-side
+    * parquet writes, then the result is re-read — the driver never
+    * materializes the output (round-5 finding: st4/st7 returned join
+    * results through a driver memory sink, the one driver bottleneck
+    * left at 100×).
+    */
+  private def appended(spark: SparkSession, dir: String, table: String, streamed: DataFrame,
+                       trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
+    val outDir = scratchDir("graft_stream_out")
+    run(spark, dir, table, streamed, trigger)(_.outputMode("append")
+      .foreachBatch { (batch: DataFrame, _: Long) => batch.write.mode("append").parquet(outDir) })
+    readBack(spark, outDir, streamed.schema)
+  }
+
+  /** A sink's parquet output re-read with the streamed `schema`, or an
+    * empty frame of it when no batch ever created `outDir` (every batch
+    * empty, never pre-seeded); a created but footer-less dir reads empty
+    * through the explicit schema. Checked through the path's Hadoop
+    * `FileSystem`, like [[pathBytes]].
+    */
+  private def readBack(spark: SparkSession, outDir: String, schema: StructType): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(outDir)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+      spark.read.schema(schema).parquet(outDir)
+    else spark.createDataFrame(new java.util.ArrayList[Row](), schema)
   }
 
   /** ST14: streaming near-duplicate gate — the dedup family's ingest
@@ -132,7 +193,7 @@ object Streaming {
     // side pays one md5 per shingle and eight multiply-shift HOFs —
     // the same r15 hash-bank shape as the batch side.
     val bandKeys = LlmOps.bandKeyExprs
-    val incoming = docsStream(spark, dir)
+    val incoming = fileStream(spark, dir, "documents")
       .filter(col("source") === LlmOps.BatchSource)
       .select(col("doc_id").as("new_doc"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 3)
@@ -159,24 +220,7 @@ object Streaming {
       .withColumn("i", expr("sorted_intersect_count(sa, sb)"))
       .select(col("new_doc"), col("existing_doc"), col("band").cast("long").as("band"),
         expr(LlmOps.milli("i", "size(sa) + size(sb) - i")).as("jaccard_milli"))
-    runAppendToParquet(spark, streamParts(spark, dir, "documents.parquet"), alerts)
-  }
-
-  /** Stateful streaming creates one state store per shuffle partition;
-    * the harness corpus needs nowhere near the session's CPU-count
-    * partitions, and each store costs real per-batch overhead (commit +
-    * snapshot per store per micro-batch — a stream-stream join holds
-    * FOUR stores per partition). Scoped override around the
-    * (synchronous) stream execution, restored in a finally. The count
-    * DERIVES from the source's input bytes (r17, VERDICT r16 #5: "at
-    * 100 TB a constant silently serializes every stream-stream join into
-    * 4 state stores"). See [[derivedStreamPartitions]].
-    */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+    appended(spark, dir, "documents", alerts)
   }
 
   /** Input bytes a streaming source will read from `p` (file or
@@ -194,15 +238,18 @@ object Streaming {
     } catch { case _: Exception => 0L }
 
   /** Scale-adaptive state-store partition count (r17, VERDICT r16 #5):
-    * sized to the source's INPUT BYTES — one state partition per
-    * [[StreamBytesPerPartition]] of input, floored at 4 and capped at
-    * the session's defaultParallelism — rather than a constant tuned for
-    * either local mode or the cluster (guide §2: partitions sized to
-    * bytes, not cores). The floor of 4 is the r16/r17 measured local
-    * optimum: the r17 full-family interleaved A/B at sf0.1 (10 queries
-    * × 2-vs-4, 3 warm reps) read 2 partitions as a LOSS for the
-    * aggregation family (st1 0.87→0.97 s, st3 1.29→1.53, st8
-    * 1.03→1.21) and only a wash for the stream-stream joins (st7
+    * stateful streaming creates one state store per shuffle partition,
+    * and each store costs real per-batch overhead (commit + snapshot per
+    * store per micro-batch — a stream-stream join holds FOUR stores per
+    * partition). The count is sized to the source's INPUT BYTES — one
+    * state partition per [[StreamBytesPerPartition]] of input, floored
+    * at 4 and capped at the session's defaultParallelism — rather than a
+    * constant tuned for either local mode or the cluster (guide §2:
+    * partitions sized to bytes, not cores). The floor of 4 is the
+    * r16/r17 measured local optimum: the r17 full-family interleaved A/B
+    * at sf0.1 (10 queries × 2-vs-4, 3 warm reps) read 2 partitions as a
+    * LOSS for the aggregation family (st1 0.87→0.97 s, st3 1.29→1.53,
+    * st8 1.03→1.21) and only a wash for the stream-stream joins (st7
     * 2.04→1.92, st10 2.05→1.98), so the byte rule only ever scales the
     * default UP from the measured floor; at 100 TB it yields thousands
     * of partitions, capped by the session's actual parallelism — no
@@ -216,97 +263,31 @@ object Streaming {
     math.max(4L, math.min(byData, cap)).toInt
   }
 
-  /** The derived default for a query streaming `table` under `dir`. */
-  private def streamParts(spark: SparkSession, dir: String,
-                          table: String = "events.parquet"): Int =
-    derivedStreamPartitions(spark, pathBytes(spark, s"$dir/$table"))
-
-  /** Run `agged` (a streaming aggregation) to completion with
-    * AvailableNow into a memory sink; return the final table.
-    */
-  private def runToTable(spark: SparkSession, parts: Int, agged: DataFrame): DataFrame = {
-    val name = s"graft_stream_${runId.incrementAndGet()}"
-    withStreamPartitions(spark, parts) {
-      val q = agged.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratchDir("graft_ckpt"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val result = spark.table(name)
-    // The memory sink holds the whole aggregate in DRIVER memory behind
-    // the temp view. The resolved plan already holds the sink, so drop
-    // the view now: the data then lives exactly as long as the result,
-    // and views do not pile up run after run.
-    spark.catalog.dropTempView(name)
-    result
-  }
-
   /** The production sink path: foreachBatch gives each micro-batch to
-    * the full batch writer API (partitioned parquet here — any batch
-    * sink works: JDBC, object store, multi-sink fan-out). With complete
-    * output mode each batch carries the whole aggregate state, so
+    * the full batch writer API (parquet here — any batch sink works:
+    * JDBC, object store, multi-sink fan-out). With complete output
+    * mode each batch carries the whole aggregate state, so
     * overwrite-per-batch leaves the final state on disk. Returns the
     * written result re-read.
     */
   def tumblingToParquet(spark: SparkSession, dir: String, outDir: String): DataFrame = {
     val agged = tumblingAgg(spark, dir)
-    runForeachBatch(spark, streamParts(spark, dir), agged) { batch =>
-      batch.write.mode("overwrite").parquet(outDir)
-    }
-    // Explicit schema: a zero-data run leaves outDir absent or
-    // footer-less, which would throw on the re-read; with the schema the
-    // empty case returns an empty frame (same guard as the sibling
-    // sinks — reviewer finding).
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(outDir)))
-      spark.read.schema(agged.schema).parquet(outDir)
-    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), agged.schema)
+    run(spark, dir, "events", agged)(_.outputMode("complete")
+      .foreachBatch { (batch: DataFrame, _: Long) => batch.write.mode("overwrite").parquet(outDir) })
+    readBack(spark, outDir, agged.schema)
   }
 
-  /** The shared tumbling count-per-type aggregation both foreachBatch
-    * sinks write, and the complete-mode AvailableNow run harness around
-    * a caller-supplied per-batch writer (with complete output each batch
-    * carries the whole aggregate state).
+  /** Tumbling 1-hour windows per event_type over the events stream:
+    * `window_start`, `event_type`, `n_events` and then the `extra`
+    * aggregates. st1 adds a value sum; the two foreachBatch sinks write
+    * the bare count.
     */
-  private def tumblingAgg(spark: SparkSession, dir: String): DataFrame =
-    eventsStream(spark, dir)
+  private[graft] def tumblingAgg(spark: SparkSession, dir: String, extra: Column*): DataFrame = {
+    val agged = events(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count("*").as("n_events"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n_events"))
-
-  private def runForeachBatch(spark: SparkSession, parts: Int, agged: DataFrame,
-                              mode: String = "complete",
-                              trigger: Trigger = Trigger.AvailableNow())
-                             (writeBatch: DataFrame => Unit): Unit =
-    withStreamPartitions(spark, parts) {
-      val q = agged.writeStream
-        .outputMode(mode)
-        .option("checkpointLocation", scratchDir("graft_ckpt"))
-        .trigger(trigger)
-        .foreachBatch { (batch: DataFrame, _: Long) => writeBatch(batch) }
-        .start()
-      q.awaitTermination()
-    }
-
-  /** Append-mode foreachBatch → parquet for DATA-SIZED streaming output
-    * (stream-stream join matches): each micro-batch's newly emitted rows
-    * are appended as executor-side parquet writes, then the result is
-    * re-read — the driver never materializes the output (round-5 finding:
-    * st4/st7 returned join results through a driver memory sink, the one
-    * driver bottleneck left at 100×). The explicit schema on the re-read
-    * makes the zero-batch case return an empty frame instead of throwing.
-    */
-  private def runAppendToParquet(spark: SparkSession, parts: Int, streamed: DataFrame,
-                                 trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
-    val outDir = scratchDir("graft_stream_out")
-    runForeachBatch(spark, parts, streamed, "append", trigger) { batch =>
-      batch.write.mode("append").parquet(outDir)
-    }
-    spark.read.schema(streamed.schema).parquet(outDir)
+      .agg(count("*").as("n_events"), extra: _*)
+    agged.select(col("window.start").as("window_start") +: agged.columns.tail.toSeq.map(col): _*)
   }
 
   /** ST8: streaming UPSERT sink — foreachBatch routed through the K6
@@ -318,11 +299,11 @@ object Streaming {
     * overwrite sink would delete partitions owned by other
     * sources/backfills, an append sink would duplicate reprocessed
     * windows — partition-scoped overwrite is the idempotent middle.
-    * Returns the target table re-read.
+    * Returns the target table re-read (partition column last).
     */
   def upsertToPartitions(spark: SparkSession, dir: String, outDir: String): DataFrame = {
     val agged = tumblingAgg(spark, dir)
-    runForeachBatch(spark, streamParts(spark, dir), agged) { batch =>
+    run(spark, dir, "events", agged)(_.outputMode("complete").foreachBatch { (batch: DataFrame, _: Long) =>
       // Two actions per batch (emptiness probe + write): pin the batch
       // so the micro-batch aggregation runs once, not twice (reviewer
       // finding; the standard persist-around-foreachBatch pattern).
@@ -331,70 +312,62 @@ object Streaming {
         if (!pinned.isEmpty)
           graft.sinks.Sinks.overwritePartitions(pinned, outDir, Seq("event_type"))
       } finally pinned.unpersist(false)
-    }
-    // Every-batch-empty + never-pre-seeded target: no partition was ever
-    // written, so return an empty frame with the aggregate schema instead
-    // of letting the re-read throw on a missing path.
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(outDir)))
-      spark.read.parquet(outDir)
-    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), agged.schema)
+    })
+    readBack(spark, outDir, agged.schema)
   }
 
-  /** Tumbling 1-hour windows per event_type: count + value sum. */
-  def tumblingCounts(spark: SparkSession, dir: String): DataFrame = {
+  /** ST1: tumbling 1-hour windows per event_type: count + value sum. */
+  def tumblingCounts(spark: SparkSession, dir: String): DataFrame =
     // value sums as integer MILLIS (per-event round, then sum): a
     // 2-dp-rounded double sum is order-dependent in its last ULP, and
     // the oracle compares floats exactly — the repo-wide integer-milli
     // discipline applies to streaming aggregates too (reviewer finding).
-    val agged = eventsStream(spark, dir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count("*").as("n_events"),
-        sum(expr("cast(round(value * 1000) as bigint)")).as("total_value_milli"))
-    runToTable(spark, streamParts(spark, dir), agged)
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value_milli"))
-  }
+    inMemory(spark, dir, tumblingAgg(spark, dir,
+      sum(expr("cast(round(value * 1000) as bigint)")).as("total_value_milli")))
 
   /** Sliding 1-hour windows every 30 minutes, per event_type. */
   def slidingCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agged = eventsStream(spark, dir)
+    val agged = events(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
       .agg(count("*").as("n_events"))
-    runToTable(spark, streamParts(spark, dir), agged)
+    inMemory(spark, dir, agged)
       .select(col("window.start").as("window_start"), col("event_type"), col("n_events"))
   }
 
-  /** Stream-stream inner join with event-time bounds: each purchase
-    * matched to signups of the same user within the preceding 7 days.
-    * Both sides carry watermarks; the time-range condition bounds the
-    * join state Spark must hold (without it, stream-stream state grows
-    * forever). Inner join + AvailableNow emits exactly the batch join's
-    * rows, so the DuckDB twin is a plain range self-join.
+  /** The stream-stream join family's plan (st4 inner, st7 left outer,
+    * st10 full outer): each purchase matched to signups of the same user
+    * within the preceding 7 days. Both sides carry watermarks; the
+    * time-range condition bounds the join state Spark must hold
+    * (without it, stream-stream state grows forever). Matches are
+    * data-sized, so the family runs through [[appended]].
     */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val signups = eventsStream(spark, dir)
+  private def signupsToPurchases(spark: SparkSession, dir: String, joinType: String): DataFrame = {
+    val signups = events(spark, dir)
       .filter(col("event_type") === "signup")
       .select(col("event_id").as("signup_id"), col("user_id").as("s_user"),
         col("ts").as("s_ts"))
       .withWatermark("s_ts", "10 minutes")
-    val purchases = eventsStream(spark, dir)
+    val purchases = events(spark, dir)
       .filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", "10 minutes")
-    val joined = signups.join(purchases,
+    appended(spark, dir, "events", signups.join(purchases,
       col("s_user") === col("p_user") &&
         col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"))
-    // Inner stream-stream join supports append output; matches are
-    // data-sized, so they go executor-side to parquet, never through the
-    // driver (see runAppendToParquet).
-    runAppendToParquet(spark, streamParts(spark, dir), joined)
+        col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"),
+      joinType))
+  }
+
+  /** ST4: stream-stream inner join with event-time bounds. Inner join +
+    * AvailableNow emits exactly the batch join's rows, so the DuckDB twin
+    * is a plain range self-join.
+    */
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    signupsToPurchases(spark, dir, "inner")
       .select(col("signup_id"), col("purchase_id"),
         col("s_user").as("user_id"), col("s_ts"), col("p_ts"))
-  }
 
   /** ST7: stream-stream LEFT OUTER join with event-time bounds — the
     * semantics st4's inner join can't express: a signup with no purchase
@@ -415,27 +388,11 @@ object Streaming {
     * − 10 min. Null-extended columns are coalesced to -1 sentinels ON
     * BOTH SIDES so the hash compare never meets a NULL.
     */
-  def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
-    val signups = eventsStream(spark, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"), col("user_id").as("s_user"),
-        col("ts").as("s_ts"))
-      .withWatermark("s_ts", "10 minutes")
-    val purchases = eventsStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val joined = signups.join(purchases,
-      col("s_user") === col("p_user") &&
-        col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"),
-      "leftOuter")
-    runAppendToParquet(spark, streamParts(spark, dir), joined)
+  def streamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame =
+    signupsToPurchases(spark, dir, "leftOuter")
       .select(col("signup_id"), col("s_user").as("user_id"), col("s_ts"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(unix_millis(col("p_ts")), lit(-1L)).as("p_ms"))
-  }
 
   /** ST10: stream-stream FULL OUTER join — completes the stream-join
     * family (st4 inner, st7 left): BOTH unmatched sides emit
@@ -455,30 +412,24 @@ object Streaming {
     * the signup side and by the watermark delay on the purchase side —
     * the same state bound st4 documents, held on both stores.
     */
-  def streamStreamFullOuter(spark: SparkSession, dir: String): DataFrame = {
-    val signups = eventsStream(spark, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").as("signup_id"), col("user_id").as("s_user"),
-        col("ts").as("s_ts"))
-      .withWatermark("s_ts", "10 minutes")
-    val purchases = eventsStream(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val joined = signups.join(purchases,
-      col("s_user") === col("p_user") &&
-        col("p_ts") >= col("s_ts") &&
-        col("p_ts") <= col("s_ts") + expr("INTERVAL 7 DAYS"),
-      "fullOuter")
-    runAppendToParquet(spark, streamParts(spark, dir), joined)
+  def streamStreamFullOuter(spark: SparkSession, dir: String): DataFrame =
+    signupsToPurchases(spark, dir, "fullOuter")
       .select(
         coalesce(col("signup_id"), lit(-1L)).as("signup_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(col("s_user"), col("p_user")).as("user_id"),
         coalesce(unix_millis(col("s_ts")), lit(-1L)).as("s_ms"),
         coalesce(unix_millis(col("p_ts")), lit(-1L)).as("p_ms"))
-  }
+
+  /** ST5's plan: the (event_type, user_id, minute) keys of the events
+    * stream, deduplicated within the watermark.
+    */
+  private[graft] def dedupKeys(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir)
+      .select(col("event_type"), col("user_id"),
+        date_trunc("minute", col("ts")).as("minute"))
+      .withWatermark("minute", "10 minutes")
+      .dropDuplicatesWithinWatermark("event_type", "user_id", "minute")
 
   /** ST5: streaming ingestion dedup — the at-ingest half of the dedup
     * family (d1 is the batch half): duplicate events dropped as they
@@ -493,19 +444,11 @@ object Streaming {
     * AvailableNow micro-batch — no state eviction mid-run — so the
     * output equals the batch `SELECT DISTINCT` twin exactly. Across
     * real multi-batch runs, re-emission after the horizon is the
-    * documented semantics, not a bug.
+    * documented semantics, not a bug. Surviving keys are data-sized, so
+    * they take [[appended]], not the driver memory sink.
     */
-  def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val deduped = eventsStream(spark, dir)
-      .select(col("event_type"), col("user_id"),
-        date_trunc("minute", col("ts")).as("minute"))
-      .withWatermark("minute", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_type", "user_id", "minute")
-    // Surviving keys are data-sized (one per distinct key), so they take
-    // the executor-side parquet path like st4/st7, not the driver memory
-    // sink (that stays reserved for the bounded complete-mode aggregates).
-    runAppendToParquet(spark, streamParts(spark, dir), deduped).select("event_type", "user_id", "minute")
-  }
+  def streamDedup(spark: SparkSession, dir: String): DataFrame =
+    appended(spark, dir, "events", dedupKeys(spark, dir)).select("event_type", "user_id", "minute")
 
   /** ST8: the streaming upsert sink as an oracle-checked query — run
     * [[upsertToPartitions]] into a fresh target and return the table it
@@ -547,12 +490,12 @@ object Streaming {
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("segment"))
-    val agged = eventsStream(spark, dir)
+    val agged = events(spark, dir)
       .withWatermark("ts", "10 minutes")
       .join(broadcast(dim), "user_id")
       .groupBy(window(col("ts"), "1 hour"), col("segment"), col("event_type"))
       .agg(count("*").as("n_events"))
-    runToTable(spark, streamParts(spark, dir), agged)
+    inMemory(spark, dir, agged)
       .select(col("window.start").as("window_start"), col("segment"),
         col("event_type"), col("n_events"))
   }
@@ -563,62 +506,44 @@ object Streaming {
     * session_window operator (built-ins first, SURVEY.md §2.10).
     */
   def sessionCounts(spark: SparkSession, dir: String): DataFrame = {
-    val agged = eventsStream(spark, dir)
+    val agged = events(spark, dir)
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count("*").as("n_events"))
-    runToTable(spark, streamParts(spark, dir), agged)
+    inMemory(spark, dir, agged)
       .select(
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"))
   }
 
-  /** The st11 pipeline over any (streaming) events frame with
-    * (user_id, ts, event_id) — split out so MilestonesSpec can feed a
-    * hand-staged multi-batch stream and prove the count state carries
-    * across micro-batches.
+  /** The transformWithState family's plan (st11-st13): `evs`, any
+    * (streaming) events frame with (user_id, ts, event_id), grouped by
+    * user and run through `processor` in append mode. The API runs only
+    * on the RocksDB state store, which [[run]] scopes for these plans —
+    * also simply the right default at scale: per-user state for every
+    * user ever seen outlives any executor heap. MilestonesSpec feeds it
+    * a hand-staged multi-batch stream.
     */
-  private[graft] def milestonesOf(spark: SparkSession, evs: DataFrame): DataFrame = {
+  private[graft] def transformOf[R <: Product : TypeTag](
+      spark: SparkSession, evs: DataFrame,
+      processor: StatefulProcessor[Long, Milestones.MEv, R], timeMode: TimeMode): DataFrame = {
     import spark.implicits._
     evs.select(col("user_id"), col("ts"), col("event_id"))
       .as[Milestones.MEv]
       .groupByKey(_.user_id)
-      .transformWithState(new Milestones.MilestoneProcessor,
-        TimeMode.None(), OutputMode.Append())
+      .transformWithState(processor, timeMode, OutputMode.Append())
       .toDF()
   }
 
   /** ST11: per-user count milestones via Spark 4's transformWithState —
     * see [[Milestones]] for the processor and the determinism contract.
-    * The API REQUIRES the RocksDB state store provider (it refuses the
-    * default heap-backed one), so the provider conf is scoped around
-    * the run exactly like RocksDbStateSpec — which is the right
-    * default at scale anyway: per-user longs for every user ever seen
-    * outlive any executor heap. Append mode through the executor-side
-    * parquet sink; output rows ∝ events/Step.
+    * Append mode through the executor-side parquet sink; output rows ∝
+    * events/Step.
     */
   def st11Milestones(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      runAppendToParquet(spark, streamParts(spark, dir), milestonesOf(spark, eventsStream(spark, dir)))
-    }
-
-  /** transformWithState refuses the default heap-backed state store;
-    * scope the RocksDB provider around a run (also simply the right
-    * backend at scale — see RocksDbStateSpec).
-    */
-  private def withRocksDb[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
+    appended(spark, dir, "events",
+      transformOf(spark, events(spark, dir), new Milestones.MilestoneProcessor, TimeMode.None()))
 
   /** ST12: inactivity (churn) detection via EVENT-TIME TIMERS in
     * transformWithState — see [[Milestones.InactivityProcessor]]. The
@@ -631,17 +556,9 @@ object Streaming {
     * users' state would emit on the next day's run.
     */
   def st12Inactivity(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      import spark.implicits._
-      val out = eventsStream(spark, dir)
-        .withWatermark("ts", "10 minutes")
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .as[Milestones.MEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new Milestones.InactivityProcessor,
-          TimeMode.EventTime(), OutputMode.Append())
-      runAppendToParquet(spark, streamParts(spark, dir), out.toDF())
-    }
+    appended(spark, dir, "events",
+      transformOf(spark, events(spark, dir).withWatermark("ts", "10 minutes"),
+        new Milestones.InactivityProcessor, TimeMode.EventTime()))
 
   /** ST13: TTL-expiring per-user counters — see
     * [[Milestones.TtlCountProcessor]] for the semantics and the
@@ -649,18 +566,10 @@ object Streaming {
     * TimeMode.ProcessingTime, which never quiesces under AvailableNow).
     */
   def st13TtlState(spark: SparkSession, dir: String): DataFrame =
-    withRocksDb(spark) {
-      import spark.implicits._
-      val out = eventsStream(spark, dir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .as[Milestones.MEv]
-        .groupByKey(_.user_id)
-        .transformWithState(new Milestones.TtlCountProcessor,
-          TimeMode.ProcessingTime(), OutputMode.Append())
+    appended(spark, dir, "events",
+      transformOf(spark, events(spark, dir), new Milestones.TtlCountProcessor, TimeMode.ProcessingTime()),
       // Trigger.Once is deprecated in favor of AvailableNow, but
       // AvailableNow is exactly what CANNOT terminate here (see the
       // processor scaladoc) — the deprecation is wrong for this shape.
-      runAppendToParquet(spark, streamParts(spark, dir), out.toDF(),
-        (Trigger.Once(): @annotation.nowarn("cat=deprecation")))
-    }
+      (Trigger.Once(): @annotation.nowarn("cat=deprecation")))
 }

@@ -148,7 +148,7 @@ class LocalFsSpec extends SparkTestBase {
   test("getFileLinkStatus matches stock on a file, a missing path and a symlink") {
     val base = tempDir("localfs_links")
     Files.write(Paths.get(s"$base/file"), Array[Byte](1, 2, 3))
-    // The layout Streaming.eventsStream stages for the fixture.
+    // A symlink to a corpus file, as a staged or linked source directory holds one.
     Files.createSymbolicLink(Paths.get(s"$base/events.parquet"),
       Paths.get(s"$Sf/events.parquet").toAbsolutePath)
     def fields(s: FileStatus) =

@@ -3,9 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{TimeMode, Trigger}
 
-import graft.streaming.Streaming
+import graft.streaming.{Milestones, Streaming}
 
 /** Proves st11's ValueState survives micro-batch boundaries: a user
   * with 15 events in batch 1 and 10 in batch 2 crosses milestones at
@@ -31,16 +31,12 @@ class MilestonesSpec extends SparkTestBase {
     stage(1L to 15L, "b0", 1000000L)
     stage(16L to 25L, "b1", 2000000L)
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Sessions.withConf(spark, Streaming.StateStoreProvider -> Streaming.RocksDb) {
       val schema = spark.read.parquet(srcDir.toString).schema
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(srcDir.toString)
-      val out = Streaming.milestonesOf(spark, stream)
+      val out = Streaming.transformOf(spark, stream, new Milestones.MilestoneProcessor, TimeMode.None())
       val q = out.writeStream.format("memory").queryName("ms_test")
         .outputMode("append")
         .option("checkpointLocation", tempDir("ms_ckpt"))
@@ -51,11 +47,6 @@ class MilestonesSpec extends SparkTestBase {
         .select(col("milestone"), col("event_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === Set((10L, 10L), (20L, 20L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

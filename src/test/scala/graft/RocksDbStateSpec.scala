@@ -11,21 +11,10 @@ import graft.streaming.Streaming
   */
 class RocksDbStateSpec extends SparkTestBase {
 
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("windowed aggregation and dedup results are backend-invariant") {
     val defaultAgg = Streaming.tumblingCounts(spark, Sf).collect().toSet
     val defaultDedup = Streaming.streamDedup(spark, Sf).collect().toSet
-    val (rocksAgg, rocksDedup) = withRocksDb {
+    val (rocksAgg, rocksDedup) = Sessions.withConf(spark, Streaming.StateStoreProvider -> Streaming.RocksDb) {
       (Streaming.tumblingCounts(spark, Sf).collect().toSet,
         Streaming.streamDedup(spark, Sf).collect().toSet)
     }

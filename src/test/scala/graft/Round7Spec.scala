@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
-import graft.streaming.Streaming
 
 /** Behavioral checks for the round-7 operators, each against an
   * INDEPENDENT recomputation (Scala-side simulation or an alternative
@@ -198,22 +197,6 @@ class Round7Spec extends SparkTestBase {
         expr("cast(round(o_totalprice * 100) as bigint)").as("cents"))
     assert(viaBloom.count() === plain.count())
     assert(viaBloom.exceptAll(plain).isEmpty && plain.exceptAll(viaBloom).isEmpty)
-  }
-
-  test("st10 full outer: matched subset equals st4's inner join; sentinels disjoint") {
-    val full = Streaming.streamStreamFullOuter(spark, Sf).collect()
-    val matched = full.filter(r => r.getLong(0) != -1L && r.getLong(1) != -1L)
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inner = Streaming.streamStreamJoin(spark, Sf)
-      .select(col("signup_id"), col("purchase_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(matched === inner, "full-outer matched rows must equal the inner join")
-    // No row may be null-extended on BOTH sides.
-    assert(!full.exists(r => r.getLong(0) == -1L && r.getLong(1) == -1L))
-    // Null-extended rows exist on each side in the fixture (signups that
-    // never converted; purchases with no preceding signup).
-    assert(full.exists(r => r.getLong(1) == -1L), "expected unmatched signups")
-    assert(full.exists(r => r.getLong(0) == -1L), "expected unmatched purchases")
   }
 
   test("m5 phash is perceptual: a one-pixel edit moves ≤ 2 bits, md5 moves entirely") {

@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Graph, LlmOps}
-import graft.streaming.Streaming
 
 /** Behavioral checks for the round-9 additions: the t27 pruned-broadcast
-  * bigram LM, the st13 TTL-state query, the events loader's schema-drift
-  * branch, and registerAll's per-table failure isolation.
+  * bigram LM, the events loader's schema-drift branch, and registerAll's
+  * per-table failure isolation.
   */
 class Round9Spec extends SparkTestBase {
   import spark.implicits._
@@ -42,16 +41,6 @@ class Round9Spec extends SparkTestBase {
     val topk = LlmOps.t27BigramTopk(spark, Sf, k = Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(topk === full)
-  }
-
-  test("st13: one Trigger.Once batch yields fresh-state per-user counts") {
-    val out = Streaming.st13TtlState(spark, Sf)
-    val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(rows.nonEmpty)
-    assert(rows.forall(!_._3), "fresh checkpoint: no key may report prior state")
-    val expected = Tables.events(spark, Sf).groupBy("user_id").count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(rows.map(r => r._1 -> r._2).toMap === expected)
   }
 
   test("events loader adapts to the ts physical type (ntz fixture and us fixture agree)") {

@@ -1,9 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, TimeMode}
 
-import graft.streaming.Streaming
+import graft.streaming.{Milestones, Streaming}
 
 /** Streaming results must equal their batch twins (the §2.9 contract:
   * AvailableNow + complete output ≡ batch over the same data).
@@ -105,5 +108,94 @@ class StreamingSpec extends SparkTestBase {
     val events = s"$Sf/events.parquet"
     assert(Streaming.pathBytes(spark, s"file:$events") > 0L)
     assert(Streaming.pathBytes(spark, s"file:$events") === Streaming.pathBytes(spark, events))
+  }
+
+  test("st10 full outer: matched subset equals st4's inner join; sentinels disjoint") {
+    val full = Streaming.streamStreamFullOuter(spark, Sf).collect()
+    val matched = full.filter(r => r.getLong(0) != -1L && r.getLong(1) != -1L)
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val inner = Streaming.streamStreamJoin(spark, Sf)
+      .select(col("signup_id"), col("purchase_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(matched === inner, "full-outer matched rows must equal the inner join")
+    // No row may be null-extended on BOTH sides.
+    assert(!full.exists(r => r.getLong(0) == -1L && r.getLong(1) == -1L))
+    // Null-extended rows exist on each side in the fixture (signups that
+    // never converted; purchases with no preceding signup).
+    assert(full.exists(r => r.getLong(1) == -1L), "expected unmatched signups")
+    assert(full.exists(r => r.getLong(0) == -1L), "expected unmatched purchases")
+  }
+
+
+  test("st13: one Trigger.Once batch yields fresh-state per-user counts") {
+    val out = Streaming.st13TtlState(spark, Sf)
+    val rows = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    assert(rows.nonEmpty)
+    assert(rows.forall(!_._3), "fresh checkpoint: no key may report prior state")
+    val expected = Tables.events(spark, Sf).groupBy("user_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(rows.map(r => r._1 -> r._2).toMap === expected)
+  }
+
+  /** `events` streamed from `dir` to the end through the runner, read
+    * back from a memory sink.
+    */
+  private def streamedEvents(dir: String, name: String): DataFrame = {
+    Streaming.run(spark, dir, "events", Streaming.events(spark, dir))(
+      _.format("memory").queryName(name).outputMode("append"))
+    spark.table(name)
+  }
+
+  test("the file source streams a single file and a multi-file directory with the batch rows") {
+    val batch = Tables.events(spark, Sf)
+    assertSameRows(streamedEvents(Sf, "src_single_file"), batch)
+    // The same rows as four files in an events.parquet directory, the
+    // layout files landing over time produce.
+    val dir = tempDir("stream_src_dir")
+    spark.read.parquet(s"$Sf/events.parquet").repartition(4)
+      .write.parquet(s"$dir/events.parquet")
+    assert(new java.io.File(s"$dir/events.parquet").list().count(_.endsWith(".parquet")) === 4)
+    assertSameRows(streamedEvents(dir, "src_file_dir"), batch)
+  }
+
+  test("the runner scopes partitions and state store to its run, also when a batch throws") {
+    val keys = Seq("spark.sql.shuffle.partitions", Streaming.StateStoreProvider)
+    def confs = keys.map(spark.conf.getAll.get)
+    val before = confs
+    val milestones = Streaming.transformOf(spark, Streaming.events(spark, Sf),
+      new Milestones.MilestoneProcessor, TimeMode.None())
+    var inside = Seq.empty[Option[String]]
+    Streaming.run(spark, Sf, "events", milestones)(_.outputMode("append")
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        inside = keys.map(b.sparkSession.conf.getOption)
+        b.count(); ()
+      })
+    // The sf0.001 corpus derives the floor of 4 state partitions.
+    assert(inside === Seq(Some("4"), Some(Streaming.RocksDb)))
+    assert(confs === before)
+    val failed = intercept[StreamingQueryException] {
+      Streaming.run(spark, Sf, "events", milestones)(_.outputMode("append")
+        .foreachBatch { (_: DataFrame, _: Long) => throw new IllegalStateException("batch failed") })
+    }
+    assert(failed.getCause.getMessage.contains("batch failed"), failed)
+    assert(confs === before)
+  }
+
+  test("st11 runs on the RocksDB state store while st1 and st5 keep the heap store") {
+    def stateMetrics(plan: DataFrame, mode: String): Set[String] =
+      Streaming.run(spark, Sf, "events", plan)(_.outputMode(mode)
+        .foreachBatch { (b: DataFrame, _: Long) => b.count(); () })
+        .recentProgress.flatMap(_.stateOperators).flatMap(_.customMetrics.keySet.asScala).toSet
+    val st1 = stateMetrics(Streaming.tumblingAgg(spark, Sf,
+      sum(expr("cast(round(value * 1000) as bigint)")).as("total_value_milli")), "complete")
+    val st5 = stateMetrics(Streaming.dedupKeys(spark, Sf), "append")
+    val st11 = stateMetrics(Streaming.transformOf(spark, Streaming.events(spark, Sf),
+      new Milestones.MilestoneProcessor, TimeMode.None()), "append")
+    def rocks(metrics: Set[String]) = metrics.exists(_.startsWith("rocksdb"))
+    assert(rocks(st11), st11)
+    for (heap <- Seq(st1, st5)) {
+      assert(heap.contains("loadedMapCacheHitCount"), heap)
+      assert(!rocks(heap), heap)
+    }
   }
 }

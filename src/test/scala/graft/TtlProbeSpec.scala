@@ -6,6 +6,8 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
+import graft.streaming.Streaming
+
 /** transformWithState TTL probe (SURVEY.md §7.5.4): state declared with a
   * TTLConfig must be GONE on a later run of the SAME checkpoint after the
   * TTL elapses, while a non-TTL state declared by the same processor
@@ -57,16 +59,10 @@ class TtlProbeSpec extends SparkTestBase {
       Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(mtime))
     }
 
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val parts = "spark.sql.shuffle.partitions"
-    val prevProvider = spark.conf.getOption(provider)
-    val prevParts = spark.conf.getOption(parts)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // State partition count is baked into the checkpoint at first run;
     // 2 keys need 2 partitions, not 32 RocksDB instances per batch.
-    spark.conf.set(parts, "2")
-    try {
+    Sessions.withConf(spark, Streaming.StateStoreProvider -> Streaming.RocksDb,
+      "spark.sql.shuffle.partitions" -> "2") {
       val outDir = tempDir("ttl_out")
       def runOnce(ttlMs: Long): Set[(Long, Boolean, Boolean)] = {
         val schema = spark.read.parquet(srcDir.toString).schema
@@ -110,15 +106,6 @@ class TtlProbeSpec extends SparkTestBase {
       // non-TTL one kept its value through the same checkpoint.
       assert(second === first ++ Set((1L, false, true), (2L, false, true)),
         s"expected ttl_seen=false / keep_seen=true after expiry, got ${second -- first}")
-    } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(provider, v)
-        case None => spark.conf.unset(provider)
-      }
-      prevParts match {
-        case Some(v) => spark.conf.set(parts, v)
-        case None => spark.conf.unset(parts)
-      }
     }
   }
 }
