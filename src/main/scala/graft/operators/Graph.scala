@@ -243,7 +243,8 @@ object Graph {
     * reads the same stored layout.
     */
   private def ensureEdgeIndex(spark: SparkSession, dir: String): String =
-    Scale.storedIndex(spark, "tri_idx", s"$TriFormatVersion|$dir", Seq("edges"))(
+    Scale.storedIndex(spark, "tri_idx", s"$TriFormatVersion|$dir",
+      Seq(Tables.path(dir, "lineitem")), Seq("edges"))(
       buildEdgeIndex(spark, dir, _))
 
   /** [[qTriangles]] over a [[buildEdgeIndex]] snapshot: ONLY the wedge
@@ -368,7 +369,8 @@ object Graph {
   /** The ingest snapshot's prefix, built on first use ([[Scale.storedIndex]]). */
   private[graft] def ensureTriIngestIndex(spark: SparkSession, dir: String): String =
     Scale.storedIndex(spark, "tri_ing", s"$TriFormatVersion|$dir",
-      Seq("edges", "adj", "deg", "stats"))(buildTriIngestIndex(spark, dir, _))
+      Seq(Tables.path(dir, "lineitem")), Seq("edges", "adj", "deg", "stats"))(
+      buildTriIngestIndex(spark, dir, _))
 
   /** Q_TRIANGLES_ADJ_INGEST: fold the batch orders' co-purchase edges
     * into the stored snapshot and emit the maintained totals — SAME

@@ -794,7 +794,8 @@ object LlmOps {
     */
   private[graft] def ensureCorpusIndex(spark: SparkSession, dir: String): String =
     Scale.storedIndex(spark, "d5b_idx", s"$BandFormatVersion|$dir!$BatchSource",
-      Seq("bands", "shingles"))(buildCorpusIndex(spark, dir, _))
+      Seq(Tables.path(dir, "documents")), Seq("bands", "shingles"))(
+      buildCorpusIndex(spark, dir, _))
 
   /** Stored band/signature FORMAT version, part of the corpus and label
     * index keys ([[ensureCorpusIndex]], [[ensureLabelIndex]]; the labels
@@ -1147,7 +1148,8 @@ object LlmOps {
                                       excludeSource: Option[String] = None): String =
     Scale.storedIndex(spark, "d7b_idx",
       s"$BandFormatVersion|$dir" + excludeSource.fold("")("!" + _),
-      Seq("labels"))(buildLabelIndex(spark, dir, _, excludeSource))
+      Seq(Tables.path(dir, "documents")), Seq("labels"))(
+      buildLabelIndex(spark, dir, _, excludeSource))
 
   /** D7b: [[d7DedupResolve]] read from the materialized label index —
     * the index path is a PURE optimization (same oracle as d7): first
@@ -1896,7 +1898,8 @@ object LlmOps {
                                      excludeSource: Option[String]): String =
     Scale.storedIndex(spark, "t29b_idx",
       s"$SpanFormatVersion|$dir" + excludeSource.fold("")("!" + _),
-      Seq("spans"))(buildSpanIndex(spark, dir, _, excludeSource))
+      Seq(Tables.path(dir, "documents")), Seq("spans"))(
+      buildSpanIndex(spark, dir, _, excludeSource))
 
   /** T29b: [[t29WinnowDups]] as an INGEST against the stored span index
     * (same oracle — the union of stored + batch fingerprints is exactly

@@ -34,13 +34,18 @@ object Scale {
 
   /** Build-if-absent gate shared by every stored index (the corpus band
     * index, the label, span, IVF and both triangle indexes): returns the
-    * index's table prefix `family + "_" + md5(key).take(8)` and runs
-    * `build(prefix)` first when any `<prefix>_<table>` is missing.
+    * index's table prefix `family + "_" + md5(key + stamps).take(8)` and
+    * runs `build(prefix)` first when any `<prefix>_<table>` is missing.
     *
     * Contract:
-    *  - Corpora are immutable snapshots: an index is built once per
-    *    snapshot and probed many times. A corpus mutated in place needs
-    *    the snapshot-refresh rebuild; nothing here detects it.
+    *  - An index is built once per snapshot of its inputs and probed
+    *    many times. `reads` names the input paths the build reads, and
+    *    the [[graft.Tables.Listing]] stamp of each (names, lengths and
+    *    modification times) is part of the name, so a corpus rewritten
+    *    under the same dir names a new index and rebuilds it instead of
+    *    being served the old one. The stamp costs one `FileSystem`
+    *    listing per input per call. Indexes of earlier snapshots stay in
+    *    the warehouse until the session's warehouse dir goes.
     *  - `key` holds the family's stored FORMAT version, the corpus dir
     *    and the excluded batch source if there is one. A format change
     *    bumps the version, so the gate sees a new name and rebuilds
@@ -54,10 +59,11 @@ object Scale {
     *    default parallelism: a bucketed table's scan and probe-join
     *    parallelism IS its bucket count (see [[Graph.buildEdgeIndex]]).
     */
-  def storedIndex(spark: SparkSession, family: String, key: String, tables: Seq[String])(
-      build: String => Unit): String = {
+  def storedIndex(spark: SparkSession, family: String, key: String, reads: Seq[String],
+                  tables: Seq[String])(build: String => Unit): String = {
+    val stamped = key + reads.map(p => "|" + graft.Tables.listing(spark, p).stamp).mkString
     val prefix = family + "_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      .digest(stamped.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     if (tables.exists(t => !spark.catalog.tableExists(s"${prefix}_$t"))) build(prefix)
     prefix
   }

@@ -213,7 +213,8 @@ object Similarity {
 
   /** The inverted lists' prefix, built on first use ([[Scale.storedIndex]]). */
   private[graft] def ensureIvfIndex(spark: SparkSession, dir: String): String =
-    Scale.storedIndex(spark, "ivf_idx", s"$IvfFormatVersion|$dir", Seq("lists"))(
+    Scale.storedIndex(spark, "ivf_idx", s"$IvfFormatVersion|$dir",
+      Seq(Tables.path(dir, "embeddings")), Seq("lists"))(
       buildIvfIndex(spark, dir, _))
 
   /** [[simIvfTopk]] over the stored inverted lists: per-query work is the

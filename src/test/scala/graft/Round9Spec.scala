@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Graph, LlmOps}
 
 /** Behavioral checks for the round-9 additions: the t27 pruned-broadcast
-  * bigram LM, the events loader's schema-drift branch, and registerAll's
-  * per-table failure isolation.
+  * bigram LM, the LSH band-skew guards and the 2-hop closure.
   */
 class Round9Spec extends SparkTestBase {
   import spark.implicits._
@@ -41,37 +40,6 @@ class Round9Spec extends SparkTestBase {
     val topk = LlmOps.t27BigramTopk(spark, Sf, k = Int.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(topk === full)
-  }
-
-  test("events loader adapts to the ts physical type (ntz fixture and us fixture agree)") {
-    val dir = tempDir("ts_drift")
-    // Write a timestamp column via Spark (TIMESTAMP, adjusted-to-UTC):
-    // exercises the passthrough/cast branches; the driver fixture
-    // (timestamp[us] NTZ) exercises the NTZ branch in every other test.
-    Seq((1L, java.sql.Timestamp.valueOf("2024-01-02 03:04:05"), 7L, "click", """{"a":1}"""))
-      .toDF("event_id", "ts", "user_id", "event_type", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val loaded = Tables.events(spark, dir)
-    assert(loaded.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
-    assert(loaded.count() === 1L)
-    val fixture = Tables.events(spark, Sf)
-    assert(fixture.schema("ts").dataType === org.apache.spark.sql.types.TimestampType)
-  }
-
-  test("registerAll isolates a broken table: the other nine views still work") {
-    val dir = tempDir("reg_isolate")
-    for (t <- Tables.All if t != "events")
-      Tables.load(spark, Sf, t).limit(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
-    // events.parquet exists but ts has an unadaptable type -> loader throws.
-    Seq((1L, "not-a-timestamp")).toDF("event_id", "ts")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    try {
-      Tables.registerAll(spark, dir)
-      assert(spark.sql("SELECT count(*) FROM region").collect().head.getLong(0) === 1L)
-      assert(spark.catalog.tableExists("nation"))
-      assert(!spark.catalog.tableExists("events"),
-        "a broken table must not leave a stale or half-registered view")
-    } finally Tables.registerAll(spark, Sf) // restore the shared-session views
   }
 
   test("LSH band-skew guard: an over-cap boilerplate cluster yields zero pairs, not |cluster|^2") {

@@ -60,11 +60,29 @@ class StoredIndexSpec extends SparkTestBase {
     // new index, and its missing table runs the build.
     var built = Seq.empty[String]
     def gate(version: String): String =
-      Scale.storedIndex(spark, "fmt_probe", s"$version|$Sf", Seq("t"))(p => built :+= p)
+      Scale.storedIndex(spark, "fmt_probe", s"$version|$Sf", Nil, Seq("t"))(p => built :+= p)
     val (v1, v2) = (gate("v1"), gate("v2"))
     assert(v1 !== v2)
     assert(Seq(v1, v2).forall(p => p.startsWith("fmt_probe_") && p.length === 18))
     assert(built === Seq(v1, v2))
+  }
+
+  test("a corpus rewritten under the same dir rebuilds its index") {
+    val dir = tempDir("index_rewrite")
+    val docs = spark.read.parquet(s"$Sf/documents.parquet")
+    docs.write.parquet(s"$dir/documents.parquet")
+    val before = LlmOps.ccRuns
+    val first = LlmOps.ensureLabelIndex(spark, dir)
+    assert(LlmOps.ensureLabelIndex(spark, dir) === first)
+    assert(LlmOps.ccRuns - before === 1)
+    // The same dir, new contents: one document fewer.
+    docs.filter(col("doc_id") =!= docs.agg(min("doc_id")).head.getLong(0))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val second = LlmOps.ensureLabelIndex(spark, dir)
+    assert(second !== first, "a rewritten corpus must name a new index")
+    assert(LlmOps.ccRuns - before === 2, "the rewritten corpus must build its labels")
+    assert(spark.table(s"${second}_labels").count() ===
+      spark.table(s"${first}_labels").count() - 1)
   }
 
   test("sim_ivf_idx: the stored inverted lists equal the full recompute") {

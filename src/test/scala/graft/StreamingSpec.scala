@@ -93,21 +93,25 @@ class StreamingSpec extends SparkTestBase {
     assert(Streaming.derivedStreamPartitions(spark, 6 * target + 1)
       === math.min(7, cap))
     assert(Streaming.derivedStreamPartitions(spark, 100000L * target) === cap)
-    // Input bytes come from the path's Hadoop FileSystem: a file: URI
-    // reads the same recursive size as the bare local path, and a
+    // Input bytes come from the path's Hadoop FileSystem listing: a file:
+    // URI reads the same recursive size as the bare local path, and a
     // missing path reads 0.
+    def bytes(p: String): Long = Tables.listing(spark, p).bytes
     val dir = tempDir("stream_bytes")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.bin"), new Array[Byte](1000))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "sub"))
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "sub", "b.bin"), new Array[Byte](234))
-    assert(Streaming.pathBytes(spark, dir) === 1234L)
-    assert(Streaming.pathBytes(spark, s"file:$dir") === 1234L)
-    assert(Streaming.pathBytes(spark, new java.io.File(dir).toURI.toString) === 1234L)
-    assert(Streaming.pathBytes(spark, s"file:$dir/a.bin") === 1000L)
-    assert(Streaming.pathBytes(spark, s"file:$dir/missing") === 0L)
+    assert(bytes(dir) === 1234L)
+    assert(bytes(s"file:$dir") === 1234L)
+    assert(bytes(new java.io.File(dir).toURI.toString) === 1234L)
+    assert(bytes(s"file:$dir/a.bin") === 1000L)
+    assert(bytes(s"file:$dir/missing") === 0L)
     val events = s"$Sf/events.parquet"
-    assert(Streaming.pathBytes(spark, s"file:$events") > 0L)
-    assert(Streaming.pathBytes(spark, s"file:$events") === Streaming.pathBytes(spark, events))
+    assert(bytes(s"file:$events") > 0L)
+    assert(bytes(s"file:$events") === bytes(events))
+    // The runner reads the listing the source's schema was read with.
+    Streaming.events(spark, Sf)
+    assert(Tables.lastListing(spark, events).bytes === bytes(events))
   }
 
   test("st10 full outer: matched subset equals st4's inner join; sentinels disjoint") {
@@ -159,26 +163,51 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("the runner scopes partitions and state store to its run, also when a batch throws") {
-    val keys = Seq("spark.sql.shuffle.partitions", Streaming.StateStoreProvider)
+    val keys = Seq("spark.sql.shuffle.partitions", Streaming.StateStoreProvider,
+      Streaming.Aqe, Streaming.NoDataBatches)
     def confs = keys.map(spark.conf.getAll.get)
     val before = confs
     val milestones = Streaming.transformOf(spark, Streaming.events(spark, Sf),
       new Milestones.MilestoneProcessor, TimeMode.None())
-    var inside = Seq.empty[Option[String]]
-    Streaming.run(spark, Sf, "events", milestones)(_.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        inside = keys.map(b.sparkSession.conf.getOption)
-        b.count(); ()
-      })
-    // The sf0.001 corpus derives the floor of 4 state partitions.
-    assert(inside === Seq(Some("4"), Some(Streaming.RocksDb)))
-    assert(confs === before)
-    val failed = intercept[StreamingQueryException] {
-      Streaming.run(spark, Sf, "events", milestones)(_.outputMode("append")
-        .foreachBatch { (_: DataFrame, _: Long) => throw new IllegalStateException("batch failed") })
+    def scopedIn(plan: DataFrame): Seq[Option[String]] = {
+      var inside = Seq.empty[Option[String]]
+      Streaming.run(spark, Sf, "events", plan)(_.outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          inside = keys.map(b.sparkSession.conf.getOption)
+          b.count(); ()
+        })
+      inside
     }
-    assert(failed.getCause.getMessage.contains("batch failed"), failed)
+    // The sf0.001 corpus derives the floor of 4 state partitions; a
+    // transformWithState plan keeps its no-data batches (the default).
+    assert(scopedIn(milestones) === Seq(Some("4"), Some(Streaming.RocksDb), Some("false"), Some("true")))
     assert(confs === before)
+    // st5's dedup evicts silently, so its run has no no-data batches.
+    assert(scopedIn(Streaming.dedupKeys(spark, Sf)).drop(2) === Seq(Some("false"), Some("false")))
+    assert(confs === before)
+    for (plan <- Seq(milestones, Streaming.dedupKeys(spark, Sf))) {
+      val failed = intercept[StreamingQueryException] {
+        Streaming.run(spark, Sf, "events", plan)(_.outputMode("append")
+          .foreachBatch { (_: DataFrame, _: Long) => throw new IllegalStateException("batch failed") })
+      }
+      assert(failed.getCause.getMessage.contains("batch failed"), failed)
+      assert(confs === before)
+    }
+  }
+
+  test("only plans whose state eviction emits run a trailing no-data batch") {
+    def batches(plan: DataFrame): Int =
+      Streaming.run(spark, Sf, "events", plan)(_.outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) => b.count(); () })
+        .recentProgress.map(_.batchId).distinct.length
+    // st4's inner join and st5's dedup: the data batch only.
+    assert(batches(Streaming.signupsJoin(spark, Sf, "inner")) === 1)
+    assert(batches(Streaming.dedupKeys(spark, Sf)) === 1)
+    // st7 and st10 emit unmatched rows, st12 fires its timers, in the
+    // trailing batch.
+    for (outer <- Seq("leftOuter", "fullOuter"))
+      assert(batches(Streaming.signupsJoin(spark, Sf, outer)) === 2, outer)
+    assert(batches(Streaming.inactivityOf(spark, Sf)) === 2)
   }
 
   test("st11 runs on the RocksDB state store while st1 and st5 keep the heap store") {
